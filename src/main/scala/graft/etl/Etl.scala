@@ -524,20 +524,24 @@ object Etl {
 
   // ---- reusable building blocks (used by streaming + tests) ----
 
-  /** Generic snapshot upsert: rows of `incoming` whose key is absent from
-    * `existing`, appended to `existing`. Idempotent: applying the same
-    * incoming twice yields the same result. The key side is renamed before
-    * the anti-join so chained upserts (existing derived from incoming)
-    * don't trip Spark's self-join attribute ambiguity. */
-  def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
+  /** Rows of `incoming` whose key is absent from `existing`: the rows an
+    * insert-if-absent (ON CONFLICT DO NOTHING) adds. A left-anti join
+    * against the distinct existing keys, matched null-safely: a NULL key
+    * (e.g. a failed to_date parse) must still match its stored copy, or
+    * re-runs would re-append it forever and break idempotence. The key
+    * side is renamed before the join so chained upserts (existing derived
+    * from incoming) don't trip Spark's self-join attribute ambiguity. */
+  def newRows(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
     val exKeys = existing.select(keys.map(col): _*).distinct()
       .toDF(keys.map(k => s"__ex_$k"): _*)
-    // Null-safe <=>: a NULL key (e.g. a failed to_date parse) must still
-    // match its stored copy, or re-runs would re-append it forever and
-    // break the idempotence contract.
     val cond = keys.map(k => incoming(k) <=> exKeys(s"__ex_$k")).reduce(_ && _)
-    existing.unionByName(incoming.join(exKeys, cond, "left_anti"))
+    incoming.join(exKeys, cond, "left_anti")
   }
+
+  /** Generic snapshot upsert: `existing` plus the `newRows` of `incoming`.
+    * Idempotent: applying the same incoming twice yields the same result. */
+  def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
+    existing.unionByName(newRows(existing, incoming, keys))
 
   /** MERGE-style upsert (UPDATE matched + INSERT unmatched in one pass):
     * every data column of a matched key takes the update row's value;

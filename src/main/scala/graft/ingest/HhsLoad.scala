@@ -1,8 +1,8 @@
 package graft.ingest
 
 import graft.etl.Etl
+import graft.model.StoreInsert
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,6 +22,10 @@ import org.apache.spark.sql.types._
   * - FK resolution is an explicit natural-key join, not the fragile
   *   positional zip of helper_load_hhs.py:139,154-156.
   * Re-running a load is a no-op (the ON CONFLICT DO NOTHING invariant).
+  * The three inserts go through [[StoreInsert]]: only new rows are
+  * written, and nothing is published unless all three tables staged. A
+  * crash mid-publish leaves a subset of the new rows in the store
+  * (parents before children); re-running the load completes it.
   */
 object HhsLoad {
 
@@ -108,7 +112,8 @@ object HhsLoad {
       .withColumn("location_id", Etl.surrogateKey(LocKey.map(col): _*))
   }
 
-  /** One load = three upserts, mirroring load-hhs.py:21-28's transaction. */
+  /** One load = three inserts-if-absent, mirroring load-hhs.py:21-28's
+    * transaction; returns each table's total row count. */
   def load(spark: SparkSession, csvPath: String, storeDir: String): Map[String, Long] = {
     val raw = readRaw(spark, csvPath)
     val prepped = prepData(raw).localCheckpoint() // one materialization, three consumers
@@ -134,21 +139,9 @@ object HhsLoad {
       col("hospital_pk").as("hospital_weekly_id") +: col("collection_week") +:
         MetricCols.map(col): _*)
 
-    def upsertDir(name: String, batch: DataFrame, keys: Seq[String]): Long = {
-      val dir = s"$storeDir/$name"
-      val exists = new java.io.File(dir).exists()
-      val merged = if (exists) Etl.upsert(spark.read.parquet(dir), batch, keys) else batch
-      val tmp = dir + ".next"
-      merged.write.mode("overwrite").parquet(tmp)
-      val out = spark.read.parquet(tmp)
-      out.write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir).count()
-    }
-
-    Map(
-      "location" -> upsertDir("location", location, Seq("location_id")),
-      "hospital" -> upsertDir("hospital", hospital, Seq("hospital_pk")),
-      "weekly_report" -> upsertDir("weekly_report", weekly,
-        Seq("hospital_weekly_id", "collection_week")))
+    StoreInsert(storeDir, Seq(
+      StoreInsert.Batch("location", location, Seq("location_id")),
+      StoreInsert.Batch("hospital", hospital, Seq("hospital_pk")),
+      StoreInsert.Batch("weekly_report", weekly, Seq("hospital_weekly_id", "collection_week"))))
   }
 }

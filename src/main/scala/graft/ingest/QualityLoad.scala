@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.etl.Etl
+import graft.model.StoreInsert
 import graft.Parity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,9 +12,12 @@ import org.apache.spark.sql.types._
   * ('Not Available' / non-digit / out-of-[1,5] → NULL, quality:158-174),
   * the V2 boolean parse (case-insensitive 'yes', NULL→false,
   * quality:177-189), and insert-if-absent upserts for hospital and the
-  * (facility_id, rating_date) quality fact. The reference's 1,000-row
-  * micro-batching (quality:25,62-77) disappears — Spark's partitioned
-  * execution is the batching.
+  * (facility_id, rating_date) quality fact, through [[StoreInsert]]: only
+  * new rows are written, and nothing is published unless both tables
+  * staged. A crash mid-publish leaves a subset of the new rows in the
+  * store (hospital before quality); re-running the load completes it.
+  * The reference's 1,000-row micro-batching (quality:25,62-77)
+  * disappears — Spark's partitioned execution is the batching.
   */
 object QualityLoad {
 
@@ -47,31 +51,23 @@ object QualityLoad {
       lit(ratingDate).as("rating_date"))
   }
 
-  /** One load: upsert hospitals (insert-if-absent on facility_id,
-    * quality:139-147) and quality facts (on (facility_id, rating_date),
-    * quality:149-155). */
   /** Name-based projection (the CMS CSV is wide; an explicit schema would
     * map positionally and misread it — see HhsLoad.readRaw). */
   def readRaw(spark: SparkSession, csvPath: String): DataFrame =
     spark.read.option("header", true).csv(csvPath)
       .select(rawSchema.fieldNames.map(col).toSeq: _*)
 
+  /** One load: upsert hospitals (insert-if-absent on facility_id,
+    * quality:139-147) and quality facts (on (facility_id, rating_date),
+    * quality:149-155); returns each table's total row count. */
   def load(spark: SparkSession, csvPath: String, ratingDate: java.sql.Date,
       storeDir: String): Map[String, Long] = {
     val raw = readRaw(spark, csvPath)
     val batch = processBatch(raw, ratingDate)
       .localCheckpoint()
 
-    def upsertDir(name: String, rows: DataFrame, keys: Seq[String]): Long = {
-      val dir = s"$storeDir/$name"
-      val exists = new java.io.File(dir).exists()
-      val deduped = Etl.dedupFirst(rows, keys, rows.columns.map(col(_).asc_nulls_last))
-      val merged = if (exists) Etl.upsert(spark.read.parquet(dir), deduped, keys) else deduped
-      val tmp = dir + ".next"
-      merged.write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir).count()
-    }
+    def deduped(table: String, rows: DataFrame, keys: Seq[String]) = StoreInsert.Batch(table,
+      Etl.dedupFirst(rows, keys, rows.columns.map(col(_).asc_nulls_last)), keys)
 
     // hospital insert resolves location via the D8 pick-first lookup on
     // (city, state, zip) against the shared location table, exactly
@@ -94,12 +90,12 @@ object QualityLoad {
       resolved.select(col("hospital_pk"), col("hospital_name"), col("location_id"))
     }
 
-    Map(
-      "hospital" -> upsertDir("hospital", hospitalRows, Seq("hospital_pk")),
-      "hospital_quality" -> upsertDir("hospital_quality",
+    StoreInsert(storeDir, Seq(
+      deduped("hospital", hospitalRows, Seq("hospital_pk")),
+      deduped("hospital_quality",
         batch.select(col("facility_id"), col("quality_rating"), col("rating_date"),
           col("hospital_ownership").as("ownership"), col("hospital_type"),
           col("provides_emergency_services")),
-        Seq("facility_id", "rating_date")))
+        Seq("facility_id", "rating_date"))))
   }
 }

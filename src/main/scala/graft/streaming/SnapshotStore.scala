@@ -12,9 +12,8 @@ import org.apache.spark.sql.functions.col
   * mid-commit leaves the previous snapshot live and an unreferenced
   * directory to garbage-collect, never a half-written store (the batch
   * analog of the reference's single-transaction commit,
-  * load-hhs.py:28-33). The round-4 overwrite-in-place + `.next` staging
-  * dir is gone: history retention replaces both hazards, and
-  * `VersionedStore.compact` bounds file counts for trickle feeds. */
+  * load-hhs.py:28-33). `VersionedStore.compact` bounds file counts for
+  * trickle feeds. */
 object SnapshotStore {
 
   /** Apply `combine(existing, batch-aligned-to-existing-columns)` when a
