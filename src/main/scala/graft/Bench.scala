@@ -251,16 +251,7 @@ object Bench {
       benchOutOverride: Option[String] = None, quiet: Boolean = false,
       repsOverride: Option[Int] = None): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cores)
     // Calibrate FIRST, on a fresh JVM/session — before any query state
     // accretes (each lane child calibrates itself; see calibrationLine).
     val calLine =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Rounds-to-convergence probe for the converged graph tiers
   * (`runMain graft.ConvergeProbe [factors]`, default `1,10`) — the
   * round-11 companion measurement to [[ScaleProbe]]'s wall-clock rows.
@@ -23,14 +21,7 @@ object ConvergeProbe {
   def main(args: Array[String]): Unit = {
     val factors = args.headOption.map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 10)).distinct
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.cores)
     val base = "/root/testdata/sf0.1"
     factors.foreach { f =>
       val dir = s"/tmp/graft-scale-$f"

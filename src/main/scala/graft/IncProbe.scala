@@ -54,14 +54,7 @@ object IncProbe {
     val only = args.lift(1).map(_.split(",").toSet)
     def section(name: String)(body: => Unit): Unit =
       if (only.forall(_.contains(name))) body
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.cores)
     import spark.implicits._
     val base = "/root/testdata/sf0.1"
     val factors = Seq(1, 4, maxFactor).distinct

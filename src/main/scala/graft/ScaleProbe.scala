@@ -152,15 +152,7 @@ object ScaleProbe {
     // SPARK_GRAFT_CPUS (the Bench knob) also works here — a local[16]
     // vs local[32] probe at a FIXED factor separates shuffle-saturation
     // effects from genuine work growth (the r12 x149 diagnosis).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.cores)
     // Expected output shapes over the scaled corpora (what SCALING.md's
     // "rows" column should do as the factor grows):
     //  - linear: x1, x9, x2, x3, x23, x16, x4, x15, w5, j2, x35, x31,

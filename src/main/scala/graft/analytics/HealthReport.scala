@@ -28,7 +28,7 @@ final class HealthReport private (
 
   /** Store-directory form (the fixture-ingest path the specs drive). */
   def this(spark: SparkSession, storeDir: String, asOf: java.sql.Date) =
-    this(spark, HealthReport.storeReader(spark, storeDir), asOf)
+    this(spark, graft.model.StoreSchemas.read(spark, storeDir, _), asOf)
 
   private def t(name: String): DataFrame = tables(name)
 
@@ -176,13 +176,4 @@ object HealthReport {
   def onTables(spark: SparkSession, tables: Map[String, DataFrame],
       asOf: java.sql.Date): HealthReport =
     new HealthReport(spark, tables(_), asOf)
-
-  /** Missing table → empty table with the DDL schema, mirroring the
-    * reference where CREATE TABLE pre-exists every query. */
-  private def storeReader(spark: SparkSession, storeDir: String): String => DataFrame =
-    name =>
-      if (new java.io.File(s"$storeDir/$name").exists())
-        spark.read.parquet(s"$storeDir/$name")
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.model.StoreSchemas.byName(name))
 }

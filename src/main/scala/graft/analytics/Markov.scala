@@ -82,7 +82,6 @@ object Markov {
     "x75_top_paths",
     s"x75: top-$PathK 3-event user paths (sequence mining over ordered event types)",
     pathsOracle) { (s, dir) =>
-    graft.functions.ShingleStr3.register(s)
     val paths = Tables.events(s, dir)
       .select(col("user_id"),
         struct(unix_micros(col("ts")).as("us"), col("event_id").as("eid"),

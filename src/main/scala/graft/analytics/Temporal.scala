@@ -252,7 +252,6 @@ object Temporal {
       |SELECT o_orderpriority, o_orderkey, o_totalprice
       |FROM ranked WHERE rn <= 3
       |ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey""".stripMargin) { (s, dir) =>
-    graft.plans.TopKPerKey.register(s)
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
     graft.plans.TopKPerKey

@@ -72,7 +72,6 @@ object Bloom {
   /** (doc_id, g, hi, lo): distinct 3-gram shingles with md5 lanes —
     * the portable hash basis shared with x2's MinHash family. */
   private def gramLanes(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleStr3.register(docs.sparkSession)
     docs.select(col("doc_id"),
         explode(graft.functions.ShingleStr3.shingleStr3(split(col("text"), " "))).as("g"))
       .distinct()

@@ -83,7 +83,6 @@ object Corpus {
       |QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
       |  ORDER BY rrf DESC, doc_id) <= 5
       |ORDER BY query_id, rrf DESC, doc_id""".stripMargin) { (s, dir) =>
-    graft.plans.TopKPerKey.register(s)
     val docs = Tables.documents(s, dir)
     val qt = s.createDataFrame(Search.QueryTerms).toDF("query_id", "term")
     val tk = docs.select(col("doc_id"), explode(toks(col("text"))).as("term"))

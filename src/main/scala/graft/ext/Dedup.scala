@@ -62,7 +62,6 @@ object Dedup {
     * self-join's shuffle row width. Collision odds over the ~10^5
     * distinct shingles here are ~10^-10. */
   private[graft] def shingleHashes(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleHash3.register(docs.sparkSession)
     docs.select(col("doc_id"),
       explode(graft.functions.ShingleHash3.shingleHash3(split(col("text"), " "))).as("g"))
       .distinct()
@@ -98,7 +97,6 @@ object Dedup {
     * runs in tight whole-stage codegen over unsafe rows. The shuffle it
     * avoids is the cheap part. */
   private[graft] def signatures(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleStr3.register(docs.sparkSession)
     // ONE md5 per shingle, parsed once into (hi, lo) LONG lanes; the 32
     // per-seed mins are then pure integer arithmetic in a single
     // map-side-combined aggregation. min(long) keeps the pass in
@@ -785,7 +783,6 @@ object Dedup {
       |  CAST(COALESCE(per.n, 0) AS DOUBLE) / len(string_split(d.text, ' ')) AS rep_frac
       |FROM documents d LEFT JOIN per USING (doc_id)
       |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-    graft.functions.ShingleStr3.register(s)
     val docs = Tables.documents(s, dir)
     // Position-bearing grams: the native expression returns the gram
     // array in token order, so posexplode's index IS the span start

@@ -374,7 +374,6 @@ object Ivf {
     * the raw md5 seed on identical plumbing. */
   private[graft] def ivfTopK(s: SparkSession, dir: String, lloydIters: Int,
       nProbe: Int = NProbe): DataFrame = {
-    CosineSimilarity.register(s)
     val e = Tables.embeddings(s, dir)
     val vq = quantized(e)
     val vd = e.select(col("vec_id"),

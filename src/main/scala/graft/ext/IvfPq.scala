@@ -37,9 +37,6 @@ object IvfPq {
   /** The pipeline, parameterized on nProbe for the spec's exhaustiveness
     * anchor (nProbe = [[Ivf.K]] probes every cell → must equal x50). */
   private[graft] def ivfPqTopK(e: DataFrame, nProbe: Int = NProbe): DataFrame = {
-    val s = e.sparkSession
-    graft.plans.TopKPerKey.register(s)
-    graft.functions.CosineSimilarity.register(s)
     val vqn = Ivf.quantized(Pq.normalized(e)).localCheckpoint()
     // level 1: coarse cells (x12's quantizer on the normalized basis,
     // literal-centroid tier — K=10 is driver-bounded metadata)

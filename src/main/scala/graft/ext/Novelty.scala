@@ -52,7 +52,6 @@ object Novelty {
     "x71_gram_novelty",
     "x71: per-doc fraction of distinct 3-grams it introduced (lowest doc_id owns)",
     novelOracle) { (s, dir) =>
-    graft.functions.ShingleStr3.register(s)
     val docs = Tables.documents(s, dir)
     val ge = docs.select(col("doc_id"),
         explode(graft.functions.ShingleStr3.shingleStr3(split(col("text"), " "))).as("g"))
@@ -103,7 +102,6 @@ object Novelty {
     "x72_source_overlap",
     "x72: cross-source distinct-3-gram overlap matrix (shared counts + Jaccard)",
     overlapOracle) { (s, dir) =>
-    graft.functions.ShingleStr3.register(s)
     val gs = Tables.documents(s, dir)
       .select(col("source"),
         explode(graft.functions.ShingleStr3.shingleStr3(split(col("text"), " "))).as("g"))

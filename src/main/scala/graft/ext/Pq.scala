@@ -233,9 +233,6 @@ object Pq {
     * any N — the same custom plan t6 rides) → exact cosine re-rank of
     * the shortlist only. */
   private[graft] def pqTopK(e: DataFrame, reRank: Int = ReRank): DataFrame = {
-    val s = e.sparkSession
-    graft.plans.TopKPerKey.register(s)
-    graft.functions.CosineSimilarity.register(s)
     val vq = Ivf.quantized(normalized(e))
     val subv = subvectors(vq).localCheckpoint() // read by train + encode + LUT
     val books = trainBooks(vq, subv)

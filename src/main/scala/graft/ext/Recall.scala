@@ -171,7 +171,6 @@ object Recall {
        |GROUP BY d.m, e.query_id
        |ORDER BY dim, e.query_id""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(s)
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("vd"))
     val perDim = MrlDims.map { m =>

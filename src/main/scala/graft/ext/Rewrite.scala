@@ -191,7 +191,6 @@ object Rewrite {
     "x43b_span_dedup_rewrite",
     "x43b: drop positions covered by non-first occurrences of cross-doc repeated 3-grams (sliding-span ExactSubstr rewrite)",
     spanDedupOracle) { (s, dir) =>
-    graft.functions.ShingleStr3.register(s)
     spanPipeline(Tables.documents(s, dir))
   }
 

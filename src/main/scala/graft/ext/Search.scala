@@ -84,7 +84,6 @@ object Search {
       |QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
       |  ORDER BY score DESC, doc_id) <= 5
       |ORDER BY query_id, score DESC, doc_id""".stripMargin) { (s, dir) =>
-    graft.plans.TopKPerKey.register(s)
     val docs = Tables.documents(s, dir)
     val qt = s.createDataFrame(QueryTerms).toDF("query_id", "term")
     val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
@@ -149,7 +148,6 @@ object Search {
        |SELECT doc_id, n_occurrences
        |FROM occ WHERE n_occurrences > 0
        |ORDER BY n_occurrences DESC, doc_id LIMIT 20""".stripMargin) { (s, dir) =>
-    graft.functions.PhraseCount.register(s)
     val occ = Tables.documents(s, dir)
       .select(col("doc_id"),
         graft.functions.PhraseCount.phraseCount(

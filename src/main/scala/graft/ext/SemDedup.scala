@@ -161,7 +161,6 @@ object SemDedup {
     * them at equal K). */
   private[graft] def pipelineFrom(e: org.apache.spark.sql.DataFrame,
       probed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
     // Home cell = the first probe — identical to x12's packed argmin
     // (min dist, ties to the lower cell).
     val cells = probed.filter(col("r") === 1).select(col("vec_id"), col("cell"))

@@ -1,7 +1,8 @@
 package graft.ext
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.CosineSimilarity.cosineSim
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,15 +34,6 @@ object Similarity {
     * (bucket occupancy ~ N/2^b) and keep L for recall. */
   val NumTables = 4
   val BitsPerTable = 4
-
-  /** Vector as doubles + its L2 norm, computed once. */
-  /** Cosine between double vectors — the native codegen'd expression
-    * (CosineExprSpec proves it bit-equal to the composed
-    * zip_with/aggregate fold, so the x5 oracle stays exact). */
-  private def cosine(s: SparkSession, a: Column, b: Column): Column = {
-    graft.functions.CosineSimilarity.register(s)
-    graft.functions.CosineSimilarity.cosineSim(a, b)
-  }
 
   /** x5: exact brute-force cosine top-k for a fixed query set. */
   val bruteForceKnn = Q.withOracle(
@@ -75,7 +67,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
     n.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosine(s, col("qv"), col("nv")))
+      .withColumn("cos", cosineSim(col("qv"), col("nv")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
@@ -101,7 +93,6 @@ object Similarity {
     * projection select was oracle-exact too but fell out of whole-stage
     * codegen's method budget (measured 0.69s → 2.5s at sf0.1). */
   private[ext] def bucketed(e: DataFrame): DataFrame = {
-    graft.functions.SignBuckets.register(e.sparkSession)
     e.select(col("vec_id"),
       posexplode(graft.functions.SignBuckets.signBuckets(col("embedding")))
         .as(Seq("tbl", "bucket")))
@@ -215,7 +206,7 @@ object Similarity {
       val n = v.select(col("vec_id").as("neighbor_id"), col("vd").as("nv"))
       val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
       cand.join(n, "neighbor_id").join(broadcast(q), "query_id")
-        .withColumn("cos", cosine(s, col("qv"), col("nv")))
+        .withColumn("cos", cosineSim(col("qv"), col("nv")))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= TopK)
         .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
@@ -251,7 +242,7 @@ object Similarity {
     val a = v.select(col("vec_id").as("keep_id"), col("vd").as("va"))
     val b = v.select(col("vec_id").as("dup_id"), col("vd").as("vb"))
     a.join(b, col("keep_id") < col("dup_id"))
-      .withColumn("cos", cosine(s, col("va"), col("vb")))
+      .withColumn("cos", cosineSim(col("va"), col("vb")))
       .filter(col("cos") >= 0.3)
       .select(col("keep_id"), col("dup_id"), col("cos"))
       .orderBy(col("keep_id"), col("dup_id"))
@@ -313,7 +304,7 @@ object Similarity {
     cand
       .join(v.select(col("vec_id").as("keep_id"), col("vd").as("va")), "keep_id")
       .join(v.select(col("vec_id").as("dup_id"), col("vd").as("vb")), "dup_id")
-      .withColumn("cos", cosine(s, col("va"), col("vb")))
+      .withColumn("cos", cosineSim(col("va"), col("vb")))
       .filter(col("cos") >= 0.3)
       .select(col("keep_id"), col("dup_id"), col("cos"))
       .orderBy(col("keep_id"), col("dup_id"))
@@ -330,11 +321,10 @@ object Similarity {
     * constant, which is what makes the op linear rather than
     * quadratic-within-buckets. Projections are composed Column sums off
     * the same md5 ±1 weight matrix as the native `sign_buckets`
-    * expression (the native op is fixed at the registered 4×4 config;
+    * expression (the native op is fixed at its 4×4 config;
     * plane count here is dynamic). */
   def lshDedupScaled(e: DataFrame, bitsPerTable: Int,
       numTables: Int = NumTables, threshold: Double = 0.3): DataFrame = {
-    val s = e.sparkSession
     val vd = e.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("vd"))
     def proj(p: Int): Column =
@@ -359,7 +349,7 @@ object Similarity {
     cand
       .join(vd.select(col("vec_id").as("keep_id"), col("vd").as("va")), "keep_id")
       .join(vd.select(col("vec_id").as("dup_id"), col("vd").as("vb")), "dup_id")
-      .withColumn("cos", cosine(s, col("va"), col("vb")))
+      .withColumn("cos", cosineSim(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select(col("keep_id"), col("dup_id"), col("cos"))
   }
@@ -477,7 +467,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     n.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", cosine(s, col("qv"), col("nv")))
+      .withColumn("cos", cosineSim(col("qv"), col("nv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TopK)
       .groupBy(col("query_id"), col("qlabel"))

@@ -70,7 +70,6 @@ object Winnowing {
        |JOIN cnt cb ON cb.doc_id = pr.doc_b
        |WHERE pr.shared >= $MinShared
        |ORDER BY pr.shared DESC, pr.doc_a, pr.doc_b LIMIT $TopK""".stripMargin) { (s, dir) =>
-    graft.functions.Winnow3.register(s)
     val docs = Tables.documents(s, dir)
     val fp = docs.select(col("doc_id"),
         explode(graft.functions.Winnow3.winnow3(
@@ -103,7 +102,6 @@ object Winnowing {
     * pressure, not candidate growth. */
   def candidateStats(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.Winnow3.register(s)
     val fp = Tables.documents(s, dir).select(col("doc_id"),
         explode(graft.functions.Winnow3.winnow3(
           split(col("text"), " "), lit(W))).as("fp"))

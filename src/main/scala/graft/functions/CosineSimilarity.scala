@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.sql.SparkSessionExtensions
 
@@ -97,23 +96,25 @@ object CosineSimilarity {
   private val builder: Seq[Expression] => Expression =
     exprs => CosineSimilarity(exprs(0), exprs(1))
 
-  /** Session-scoped registration (idempotent); enables both
-    * `spark.sql("... cosine_sim(a, b) ...")` and the Column builder. */
+  /** Session-scoped registration (idempotent) for the SQL route,
+    * `spark.sql("... cosine_sim(a, b) ...")`; [[cosineSim]] needs none. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** Column-API entry point (requires register() on the session). */
-  def cosineSim(a: Column, b: Column): Column = call_function(name, a, b)
+  /** Column-API entry point. */
+  def cosineSim(a: Column, b: Column): Column = GraftSqlShim.column(a, b)(builder)
 }
 
 /** `SparkSessionExtensions` wiring — load with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` to get the
-  * function, the TopKPerKey planner strategy, and the rank-limit
-  * optimizer rewrite ([[graft.plans.TopKPerKeyRewrite]]) in every
-  * session without explicit register() calls. The rule and the
-  * strategy travel together BY CONSTRUCTION: a session that can plant
-  * the logical node can always plan it. */
+  * `spark.sql.extensions=graft.functions.GraftExtensions` to get the SQL
+  * `cosine_sim` function, the TopKPerKey planner strategy, and the
+  * rank-limit optimizer rewrite ([[graft.plans.TopKPerKeyRewrite]]) in
+  * every session without explicit register() calls. The Column entry
+  * points need none of it, and [[graft.plans.TopKPerKey.topKPerKey]]
+  * installs its strategy itself. The rule and the strategy travel
+  * together BY CONSTRUCTION: a session that can plant the logical node
+  * can always plan it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -72,12 +71,6 @@ object PhraseCount {
     cnt
   }
 
-  val name = "phrase_count"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PhraseCount(exprs.head, exprs(1)), "built-in")
-
   def phraseCount(tokens: Column, phrase: Column): Column =
-    call_function(name, tokens, phrase)
+    GraftSqlShim.column(tokens, phrase)(e => PhraseCount(e(0), e(1)))
 }

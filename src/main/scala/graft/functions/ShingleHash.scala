@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,13 +93,8 @@ object ShingleStr3 {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  val name = "shingle_str3"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleStr3(exprs.head), "built-in")
-
-  def shingleStr3(tokens: Column): Column = call_function(name, tokens)
+  def shingleStr3(tokens: Column): Column =
+    GraftSqlShim.column(tokens)(e => ShingleStr3(e.head))
 }
 
 object ShingleHash3 {
@@ -125,12 +119,6 @@ object ShingleHash3 {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  val name = "shingle_hash3"
-
-  /** Idempotent session registration, mirroring CosineSimilarity. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHash3(exprs.head), "built-in")
-
-  def shingleHash3(tokens: Column): Column = call_function(name, tokens)
+  def shingleHash3(tokens: Column): Column =
+    GraftSqlShim.column(tokens)(e => ShingleHash3(e.head))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** Native expression computing x6's random-hyperplane LSH sign buckets
@@ -51,8 +50,6 @@ case class SignBuckets(child: Expression) extends UnaryExpression {
 }
 
 object SignBuckets {
-  val name = "sign_buckets"
-
   val NumTables = 4
   val BitsPerTable = 4
   val Dim = 64
@@ -102,14 +99,6 @@ object SignBuckets {
     new GenericArrayData(out)
   }
 
-  private val builder: Seq[Expression] => Expression =
-    exprs => SignBuckets(exprs(0))
-
-  /** Session-scoped registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
-  /** Column-API entry point (requires register() on the session). */
-  def signBuckets(a: Column): Column = call_function(name, a)
+  /** Column-API entry point. */
+  def signBuckets(a: Column): Column = GraftSqlShim.column(a)(e => SignBuckets(e.head))
 }

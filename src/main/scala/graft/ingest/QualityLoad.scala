@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.etl.Etl
-import graft.model.StoreInsert
+import graft.model.{StoreInsert, StoreSchemas}
 import graft.Parity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -71,23 +71,21 @@ object QualityLoad {
 
     // hospital insert resolves location via the D8 pick-first lookup on
     // (city, state, zip) against the shared location table, exactly
-    // quality:141-145's correlated `ORDER BY id LIMIT 1` subquery
-    val locDir = new java.io.File(s"$storeDir/location")
+    // quality:141-145's correlated `ORDER BY id LIMIT 1` subquery; a store
+    // without locations leaves every location_id NULL
     val hospitalRows = {
-      val base = batch.select(col("facility_id").as("hospital_pk"),
-        col("facility_name").as("hospital_name"),
-        col("city"), col("state"), col("zip_code"))
-      val resolved = if (locDir.exists()) {
-        val loc = spark.read.parquet(s"$storeDir/location")
-          .select(col("city").as("__c"), col("state").as("__s"),
-            col("zip_code").as("__z"), col("location_id"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("hospital_pk")).orderBy(col("location_id").asc_nulls_last)
-        base.join(loc, col("city") <=> col("__c") && col("state") <=> col("__s") &&
-            col("zip_code") <=> col("__z"), "left")
-          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      } else base.withColumn("location_id", lit(null).cast("long"))
-      resolved.select(col("hospital_pk"), col("hospital_name"), col("location_id"))
+      val loc = StoreSchemas.read(spark, storeDir, "location")
+        .select(col("city").as("__c"), col("state").as("__s"),
+          col("zip_code").as("__z"), col("location_id"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("hospital_pk"))
+        .orderBy(col("location_id").asc_nulls_last, col("hospital_name").asc_nulls_last)
+      batch.select(col("facility_id").as("hospital_pk"),
+          col("facility_name").as("hospital_name"),
+          col("city"), col("state"), col("zip_code"))
+        .join(loc, col("city") <=> col("__c") && col("state") <=> col("__s") &&
+          col("zip_code") <=> col("__z"), "left")
+        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+        .select(col("hospital_pk"), col("hospital_name"), col("location_id"))
     }
 
     StoreInsert(storeDir, Seq(

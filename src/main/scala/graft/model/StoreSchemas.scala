@@ -1,6 +1,8 @@
 package graft.model
 
 import graft.ingest.HhsLoad
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** The reference DDL (Phase1_updated.ipynb cells 4/7/10/13) as Spark
@@ -42,4 +44,15 @@ object StoreSchemas {
     "hospital" -> hospital,
     "hospital_quality" -> hospitalQuality,
     "weekly_report" -> weeklyReport)
+
+  /** Store table `name` under `storeDir`; a table the store lacks reads as
+    * an empty table with its DDL schema, as in the reference, where
+    * CREATE TABLE precedes every query. Existence is asked of the store's
+    * Hadoop FileSystem, so URI stores (`file://…`) behave like paths. */
+  def read(spark: SparkSession, storeDir: String, name: String): DataFrame = {
+    val dir = new Path(storeDir, name)
+    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+      spark.read.parquet(dir.toString)
+    else spark.createDataFrame(java.util.List.of[Row](), byName(name))
+  }
 }

@@ -76,7 +76,9 @@ object TopKPerKey {
 
   /** Column-API entry point: `topKPerKey(df, keys, orderBy, k)`.
     * Key/order expressions are resolved against the input's analyzed
-    * output, so the plan drops into the tree fully resolved. */
+    * output, so the plan drops into the tree fully resolved. The node
+    * is planted only here and by [[TopKPerKeyRewrite]], so this installs
+    * the strategy that plans it ([[register]], idempotent). */
   def topKPerKey(
       df: DataFrame,
       keyNames: Seq[String],
@@ -88,12 +90,14 @@ object TopKPerKey {
       throw new IllegalArgumentException(s"no column $n in ${byName.keys.mkString(", ")}"))
     val order = orderBy.map { case (n, asc) =>
       SortOrder(attr(n), if (asc) Ascending else Descending) }
+    register(df.sparkSession)
     GraftSqlShim.ofRows(df.sparkSession,
       TopKPerKey(keyNames.map(attr), order, k, analyzed))
   }
 
-  /** Idempotent per-session registration (tests / ad-hoc sessions); the
-    * conf-based route is `spark.sql.extensions=graft.functions.GraftExtensions`. */
+  /** Idempotent per-session strategy install, called by [[topKPerKey]]
+    * and [[TopKPerKeyRewrite.register]]; the conf-based route is
+    * `spark.sql.extensions=graft.functions.GraftExtensions`. */
   def register(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
       spark.experimental.extraStrategies =

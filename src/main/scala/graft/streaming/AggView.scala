@@ -199,7 +199,7 @@ object AggView {
       rows.groupBy(g: _*).agg(aggs.head, aggs.tail: _*)
     }
     val newest = Etl.dedupFirst(batch, keys, Seq(col(orderCol).desc))
-    if (!Cdc.storeExists(spark, storeDir)) {
+    if (!BucketStore.storeExists(spark, storeDir)) {
       val d0 = contributions(newest, groupCols, sumCols)
       if (minMaxCols.isEmpty) d0
       else minMaxCols.foldLeft(nsJoin(d0, mmAgg(newest, "ins"), groupCols, "inner")) { (d, m) =>
@@ -329,7 +329,7 @@ object AggView {
       storeDir: String = null): Unit = {
     // Honor the view's pinned bucket count (fixed at creation; a later
     // different argument must not silently re-hash groups).
-    val pinned = Cdc.pinnedBuckets(spark, viewDir)
+    val pinned = BucketStore.pinnedBuckets(spark, viewDir)
     val n = if (pinned > 0) pinned else numBuckets
     val g = groupCols.map(col)
     def writeOut(rows: DataFrame, touched: Seq[Int],
@@ -359,8 +359,8 @@ object AggView {
       // stale manifest that the next read stat-detects and rebuilds
       BucketStore.refreshTouched(spark, viewDir, touched)
     }
-    if (!Cdc.storeExists(spark, viewDir)) {
-      val init0 = deltas.withColumn("b", Cdc.bucketColFor(groupCols, n))
+    if (!BucketStore.storeExists(spark, viewDir)) {
+      val init0 = deltas.withColumn("b", BucketStore.bucketCol(groupCols, n))
         .filter(col("cnt") =!= 0L)
       val init = minMaxCols.foldLeft(init0) { (d, m) =>
         d.withColumn(s"max_$m", col(s"ins_max_$m"))
@@ -368,10 +368,10 @@ object AggView {
           .drop(s"ins_max_$m", s"ins_min_$m", s"rm_max_$m", s"rm_min_$m")
       }
       init.repartition(col("b")).write.partitionBy("b").mode("overwrite").parquet(viewDir)
-      Cdc.writeBucketsFile(spark, viewDir, numBuckets)
+      BucketStore.writeBucketsFile(spark, viewDir, numBuckets)
       BucketStore.rebuildManifest(spark, viewDir) // creation pays ONE recursive listing
     } else if (minMaxCols.isEmpty) {
-      val withB = deltas.withColumn("b", Cdc.bucketColFor(groupCols, n))
+      val withB = deltas.withColumn("b", BucketStore.bucketCol(groupCols, n))
       val touched = withB.select(col("b")).distinct()
         .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
       val existing = BucketStore.readBuckets(spark, viewDir, Some(touched))
@@ -383,7 +383,7 @@ object AggView {
     } else {
       // MIN/MAX path: a join shape instead of a union-sum — the new
       // extremum is conditional on what left vs what remains.
-      val touched = deltas.withColumn("b", Cdc.bucketColFor(groupCols, n))
+      val touched = deltas.withColumn("b", BucketStore.bucketCol(groupCols, n))
         .select(col("b")).distinct().collect().map(_.getInt(0)).toSeq
       val ex = BucketStore.readBuckets(spark, viewDir, Some(touched))
         .drop("b")
@@ -446,7 +446,7 @@ object AggView {
         .drop(minMaxCols.flatMap(m => Seq(s"cand_max_$m", s"cand_min_$m",
           s"need_max_$m", s"need_min_$m")): _*)
         .filter(col("cnt") =!= 0L)
-        .withColumn("b", Cdc.bucketColFor(groupCols, n)), touched,
+        .withColumn("b", BucketStore.bucketCol(groupCols, n)), touched,
         checkpoint = false)
     }
   }

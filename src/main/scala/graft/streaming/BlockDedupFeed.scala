@@ -77,7 +77,7 @@ object BlockDedupFeed {
     * reassembled output. */
   private[graft] def readIndex(spark: SparkSession, indexDir: String,
       touched: Seq[Int]): DataFrame = {
-    if (!Cdc.storeExists(spark, indexDir) || touched.isEmpty)
+    if (!BucketStore.storeExists(spark, indexDir) || touched.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], idxSchema)
         .drop("b")
@@ -96,7 +96,7 @@ object BlockDedupFeed {
   def applyBatch(batch: DataFrame, indexDir: String,
       numBuckets: Int = DefaultBuckets): DataFrame = {
     val spark = batch.sparkSession
-    val pinned = Cdc.pinnedBuckets(spark, indexDir)
+    val pinned = BucketStore.pinnedBuckets(spark, indexDir)
     val n = if (pinned > 0) pinned else numBuckets
     val blocks = Rewrite.blockFrame(batch.select(col("doc_id"), col("text")))
       .withColumn("bh", md5(col("btxt")))
@@ -113,7 +113,7 @@ object BlockDedupFeed {
       .join(idx, Seq("bh"), "left")
       .withColumn("keep", col("bf") && (col("owner").isNull || col("owner") === col("p")))
       .localCheckpoint() // decisions must not shift between append and output
-    if (pinned == 0) Cdc.writeBucketsFile(spark, indexDir, n)
+    if (pinned == 0) BucketStore.writeBucketsFile(spark, indexDir, n)
     // Unconditional append (round 8): a replay's new-owner frame is
     // empty and writes nothing — probing it with isEmpty first was one
     // extra Spark job per batch for no behavior change.
@@ -146,7 +146,7 @@ object BlockDedupFeed {
     * `_BUCKETS` pin in place; the localCheckpoint materializes the
     * index before its source files are replaced. */
   def compact(spark: SparkSession, indexDir: String): Unit = {
-    val n = Cdc.pinnedBuckets(spark, indexDir)
+    val n = BucketStore.pinnedBuckets(spark, indexDir)
     if (n > 0) {
       BucketStore.ensureManifest(spark, indexDir)
       // read the manifest-VISIBLE rows: the dir overwrite then deletes

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   * full-corpus rewrite per batch (the round-4 shape) — and not even a
   * full-store LISTING per batch (the round-10 residual: with buckets
   * ∝ snapshot size, O(buckets) root listing made the history axis
-  * 2.4× instead of flat; see [[readManifest]]).
+  * 2.4× instead of flat; see [[BucketStore.readManifest]]).
   *
   * Scale notes: each micro-batch pays one keyed join against the
   * touched buckets only (AQE broadcasts small batches); state lives in
@@ -61,32 +61,6 @@ object Cdc {
       }
       .start()
 
-  // Store metadata machinery lives in the shared [[BucketStore]] layer
-  // since round 12 (it was born here in rounds 8–11); these forwarders
-  // keep Cdc's surface stable for its callers and specs.
-  private[graft] def readManifest(spark: SparkSession,
-      storeDir: String): Option[Map[Int, Seq[String]]] =
-    BucketStore.readManifest(spark, storeDir)
-
-  private[streaming] def rebuildManifest(spark: SparkSession, storeDir: String): Unit =
-    BucketStore.rebuildManifest(spark, storeDir)
-
-  private[streaming] def pinnedBuckets(spark: SparkSession, storeDir: String): Int =
-    BucketStore.pinnedBuckets(spark, storeDir)
-
-  private[streaming] def storeExists(spark: SparkSession, dir: String): Boolean =
-    BucketStore.storeExists(spark, dir)
-
-  /** [[AggView]]'s access to the bucket-assignment column. */
-  private[streaming] def bucketColFor(cols: Seq[String], n: Int) =
-    BucketStore.bucketCol(cols, n)
-
-  private[streaming] def writeBucketsFile(spark: SparkSession, storeDir: String, n: Int): Unit =
-    BucketStore.writeBucketsFile(spark, storeDir, n)
-
-  private def bucketCol(keys: Seq[String], n: Int) =
-    BucketStore.bucketCol(keys, n)
-
   /** MERGE a batch of row images into the bucketed parquet snapshot.
     * Newest image per key wins GLOBALLY, not just within the batch: the
     * store row competes on `orderCol` too, so a stale image re-delivered
@@ -103,19 +77,19 @@ object Cdc {
       keys: Seq[String], orderCol: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     val spark = batch.sparkSession
-    val pinned = pinnedBuckets(spark, storeDir)
+    val pinned = BucketStore.pinnedBuckets(spark, storeDir)
     val n = if (pinned > 0) pinned else numBuckets
     val newest = Etl.dedupFirst(batch, keys, Seq(col(orderCol).desc))
-      .withColumn("b", bucketCol(keys, n))
+      .withColumn("b", BucketStore.bucketCol(keys, n))
     if (pinned == 0) {
       newest.repartition(col("b")) // one file per bucket: store file count stays = bucket
         // count, so any listing fallback is O(buckets), not
         // O(buckets × writer-tasks) growing with history
         .write.partitionBy("b").mode("overwrite").parquet(storeDir)
-      writeBucketsFile(spark, storeDir, n)
-      rebuildManifest(spark, storeDir) // creation pays ONE recursive listing
+      BucketStore.writeBucketsFile(spark, storeDir, n)
+      BucketStore.rebuildManifest(spark, storeDir) // creation pays ONE recursive listing
     } else {
-      val touched = batch.select(bucketCol(keys, n)).distinct()
+      val touched = batch.select(BucketStore.bucketCol(keys, n)).distinct()
         .collect().map(_.getInt(0)).toSeq
       // Manifest fast path (with stale-entry stat validation + self-heal
       // in BucketStore): the exact file list of the touched buckets —

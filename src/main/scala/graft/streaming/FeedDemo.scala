@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable demo of the weekly-feed streaming pipeline:
@@ -11,14 +10,7 @@ import org.apache.spark.sql.functions._
 object FeedDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(graft.Session.cores)
 
     val flat = java.nio.file.Files.createTempDirectory("feed-in").toString
     val store = java.nio.file.Files.createTempDirectory("feed-store").toString + "/snap"

@@ -42,7 +42,7 @@ object PqIndexFeed {
     val spark = seed.sparkSession
     Pq.codebooks(Ivf.quantized(Pq.normalized(seed)))
       .write.mode("overwrite").parquet(codebooksDir(storeDir))
-    Cdc.writeBucketsFile(spark, codesDir(storeDir), numBuckets)
+    BucketStore.writeBucketsFile(spark, codesDir(storeDir), numBuckets)
     applyBatch(seed, storeDir)
   }
 
@@ -82,7 +82,7 @@ object PqIndexFeed {
     * buckets the batch's keys hash into. Returns the batch's codes. */
   def applyBatch(batch: DataFrame, storeDir: String): DataFrame = {
     val spark = batch.sparkSession
-    val n = Cdc.pinnedBuckets(spark, codesDir(storeDir))
+    val n = BucketStore.pinnedBuckets(spark, codesDir(storeDir))
     require(n > 0, s"PqIndexFeed store at $storeDir not initialized")
     val cents = readCodebooks(spark, storeDir)
     val codes = Pq.encode(batch, cents)
@@ -132,7 +132,6 @@ object PqIndexFeed {
   def searchStore(queries: DataFrame, storeDir: String,
       reRank: Int = Pq.ReRank): DataFrame = {
     val spark = queries.sparkSession
-    graft.plans.TopKPerKey.register(spark)
     val cents = readCodebooks(spark, storeDir)
     val qsub = Pq.subvectors(Ivf.quantized(Pq.normalized(queries)))
       .select(col("vec_id").as("query_id"), col("sub"), col("sq"))

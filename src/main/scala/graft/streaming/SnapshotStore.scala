@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.VersionedStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** The one snapshot-store commit protocol, shared by every foreachBatch
@@ -29,8 +29,4 @@ object SnapshotStore {
     VersionedStore.commit(merged, storeDir)
     ()
   }
-
-  /** Current snapshot (the version the pointer names). */
-  def read(spark: SparkSession, storeDir: String): DataFrame =
-    VersionedStore.read(spark, storeDir)
 }

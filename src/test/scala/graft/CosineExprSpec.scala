@@ -25,7 +25,6 @@ class CosineExprSpec extends SparkSuite {
 
   test("sign_buckets equals the composed 16x64-term projection select bit-for-bit") {
     import graft.functions.SignBuckets
-    SignBuckets.register(spark)
     val e = Tables.embeddings(spark, sf).limit(200)
     val native = e.select($"vec_id",
         posexplode(SignBuckets.signBuckets($"embedding")).as(Seq("tbl", "bucket")))

@@ -32,9 +32,8 @@ class ExtSpec extends SparkSuite {
     // SQL concat_ws drops a NULL argument and its separator ('a b', not
     // 'a  b'); the native expression passes nulls straight to
     // UTF8String.concatWs, which applies the same rule — pinned here
-    // because the function is session-registered for general SQL use
-    // where (unlike split() output) null elements are reachable.
-    graft.functions.ShingleHash3.register(spark)
+    // because the Column entry point takes any array<string>, where
+    // (unlike split() output) null elements are reachable.
     val rows = Seq(
       Seq[String]("a", null, "b"),
       Seq[String](null, null, "x"),

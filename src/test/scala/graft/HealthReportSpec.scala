@@ -21,9 +21,12 @@ class HealthReportSpec extends SparkSuite {
     (Seq(pk, state, name, s"$pk Street", s"City$state", "11111", "42",
       "\"POINT (-70.1 40.2)\"", week) ++ beds).mkString(",")
 
-  private lazy val store: String = {
+  private val qHeader = "Facility ID,Facility Name,City,State,ZIP Code," +
+    "Hospital Ownership,Emergency Services,Hospital Type,Hospital overall rating"
+
+  /** Runs the fixture's two HHS weeks and its CMS drop into `store`. */
+  private def loadInto(store: String): String = {
     val in = Files.createTempDirectory("hr-in").toString
-    val store = Files.createTempDirectory("hr-store").toString
     val rows = Seq(
       row("H1", "Alpha", "PA", "2022-01-07", Seq("100", "20", "50", "10", "5", "2", "7", "1")),
       row("H2", "Beta", "PA", "2022-01-07", Seq("200", "0", "100", "0", "8", "4", "9", "2")),
@@ -39,8 +42,6 @@ class HealthReportSpec extends SparkSuite {
     Files.writeString(f2, (hhsHeader +: rows2).mkString("\n"))
     HhsLoad.load(spark, f2.toString, store)
 
-    val qHeader = "Facility ID,Facility Name,City,State,ZIP Code," +
-      "Hospital Ownership,Emergency Services,Hospital Type,Hospital overall rating"
     val q = java.nio.file.Paths.get(in, "q.csv")
     Files.writeString(q, (qHeader +: Seq(
       "H1,Alpha,CityPA,PA,11111,Private,Yes,Acute,5",
@@ -50,7 +51,31 @@ class HealthReportSpec extends SparkSuite {
     store
   }
 
+  private lazy val store: String = loadInto(Files.createTempDirectory("hr-store").toString)
+
   private lazy val report = new HealthReport(spark, store, java.sql.Date.valueOf("2022-01-14"))
+
+  test("a file:// URI store reports like a path store and resolves new hospitals' locations") {
+    val uriStore = loadInto(
+      Files.createTempDirectory("hr-uri-store").toUri.toString.stripSuffix("/"))
+    assert(uriStore.startsWith("file:/"))
+    val viaUri = new HealthReport(spark, uriStore, java.sql.Date.valueOf("2022-01-14")).all
+    assert(viaUri.keySet === report.all.keySet && viaUri.size === 8)
+    report.all.foreach { case (name, viaPath) =>
+      val expected = viaPath.collect().map(_.toString).sorted.toSeq
+      assert(expected.nonEmpty, name)
+      assert(viaUri(name).collect().map(_.toString).sorted.toSeq === expected, name)
+    }
+    // H4 is in no HHS file, so only QualityLoad's location lookup can
+    // give it H3's (CityOH, OH, 11111) location
+    val q = Files.createTempDirectory("hr-in").resolve("q4.csv")
+    Files.writeString(q, Seq(qHeader, "H4,Delta,CityOH,OH,11111,Public,No,Acute,3").mkString("\n"))
+    QualityLoad.load(spark, q.toString, java.sql.Date.valueOf("2022-01-10"), uriStore)
+    val loc = spark.read.parquet(s"$uriStore/hospital")
+      .filter($"hospital_pk".isin("H3", "H4"))
+      .select($"hospital_pk", $"location_id").as[(String, Option[Long])].collect().toMap
+    assert(loc("H4").isDefined && loc("H4") === loc("H3"), loc)
+  }
 
   test("Q1 records summary: count, previous week, difference, week DESC") {
     val r = report.recordsPerWeek

@@ -70,7 +70,6 @@ class PqIndexFeedSpec extends SparkSuite {
       .join(broadcast(lut), Seq("sub", "code"))
       .filter($"neighbor_id" =!= $"query_id")
       .groupBy($"query_id", $"neighbor_id").agg(sum($"d").as("adc"))
-    graft.plans.TopKPerKey.register(spark)
     val directTop = graft.plans.TopKPerKey.topKPerKey(
         direct, Seq("query_id"), Seq(("adc", true), ("neighbor_id", true)), k = 20)
       .select($"query_id", $"neighbor_id", $"adc")

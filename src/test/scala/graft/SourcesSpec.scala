@@ -185,7 +185,7 @@ class SourcesSpec extends SparkSuite {
       out.toSet
     }
     def manifestFiles(): Set[String] =
-      Cdc.readManifest(spark, store).get.values.flatten.toSet
+      graft.streaming.BucketStore.readManifest(spark, store).get.values.flatten.toSet
 
     merge((1L to 40L).map(k => img(k, s"v$k", 1L)))
     assert(manifestFiles() === diskFiles(), "creation manifest != disk")
@@ -223,7 +223,7 @@ class SourcesSpec extends SparkSuite {
       store2, Seq("k"), "seq")
     assert(Cdc.readStore(spark, store2).as[(Long, String, Long)].collect().toSet
       === Set((1L, "a", 1L), (freshKey, "b", 2L)))
-    assert(Cdc.readManifest(spark, store2).get.keySet
+    assert(graft.streaming.BucketStore.readManifest(spark, store2).get.keySet
       === Set(bucketOf(1L), bucketOf(freshKey)))
   }
 

@@ -122,7 +122,7 @@ class StreamingSpec extends SparkSuite {
     eventsWeek(1).coalesce(1).write.mode("overwrite").parquet(flat)
 
     WeeklyFeed.runFeed(spark, flat, store, cp1).awaitTermination()
-    val afterFirst = graft.streaming.SnapshotStore.read(spark, store)
+    val afterFirst = graft.model.VersionedStore.read(spark, store)
     val expectGrain = eventsWeek(1).select($"user_id", to_date($"ts").as("day"))
       .distinct().count()
     assert(afterFirst.count() === expectGrain)
@@ -132,7 +132,7 @@ class StreamingSpec extends SparkSuite {
     eventsWeek(2).coalesce(1).write.mode("append").parquet(flat)
     eventsWeek(1).coalesce(1).write.mode("append").parquet(flat)
     WeeklyFeed.runFeed(spark, flat, store, cp1).awaitTermination()
-    val afterSecond = graft.streaming.SnapshotStore.read(spark, store)
+    val afterSecond = graft.model.VersionedStore.read(spark, store)
     val expectBoth = eventsWeek(1).unionByName(eventsWeek(2))
       .select($"user_id", to_date($"ts").as("day")).distinct().count()
     assert(afterSecond.count() === expectBoth)
@@ -143,7 +143,7 @@ class StreamingSpec extends SparkSuite {
     // converges to the same state
     val store2 = tmpDir("store2") + "/snap"
     WeeklyFeed.runFeed(spark, flat, store2, tmpDir("cp2")).awaitTermination()
-    val replay = graft.streaming.SnapshotStore.read(spark, store2)
+    val replay = graft.model.VersionedStore.read(spark, store2)
     assert(replay.count() === afterSecond.count())
   }
 

@@ -11,7 +11,6 @@ class TopKPerKeySpec extends SparkSuite {
   import spark.implicits._
 
   test("t6 equals the window row_number formulation exactly") {
-    TopKPerKey.register(spark)
     val o = Tables.orders(spark, sf)
       .select($"o_orderpriority", $"o_orderkey", $"o_totalprice")
     val got = TopKPerKey.topKPerKey(o, Seq("o_orderpriority"),
@@ -27,7 +26,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("plans as partial heaps below one key-exchange, final heaps above") {
-    TopKPerKey.register(spark)
     val o = Tables.orders(spark, sf)
       .select($"o_orderpriority", $"o_orderkey", $"o_totalprice")
     val df = TopKPerKey.topKPerKey(o, Seq("o_orderpriority"),
@@ -46,7 +44,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("bounded heaps: k larger than group, single row, ties, empty input") {
-    TopKPerKey.register(spark)
     val tiny = Seq(("a", 1L, 5.0), ("a", 2L, 5.0), ("a", 3L, 7.0), ("b", 4L, 1.0))
       .toDF("k", "id", "v").repartition(3)
     // k=10 > group sizes → whole groups come back
@@ -62,7 +59,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("keyless call is GLOBAL top-k (AllTuples), not per-partition top-k") {
-    TopKPerKey.register(spark)
     val df = spark.range(1000).select($"id", ($"id" % 313).cast("double").as("v"))
       .repartition(8)
     val got = TopKPerKey.topKPerKey(df, Seq.empty, Seq(("v", false), ("id", true)), 5)
@@ -74,7 +70,6 @@ class TopKPerKeySpec extends SparkSuite {
   test("per-partition partial really bounds rows entering the shuffle") {
     // 1 key, 200 rows, 8 partitions, k=3 → partial emits ≤ 3 rows per
     // partition (≤ 24 total), not 200.
-    TopKPerKey.register(spark)
     val df = spark.range(200).select(lit("only").as("k"), $"id",
       ($"id" % 17).cast("double").as("v")).repartition(8)
     val partial = TopKPerKeyPartialExec(

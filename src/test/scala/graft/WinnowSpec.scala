@@ -11,7 +11,6 @@ class WinnowSpec extends SparkSuite {
   import spark.implicits._
 
   private def fps(text: String, w: Int = 4): Seq[Long] = {
-    graft.functions.Winnow3.register(spark)
     Seq(text).toDF("text")
       .select(graft.functions.Winnow3.winnow3(split(col("text"), " "), lit(w)).as("f"))
       .as[Seq[Long]].collect().head
