@@ -2,7 +2,6 @@ package graft.analytics
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** RFM (recency / frequency / monetary) customer segmentation — the

@@ -1,7 +1,7 @@
 package graft.analytics
 
-import graft.{Parity, Q, Tables}
-import graft.Parity.{day, dec, dsum, sql, week}
+import graft.{Q, Tables}
+import graft.Parity.{dec, dsum, sql, week}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality audits over the star schema — the two test

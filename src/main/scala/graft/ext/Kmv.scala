@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 

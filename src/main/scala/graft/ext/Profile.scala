@@ -3,7 +3,6 @@ package graft.ext
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** One-pass column profiling — the `ANALYZE TABLE` of this engine, and
   * the QA primitive the reference's loaders implicitly depend on (its

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.etl.Etl
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ext.Kmv
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** x66's KMV distinct-count sketch as CONTINUOUS ingestion — the
   * mergeable-sketch property made operational. Exact streaming

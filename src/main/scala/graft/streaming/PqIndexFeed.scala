@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ext.{Ivf, Pq}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._

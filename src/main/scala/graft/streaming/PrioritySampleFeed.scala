@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.ext.Sampling
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** x159's priority sample as CONTINUOUS ingestion — the weighted-sample
   * member of the incremental-feed family (the KmvFeed posture: bounded

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{Bloom, Curation}
-import org.apache.spark.sql.functions._
 
 /** x53 Bloom decontamination: the oracle replays the filter bit-for-bit
   * (false positives included); this pins the PROPERTIES the replay can't

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 /** x58 cohort retention: the oracle pins the grid on the real log; this

@@ -2,7 +2,6 @@ package graft
 
 import graft.analytics.HealthReport
 import graft.ingest.{HhsLoad, QualityLoad}
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** End-to-end reference parity: CSV drops → HhsLoad/QualityLoad store →

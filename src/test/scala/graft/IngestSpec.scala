@@ -2,7 +2,6 @@ package graft
 
 import graft.ingest.{HhsLoad, QualityLoad}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions._
 import java.io.File
 import java.nio.file.Files
 

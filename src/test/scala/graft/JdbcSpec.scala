@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.Jdbc
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions._
 
 /** JDBC source/sink parity, driven end-to-end against embedded Derby
   * (ships with Spark — no external database needed): write a testdata

@@ -207,7 +207,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("x69 stats: every z-range is a small BOX of both dimensions") {
-    import org.apache.spark.sql.functions.{expr, unix_micros, col => c}
+    import org.apache.spark.sql.functions.{expr, col => c}
     val o = Tables.orders(spark, sf).select(
       c("o_custkey").as("ck"), expr("unix_micros(o_orderdate) div 86400000000").as("day"))
     val Seq(ckSpan, daySpan) = {

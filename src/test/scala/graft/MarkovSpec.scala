@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 /** x62 Markov transitions: the oracle pins the matrix on the real log;

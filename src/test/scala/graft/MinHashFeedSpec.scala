@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{BucketStore, MinHashFeed}
-import org.apache.spark.sql.functions._
 
 /** MinHashFeed contract (LmFeedSpec's shape): split-invariance (any
   * batch split folds to identical pair/survivor views), bit-equality of

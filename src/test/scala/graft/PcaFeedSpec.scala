@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** PcaFeed: incremental scatter sums must reproduce the registered x153
   * frame bit-for-bit under any batch split, and the state must stay at

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** x153 PCA power iteration: the oracle replays the integer algorithm
   * exactly, so these tests pin the SEMANTICS the oracle can't — that

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.Pii
-import org.apache.spark.sql.functions._
 
 /** x46 PII redaction: the pure function on hand-built rows — the
   * registry oracle proves cross-engine regex parity on planted PII;

@@ -4,7 +4,9 @@ package graft
   * products, no disabled codegen — the whole-registry version of the
   * per-query assertions in PlanSpec. Intended (broadcast) cross joins
   * compile to BroadcastNestedLoopJoin, which is allowed for the queries
-  * that declare them. */
+  * that declare them. The audits share one build per query: building
+  * runs a query's eager checkpoint jobs, so each query is built once into
+  * an [[Audit]] record and every registry-wide audit filters that record. */
 class PlanAuditSpec extends SparkSuite {
 
   // queries that intentionally cross-join a broadcast scalar/query set
@@ -92,82 +94,91 @@ class PlanAuditSpec extends SparkSuite {
     // the rule exists for KEYED aggregations, where the sort dominates.
     "x56_profile_columns")
 
+  import org.apache.spark.sql.catalyst.plans.logical._
+
+  /** What the audits below read of one registry query, taken from a single
+    * build. Strings and booleans only: holding the DataFrame or its
+    * QueryExecution would pin every query's checkpoint blocks at once. */
+  private case class Audit(name: String, executed: String,
+                           unboundedHint: Boolean, unpartitionedWindow: Boolean)
+
+  // A forced broadcast of a table that grows with scale factor (customer
+  // is 15M rows / ~1.7 GB at sf100) OOMs executors at 100x instead of
+  // letting AQE pick sort-merge vs runtime broadcast. Rule: a hint whose
+  // subtree scans an SF-scaling table must contain SOMETHING that bounds
+  // cardinality (limit, aggregate, distinct, sample, or at minimum a
+  // filter — the bare-whole-table hint is the defect class). Bounded
+  // dims (nation=25, region=5) may be hinted freely.
+  private val bigTables = Seq("customer", "orders", "lineitem", "part", "supplier",
+    "documents", "embeddings", "events").map(t => s"$t.parquet")
+  private def unboundedHint(analyzed: LogicalPlan): Boolean =
+    analyzed.collect { case h: ResolvedHint => h }.exists { h =>
+      val scansBig = h.child.collectLeaves()
+        .exists(l => bigTables.exists(l.toString.contains))
+      val bounding = h.child.collect {
+        case p @ (_: Aggregate | _: GlobalLimit | _: LocalLimit |
+                  _: Deduplicate | _: Sample | _: Filter) => p
+      }
+      scansBig && bounding.isEmpty
+    }
+
+  // A `Window.orderBy(...)` with no partitionBy is planned as a
+  // SINGLE-PARTITION window: every input row funnels through one
+  // reducer for a global sort — the one shape that cannot survive a
+  // 100× scale-up. Registry-wide rule (round 12, after x25 moved to
+  // the SegmentedRank machinery): an unpartitioned Window is legal
+  // ONLY over a bounded axis, witnessed STRUCTURALLY by a bounding
+  // operator (Aggregate / limit / Deduplicate / Sample) somewhere
+  // below it in the same plan — per-segment count tables, weekly
+  // axes, top-k prefixes — or by an explicit allow-list entry naming
+  // the bounded input. Corpus-over-the-wire global sorts must use
+  // graft.ext.SegmentedRank instead.
+  private def unpartitionedWindow(optimized: LogicalPlan): Boolean =
+    optimized.collect {
+      case w: Window if w.partitionSpec.isEmpty =>
+        w.child.collect {
+          case p @ (_: Aggregate | _: GlobalLimit | _: LocalLimit |
+                    _: Deduplicate | _: Sample) => p
+        }.isEmpty
+    }.contains(true)
+
+  // one build per registry query; each audit keeps its plan phase
+  private lazy val audits: Seq[Audit] = SparkEntry.registry.map { q =>
+    val qe = q.fn(spark, sf).queryExecution
+    Audit(q.name, qe.executedPlan.toString(),
+      unboundedHint(qe.analyzed), unpartitionedWindow(qe.optimizedPlan))
+  }
+
   test("no query falls back to SortAggregate (hash/object-hash only)") {
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString()
-      if (plan.contains("SortAggregate") && !sortAggOk(q.name)) Some(q.name) else None
+    val offenders = audits.collect {
+      case a if a.executed.contains("SortAggregate") && !sortAggOk(a.name) => a.name
     }
     assert(offenders.isEmpty, s"SortAggregate fallback in: $offenders")
   }
 
   test("no query plans a CartesianProduct") {
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString()
-      if (plan.contains("CartesianProduct")) Some(q.name) else None
+    val offenders = audits.collect {
+      case a if a.executed.contains("CartesianProduct") => a.name
     }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 
   test("BroadcastNestedLoopJoin appears only where a broadcast cross join is declared") {
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString()
-      if (plan.contains("BroadcastNestedLoopJoin") && !broadcastCrossOk(q.name)) Some(q.name)
-      else None
+    val offenders = audits.collect {
+      case a if a.executed.contains("BroadcastNestedLoopJoin") && !broadcastCrossOk(a.name) => a.name
     }
     assert(offenders.isEmpty, s"unexpected BNLJ in: $offenders")
   }
 
   test("explicit broadcast hints never attach to an unbounded SF-scaling scan") {
-    // A forced broadcast of a table that grows with scale factor (customer
-    // is 15M rows / ~1.7 GB at sf100) OOMs executors at 100x instead of
-    // letting AQE pick sort-merge vs runtime broadcast. Rule: a hint whose
-    // subtree scans an SF-scaling table must contain SOMETHING that bounds
-    // cardinality (limit, aggregate, distinct, sample, or at minimum a
-    // filter — the bare-whole-table hint is the defect class). Bounded
-    // dims (nation=25, region=5) may be hinted freely.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val bigTables = Seq("customer", "orders", "lineitem", "part", "supplier",
-      "documents", "embeddings", "events").map(t => s"$t.parquet")
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val analyzed = q.fn(spark, sf).queryExecution.analyzed
-      val bad = analyzed.collect { case h: ResolvedHint => h }.filter { h =>
-        val scansBig = h.child.collectLeaves()
-          .exists(l => bigTables.exists(l.toString.contains))
-        val bounding = h.child.collect {
-          case p @ (_: Aggregate | _: GlobalLimit | _: LocalLimit |
-                    _: Deduplicate | _: Sample | _: Filter) => p
-        }
-        scansBig && bounding.isEmpty
-      }
-      if (bad.nonEmpty) Some(q.name) else None
-    }
+    val offenders = audits.collect { case a if a.unboundedHint => a.name }
     assert(offenders.isEmpty, s"unbounded broadcast hints in: $offenders")
   }
 
   test("no unpartitioned window runs over an unbounded (corpus-sized) input") {
-    // A `Window.orderBy(...)` with no partitionBy is planned as a
-    // SINGLE-PARTITION window: every input row funnels through one
-    // reducer for a global sort — the one shape that cannot survive a
-    // 100× scale-up. Registry-wide rule (round 12, after x25 moved to
-    // the SegmentedRank machinery): an unpartitioned Window is legal
-    // ONLY over a bounded axis, witnessed STRUCTURALLY by a bounding
-    // operator (Aggregate / limit / Deduplicate / Sample) somewhere
-    // below it in the same plan — per-segment count tables, weekly
-    // axes, top-k prefixes — or by an explicit allow-list entry naming
-    // the bounded input. Corpus-over-the-wire global sorts must use
-    // graft.ext.SegmentedRank instead.
-    import org.apache.spark.sql.catalyst.plans.logical._
     val unboundedOk = Set.empty[String] // every bounded axis is currently structural
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.optimizedPlan
-      val bad = plan.collect {
-        case w: Window if w.partitionSpec.isEmpty =>
-          w.child.collect {
-            case p @ (_: Aggregate | _: GlobalLimit | _: LocalLimit |
-                      _: Deduplicate | _: Sample) => p
-          }.isEmpty
-      }
-      if (bad.contains(true) && !unboundedOk(q.name)) Some(q.name) else None
+    val offenders = audits.collect {
+      case a if a.unpartitionedWindow && !unboundedOk(a.name) => a.name
     }
     assert(offenders.isEmpty,
       s"unpartitioned window over unbounded input in: $offenders")
@@ -177,8 +188,7 @@ class PlanAuditSpec extends SparkSuite {
     // x25's exact NTILE is the one sanctioned global-window query; its
     // scale twin must get the same answer shape with zero Window operators
     // — boundaries from a sketch aggregate, bin lookup as a projection.
-    val plan = SparkEntry.queries("x25b_quality_deciles_approx")(spark, sf)
-      .queryExecution.executedPlan.toString()
+    val plan = audits.find(_.name == "x25b_quality_deciles_approx").get.executed
     assert(!plan.contains("Window"), s"x25b regressed to a window/sort plan:\n$plan")
   }
 

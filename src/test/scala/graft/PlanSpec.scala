@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan audits — the 100 TB story. Correct results with a bad
   * plan (no pushdown, shuffled dim joins, no codegen) would collapse at

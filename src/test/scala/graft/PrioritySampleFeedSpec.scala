@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** PrioritySampleFeed: the incremental top-(k+1) shortlist must
   * reproduce the registered x159 sample frame exactly under any batch

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.Profile
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 /** x56 column profiling: the oracle pins the values on the real table;

@@ -255,7 +255,6 @@ class SourcesSpec extends SparkSuite {
 
   test("append-commit protocol: orphan files from a crashed append stay invisible") {
     import graft.streaming.BucketStore
-    import org.apache.hadoop.fs.Path
     val store = java.nio.file.Files.createTempDirectory("graft-append-man").toString
     val n = 4
     def withB(rows: Seq[(Long, String)]) = rows.toDF("k", "v")

@@ -2,7 +2,6 @@ package graft
 
 import graft.analytics.Temporal
 import graft.ext.{Dedup, Sampling}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Specs for the temporal/reshape operators (x15/w3/a13/a14) and the

@@ -256,7 +256,6 @@ class TrendSpec extends SparkSuite {
   }
 
   test("x139 crafted: two-step Holt fold matches the hand computation") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-holt").toString
     // day 1: 4 events; day 2: 8 events (one event_type)
@@ -301,7 +300,6 @@ class TrendSpec extends SparkSuite {
   }
 
   test("x146 crafted: drawdown lands at the worst trough below the running peak") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-dd").toString
     // one priority, four ISO weeks: 100, 300, 120, 250 dollars
@@ -320,7 +318,6 @@ class TrendSpec extends SparkSuite {
   }
 
   test("x147 crafted: hand-computed MASE on a three-day series") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-mase").toString
     // day counts 4, 8, 10 → sh = 4S + 3S, sn = 4S + 2S → mase = 7/6
@@ -364,7 +361,6 @@ class TrendSpec extends SparkSuite {
   }
 
   test("x151 crafted: one outlier day cannot move the Theil-Sen slope") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ts").toString
     // daily counts 0?: days must have >=1 event to appear; use 2,4,6,100
