@@ -32,41 +32,37 @@ object Bench {
     * more reps make it worse. Back at 3 for every lane (and comparable
     * with every prior round). An explicit SPARK_GRAFT_REPS overrides
     * BOTH lanes (profiling runs). */
-  private val LaneReps: Map[String, Int] = Map("graph" -> 3, "main" -> 3)
+  private val LaneReps = 3
 
   def main(args: Array[String]): Unit = {
-    // Lane mode (default): fork one child JVM per lane and merge their
-    // per-query lines. SPARK_GRAFT_LANES=none restores the single-JVM
-    // suite (one-off profiling); a SPARK_GRAFT_ONLY filter or running AS
-    // a lane child also short-circuits to the plain suite.
-    val laneMode = sys.env.getOrElse("SPARK_GRAFT_LANES", "fork")
-    val isChild = sys.env.contains("SPARK_GRAFT_LANE")
-    if (laneMode == "fork" && !isChild && sys.env.get("SPARK_GRAFT_ONLY").isEmpty)
+    // Lane mode: fork one child JVM per lane and merge their per-query
+    // lines. A SPARK_GRAFT_ONLY filter (one-JVM profiling) or running AS
+    // a lane child short-circuits to the plain suite.
+    if (!sys.env.contains("SPARK_GRAFT_LANE") && !sys.env.contains("SPARK_GRAFT_ONLY"))
       runForkedLanes()
     else
       runSuite()
   }
 
-  /** One timed line per query — independently parseable, emitted
-    * ascending by time with failures LAST so the most diagnostic lines
-    * sit inside the driver's bounded log tail. */
-  private def r(v: Double): String = String.format(java.util.Locale.ROOT,
-    "%.3f", java.lang.Double.valueOf(v)) // locale-pinned: a comma decimal would break the JSON
+  /** A fixed-point number for a jsonl line, written by Bench and the
+    * probes. Locale-pinned: under a comma-decimal default locale `%.3f`
+    * prints `1,500` and the line stops being JSON. */
+  private[graft] def fmt(v: Double, digits: Int = 3): String = String.format(
+    java.util.Locale.ROOT, s"%.${digits}f", java.lang.Double.valueOf(v))
 
   private def summaryLine(results: Map[String, (Double, Double, Double)],
-      reps: Int, resetMode: String, sfDir: String,
-      lanesTag: Option[String]): String = {
+      reps: Int, sfDir: String, lanesTag: Option[String]): String = {
     val failed = results.filter(_._2._1 < 0).keys.toSeq.sorted
     val ok = results.collect { case (k, (med, _, _)) if med >= 0 => k -> med }
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     val slowest = ok.toSeq.sortBy(-_._2).take(10)
-      .map { case (k, v) => s"\"" + k + "\":" + r(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     // failure NAMES (bounded) ride the summary line — the count alone
     // says something broke without saying what
     val failedJson = failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
     val lanes = lanesTag.fold("")(t => s""","lanes":$t""")
     // headline value = sum of per-query MEDIANS
-    s"""{"metric":"total","value":${r(total)},"unit":"sec","n":${results.size},"failures":${failed.size},"failed":$failedJson,"queries":$slowest,"sf":"$sfDir","warmup":true,"reps":$reps,"stat":"median","order":"shuffled-per-rep","reset":"${if (resetMode == "none") "none" else "clearCache+gc"}"$lanes}"""
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failures":${failed.size},"failed":$failedJson,"queries":$slowest,"sf":"$sfDir","warmup":true,"reps":$reps,"stat":"median","order":"shuffled-per-rep","reset":"clearCache+gc"$lanes}"""
   }
 
   private def writeLines(path: String, lines: Seq[String]): Unit = {
@@ -102,12 +98,10 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repsEnv = sys.env.get("SPARK_GRAFT_REPS")
-    val resetMode = sys.env.getOrElse("SPARK_GRAFT_RESET", "gc")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val graphSet = graphLane
-    val lanes = Seq(
-      ("graph", names.filter(graphSet), repsEnv.fold(LaneReps("graph"))(_.toInt)),
-      ("main", names.filterNot(graphSet), repsEnv.fold(LaneReps("main"))(_.toInt)))
+    val laneReps = repsEnv.fold(LaneReps)(_.toInt)
+    val lanes = Seq(("graph", names.filter(graphSet)), ("main", names.filterNot(graphSet)))
       .filter(_._2.nonEmpty)
     val javaBin = new java.io.File(
       new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
@@ -115,7 +109,7 @@ object Bench {
       .getRuntimeMXBean.getInputArguments.asScala.toSeq
     val cp = System.getProperty("java.class.path")
     val tmpDir = java.nio.file.Files.createTempDirectory("benchlanes")
-    val laneRuns = lanes.map { case (lane, qs, laneReps) =>
+    val laneRuns = lanes.map { case (lane, qs) =>
       val out = tmpDir.resolve(s"$lane.jsonl").toString
       val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
       val pb = new ProcessBuilder(cmd)
@@ -169,7 +163,7 @@ object Bench {
         s"files (${missing.toSeq.sorted.take(5).mkString(",")}…) — re-running in-process")
       val out = tmpDir.resolve("recovered.jsonl").toString
       runSuite(onlyOverride = Some(missing), benchOutOverride = Some(out),
-        quiet = true, repsOverride = repsEnv.map(_.toInt).orElse(Some(LaneReps("main"))))
+        quiet = true, repsOverride = Some(laneReps))
       parseQueryLines(out)
     }
     val parsed = parsed0 ++ recovered
@@ -177,11 +171,10 @@ object Bench {
     calLines.foreach(println)
     ordered.foreach { case (_, _, line) => println(line) }
     val results = parsed.map { case (n, v, _) => n -> (v, v, v) }.toMap
-    val lanesTag = lanes.map { case (l, qs, laneReps) =>
+    val lanesTag = lanes.map { case (l, qs) =>
       s"""\"$l\":{"n":${qs.size},"reps":$laneReps}""" }.mkString("{", ",", "}")
     val fellBack = laneRuns.exists(!_._3)
-    val summary = summaryLine(results,
-      repsEnv.fold(LaneReps("main"))(_.toInt), resetMode, sfDir,
+    val summary = summaryLine(results, laneReps, sfDir,
       Some(lanesTag +
         (if (fellBack) ""","lane_fallback":true""" else "") +
         (if (missing.nonEmpty) s""","lane_recovered":${missing.size}""" else "")))
@@ -214,8 +207,7 @@ object Bench {
     *    graph/seed-panel lane lives on.
     * The line is emitted into the same jsonl as the query lines (one per
     * lane — each lane JVM calibrates itself) and `tools/bench_delta.py`
-    * prints old vs new next to the totals. Skippable for one-off
-    * profiling with SPARK_GRAFT_CALIBRATE=off. */
+    * prints old vs new next to the totals. */
   private def calibrationLine(spark: SparkSession, lane: String): String = {
     import org.apache.spark.sql.functions.{col, expr, md5}
     def time(f: => Unit): Double = {
@@ -244,7 +236,7 @@ object Bench {
     val t1 = time(md5Burn(8000000))
     val tp = time(parBurn(96000000L))
     val ts = time(shuffleBurn(20000000L))
-    s"""{"metric":"calibration","lane":"$lane","md5_1core_sec":${r(t1)},"md5_par_sec":${r(tp)},"shuffle_20m_sec":${r(ts)},"unit":"sec"}"""
+    s"""{"metric":"calibration","lane":"$lane","md5_1core_sec":${fmt(t1)},"md5_par_sec":${fmt(tp)},"shuffle_20m_sec":${fmt(ts)},"unit":"sec"}"""
   }
 
   private def runSuite(onlyOverride: Option[Set[String]] = None,
@@ -254,9 +246,7 @@ object Bench {
     val spark = Session(Session.cores)
     // Calibrate FIRST, on a fresh JVM/session — before any query state
     // accretes (each lane child calibrates itself; see calibrationLine).
-    val calLine =
-      if (sys.env.getOrElse("SPARK_GRAFT_CALIBRATE", "on") == "off") None
-      else Some(calibrationLine(spark, sys.env.getOrElse("SPARK_GRAFT_LANE", "main")))
+    val calLine = calibrationLine(spark, sys.env.getOrElse("SPARK_GRAFT_LANE", "main"))
     // Optional comma-separated query-name filter for profiling one query
     // at a time while iterating (driver runs never set it → lane mode).
     val only = onlyOverride.orElse(sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet))
@@ -286,11 +276,14 @@ object Bench {
     //     queries per rep and the per-query MEDIAN sheds it.
     // Each query line reports its suite positions per rep, so a reader
     // can still correlate a spiked max with where in the suite it ran.
-    val resetMode = sys.env.getOrElse("SPARK_GRAFT_RESET", "gc")
-    def resetBetweenQueries(): Unit = if (resetMode != "none") {
+    // One timed run after the reset; a throw times as NaN.
+    def resetAndTime(name: String): Double = {
       spark.catalog.clearCache()
       System.gc() // triggers ContextCleaner on dereferenced shuffles/blocks
       Thread.sleep(150) // let the async cleaner drain OFF the timed clock
+      val t0 = System.nanoTime()
+      try { run(queries(name)); (System.nanoTime() - t0) / 1e9 }
+      catch { case _: Throwable => Double.NaN }
     }
     // Warmup pass: JIT/codegen compilation and parquet footer reads dominate
     // a cold first query (~6s vs ~0.3s steady state); measure steady state.
@@ -311,11 +304,7 @@ object Bench {
     for (rep <- 1 to reps) {
       val order = new scala.util.Random(rep * 0x9E3779B9L).shuffle(names)
       order.zipWithIndex.foreach { case (name, i) =>
-        resetBetweenQueries()
-        val t0 = System.nanoTime()
-        val t = try { run(queries(name)); (System.nanoTime() - t0) / 1e9 }
-                catch { case _: Throwable => Double.NaN }
-        timesByQuery(name) = timesByQuery.getOrElse(name, Vector()) :+ t
+        timesByQuery(name) = timesByQuery.getOrElse(name, Vector()) :+ resetAndTime(name)
         posByQuery(name) = posByQuery.getOrElse(name, Vector()) :+ i
       }
     }
@@ -330,13 +319,7 @@ object Bench {
       val times = timesByQuery(name)
       if (!times.exists(_.isNaN) && times.min > 0 && times.max > 2 * times.min) {
         rerun += name
-        (1 to reps).foreach { _ =>
-          resetBetweenQueries()
-          val t0 = System.nanoTime()
-          val t = try { run(queries(name)); (System.nanoTime() - t0) / 1e9 }
-                  catch { case _: Throwable => Double.NaN }
-          timesByQuery(name) = timesByQuery(name) :+ t
-        }
+        (1 to reps).foreach(_ => timesByQuery(name) = timesByQuery(name) :+ resetAndTime(name))
       }
     }
     val results = names.map { name =>
@@ -361,13 +344,13 @@ object Bench {
       val (med, mn, mx) = results(k)
       val pos = posByQuery(k).mkString("[", ",", "]")
       val rr = if (rerun(k)) s""","rerun":true,"reps_total":${timesByQuery(k).size}""" else ""
-      s"""{"metric":"query","name":"$k","value":${r(med)},"min":${r(mn)},"max":${r(mx)},"reps":$reps$rr,"pos":$pos,"unit":"sec"}"""
+      s"""{"metric":"query","name":"$k","value":${fmt(med)},"min":${fmt(mn)},"max":${fmt(mx)},"reps":$reps$rr,"pos":$pos,"unit":"sec"}"""
     }
     val orderedNames = results.toSeq
       .sortBy { case (_, (med, _, _)) => (med < 0, med) }.map(_._1)
-    val summary = summaryLine(results, reps, resetMode, sfDir, None)
+    val summary = summaryLine(results, reps, sfDir, None)
     if (!quiet) {
-      calLine.foreach(println)
+      println(calLine)
       orderedNames.foreach(k => println(queryLine(k)))
       println(summary)
     }
@@ -377,7 +360,7 @@ object Bench {
     val benchOut = benchOutOverride.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/full_latest.jsonl"))
     if (benchOut != "none")
-      writeLines(benchOut, calLine.toSeq ++ orderedNames.map(queryLine) :+ summary)
+      writeLines(benchOut, calLine +: orderedNames.map(queryLine) :+ summary)
     spark.stop()
   }
 }

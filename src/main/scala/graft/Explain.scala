@@ -1,16 +1,26 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 
-/** Dumps `explain("formatted")` for EVERY registry query to PLANS.md —
-  * the plan-shape evidence behind the 100 TB design claims (pushdown,
-  * pruning, broadcast choices, partial aggregation, codegen spans).
-  * The query list is derived from `SparkEntry.queries` (round-6 judge
-  * finding: a fixed headline list went stale — the queries whose plans
-  * carried that round's story, d1/d5/x12/v1, were never in it), the
-  * headline subset below contributes one-line WHY annotations, and the
-  * output is stamped with the git commit it describes. Regenerate per
-  * round: `sbt "runMain graft.Explain [sfDir]"`. */
+/** Dumps `explain("formatted")` for registry queries, in two forms:
+  *
+  *   sbt "runMain graft.Explain [sfDir]"
+  *
+  * writes EVERY registry query to PLANS.md — the plan-shape evidence
+  * behind the 100 TB design claims (pushdown, pruning, broadcast
+  * choices, partial aggregation, codegen spans). The query list is
+  * derived from `SparkEntry.queries` (round-6 judge finding: a fixed
+  * headline list went stale — the queries whose plans carried that
+  * round's story, d1/d5/x12/v1, were never in it), the headline subset
+  * below contributes one-line WHY annotations, and the output is
+  * stamped with the git commit it describes. Regenerate per round.
+  *
+  *   sbt "runMain graft.Explain <sfDir> <outDir> <suffix> <q1,q2,...>"
+  *
+  * writes `<outDir>/<query>_<suffix>.txt` for a NAMED subset — the
+  * per-query before/after plan evidence an optimization round commits
+  * under `plans/rNN/` (the diff story for the queries a round touched). */
 object Explain {
   private val Headline = Seq(
     "q1_pricing_summary" -> "scan→filter→partial+final agg→sort; pushdown + codegen",
@@ -66,10 +76,34 @@ object Explain {
       else head.take(12)
     } catch { case _: Exception => "unknown" }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Session(4)
+  private val Usage = "usage: Explain [sfDir] | Explain <sfDir> <outDir> <suffix> <q1,q2,...>"
 
+  /** The formatted physical plan of one registry query. */
+  private def plan(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
+  def main(args: Array[String]): Unit = {
+    require(args.length <= 1 || args.length == 4, Usage)
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val named = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val unknown = named.getOrElse(Nil).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val spark = Session(4)
+    named.fold(writePlansMd(spark, sfDir))(writeEach(spark, sfDir, args(1), args(2), _))
+    spark.stop()
+  }
+
+  private def writeEach(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan(spark, sfDir, name))
+      println(s"[explain] wrote $outDir/${name}_$suffix.txt")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String): Unit = {
     val why = Headline.toMap
     // Headline (annotated) queries first, then the rest of the registry
     // alphabetically — the full surface, so no query's plan history can
@@ -90,13 +124,8 @@ object Explain {
     names.foreach { name =>
       sb.append(s"\n## $name\n\n")
       why.get(name).foreach(w => sb.append(s"_${w}_\n\n"))
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        sb.append("```\n")
-        sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        sb.append("```\n")
-      } catch {
+      try sb.append(s"```\n${plan(spark, sfDir, name)}```\n")
+      catch {
         case e: Throwable =>
           failed += 1
           sb.append(s"PLAN UNAVAILABLE: ${e.getClass.getSimpleName}: ${e.getMessage}\n")
@@ -104,6 +133,5 @@ object Explain {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[explain] wrote PLANS.md (${names.size} plans, $failed unavailable)")
-    spark.stop()
   }
 }

@@ -44,7 +44,7 @@ object IncProbe {
   }
 
   private def emit(op: String, factor: Int, sec: Double, extra: String = ""): Unit =
-    println(f"""{"probe":"inc","op":"$op","factor":$factor,"sec":$sec%.3f$extra}""")
+    println(s"""{"probe":"inc","op":"$op","factor":$factor,"sec":${Bench.fmt(sec)}$extra}""")
 
   def main(args: Array[String]): Unit = {
     val maxFactor = args.headOption.map(_.toInt).getOrElse(10)
@@ -535,7 +535,7 @@ object IncProbe {
         }
         assert(tops.size == m)
         words.unpersist()
-        emit("bpe_train", m, sec, f""","sec_per_round":${sec / m}%.4f""")
+        emit("bpe_train", m, sec, s""","sec_per_round":${Bench.fmt(sec / m, 4)}""")
       }
     }
 

@@ -924,7 +924,7 @@ object ScaleProbe {
         val rows = run()
         val sec = (System.nanoTime() - t0) / 1e9
         sweep()
-        println(f"""{"probe":"scale","factor":$f,"query":"$q","sec":$sec%.3f,"rows":$rows}""")
+        println(s"""{"probe":"scale","factor":$f,"query":"$q","sec":${Bench.fmt(sec)},"rows":$rows}""")
       }
     }
     spark.stop()

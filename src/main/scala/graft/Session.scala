@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * timestamps read as longs (events.parquet carries TIMESTAMP(NANOS),
   * which the Spark 4 reader rejects; `Tables.events` rescales them).
   *
-  * Mains size their session with [[cores]]. Explain, ExplainOne and the
-  * specs pin 4, so PLANS.md and plan assertions keep one partition count
+  * Mains size their session with [[cores]]. Explain and the specs pin
+  * 4, so PLANS.md and plan assertions keep one partition count
   * whatever the host. */
 object Session {
 

@@ -43,7 +43,6 @@ object Bloom {
   val MBits: Int = 1 << 22
   /** Hash functions per gram. */
   val K = 3
-  private val Words = MBits / 64
   /** Flagging threshold on the per-doc hit fraction. */
   val FracThreshold = 0.05
 

@@ -55,13 +55,6 @@ object Graph {
     * a parameter. */
   private val Rounds = 3
 
-  /** Distinct (order, part) pairs — collapses duplicate lines of the same
-    * part inside one order before the self-join. */
-  private def orderParts(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .distinct()
-
   /** Directed co-occurrence edges (both directions), deduplicated.
     * Aggregate-built like [[undirected]] (optimization r16): one
     * ok-keyed collect_set exchange (map-side dedup) + bounded in-row
@@ -712,7 +705,8 @@ object Graph {
 
   /** Round cap for the REGISTERED converged-tier query — the oracle
     * unrolls exactly this many CTE rounds, so it must stay small; the
-    * ConvergeProbe measured stability at round 7 on this graph family
+    * round-11 convergence probe (`bench/convergeprobe_r11.jsonl`)
+    * measured stability at round 7 on this graph family
     * (rounds-to-convergence is a structure property, flat across
     * factors), so 10 carries headroom without an unbounded oracle. */
   private val LpaMaxRounds = 10
@@ -1021,9 +1015,10 @@ object Graph {
     "x81_sssp_weighted",
     s"x81: $SsspRounds-round Bellman-Ford multi-source shortest paths (cost = 1000 div cooc + 1)",
     ssspOracle) { (s, dir) =>
-    // aggregate-built like coEdges (optimization r16): orderParts is
-    // distinct, so each ordered pair appears once per containing order
-    // and the (src, dst) count equals the former self-join's cooc
+    // aggregate-built like coEdges (optimization r16): collect_set makes
+    // each order's parts distinct, so each ordered pair appears once per
+    // containing order and the (src, dst) count equals the former
+    // self-join's cooc
     val wedges = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))

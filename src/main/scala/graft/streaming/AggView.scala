@@ -191,7 +191,7 @@ object AggView {
   private def computeDeltas(spark: SparkSession, batch: DataFrame,
       storeDir: String, keys: Seq[String], orderCol: String,
       groupCols: Seq[String], sumCols: Seq[String],
-      minMaxCols: Seq[String] = Nil): DataFrame = {
+      minMaxCols: Seq[String]): DataFrame = {
     val g = groupCols.map(col)
     def mmAgg(rows: DataFrame, prefix: String): DataFrame = {
       val aggs = minMaxCols.flatMap(m => Seq(
@@ -325,8 +325,8 @@ object AggView {
     * the retraction rescan (never read on the common path). */
   private def applyDeltas(spark: SparkSession, deltas: DataFrame,
       viewDir: String, groupCols: Seq[String], sumCols: Seq[String],
-      numBuckets: Int, minMaxCols: Seq[String] = Nil,
-      storeDir: String = null): Unit = {
+      numBuckets: Int, minMaxCols: Seq[String],
+      storeDir: String): Unit = {
     // Honor the view's pinned bucket count (fixed at creation; a later
     // different argument must not silently re-hash groups).
     val pinned = BucketStore.pinnedBuckets(spark, viewDir)

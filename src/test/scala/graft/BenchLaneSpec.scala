@@ -39,4 +39,11 @@ class BenchLaneSpec extends AnyFunSuite {
     assert(r13.subsetOf(Bench.graphLane),
       s"lane lost r13 members: ${r13 -- Bench.graphLane}")
   }
+
+  test("jsonl numbers keep a decimal point under a comma-decimal locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try assert(Bench.fmt(1.5) === "1.500")
+    finally java.util.Locale.setDefault(saved)
+  }
 }

@@ -139,6 +139,10 @@ class StreamingSpec extends SparkSuite {
     // grain holds: no (user, day) duplicated
     assert(afterSecond.groupBy("user_id", "day").count().filter($"count" > 1).isEmpty)
 
+    // a re-run with no new file is a no-op
+    WeeklyFeed.runFeed(spark, flat, store, cp1).awaitTermination()
+    assert(graft.model.VersionedStore.read(spark, store).count() === afterSecond.count())
+
     // idempotence: replaying everything into a fresh checkpoint+store
     // converges to the same state
     val store2 = tmpDir("store2") + "/snap"

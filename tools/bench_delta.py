@@ -110,7 +110,7 @@ def main():
         lines.append("")
     else:
         lines.append("- no calibration lines in either jsonl "
-                     "(pre-r15 bench, or SPARK_GRAFT_CALIBRATE=off)")
+                     "(pre-r15 bench)")
         lines.append("")
 
     lines.append("## Slowest 10 (new run)")
