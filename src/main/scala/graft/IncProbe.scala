@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.{AggView, BitmapFeed, BlockDedupFeed, Cdc, CmsFeed, KmvFeed}
+import graft.Materialize.MaterializeOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -525,7 +526,7 @@ object IncProbe {
     // depth for 256 rounds; per-round cost must stay flat because each
     // round runs on the word table only.
     section("bpe") {
-      val corpus10 = ScaleProbe.corpus(spark, base, 10).localCheckpoint()
+      val corpus10 = ScaleProbe.corpus(spark, base, 10).materialized
       Seq(8, 64, 256).foreach { m =>
         val (words, tops) = graft.ext.Bpe.train(corpus10, m) // includes warm JIT from prior sizes
         val sec = time {
@@ -534,7 +535,7 @@ object IncProbe {
           assert(t2.size == m)
         }
         assert(tops.size == m)
-        words.unpersist()
+        Materialize.release(words)
         emit("bpe_train", m, sec, s""","sec_per_round":${Bench.fmt(sec / m, 4)}""")
       }
     }
@@ -552,12 +553,12 @@ object IncProbe {
     // K ratio is the expected ceiling on the time ratio.
     section("probek") {
       val emb = Tables.embeddings(spark, base)
-      val vq = graft.ext.Ivf.quantized(emb).localCheckpoint()
+      val vq = graft.ext.Ivf.quantized(emb).materialized
       val bigK = graft.ext.SemDedup.cellsFor(emb.count(), c = 2)
       Seq(graft.ext.Ivf.K, bigK).distinct.foreach { k =>
         val bits = graft.ext.SemDedup.cellBitsFor(k)
         val cents = graft.ext.Ivf.refinedCentroids(vq, graft.ext.Ivf.LloydIters, k, bits)
-          .localCheckpoint()
+          .materialized
         def probeOnce(): Unit =
           graft.ext.Ivf.topNCells(vq, cents, graft.ext.SemDedup.NProbe, bits)
             .write.format("noop").mode("overwrite").save()

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scaling probe (`runMain graft.ScaleProbe [maxFactor]`):
-  * synthesizes corpora at 1×/4×/10× the sf0.1 tables and times the
-  * headline operators at each size, printing one JSON line per
-  * (factor, query). SCALING.md records the measured curves.
+/** Empirical scaling probe (`runMain graft.ScaleProbe [factors] [queries]`):
+  * synthesizes corpora at each factor (default 1,4,10) of the sf0.1
+  * tables and times the headline operators at each size, printing one
+  * JSON line per (factor, query). SCALING.md records the measured curves.
   *
   * Document corpus: copy k is a BIJECTIVE token rename of the base
   * corpus (every token suffixed `_k`), so each copy is an isomorphic
@@ -137,12 +137,10 @@ object ScaleProbe {
     shifted(Tables.part(spark, baseDir), Seq("p_partkey"), factor)
 
   def main(args: Array[String]): Unit = {
-    // 1st arg: either a single max factor (probed as 1,4,max — the
-    // historical form) or an explicit comma-separated factor list
-    // ("1,4,10,20" — the round-11 tail-diagnosis form).
+    // 1st arg: the comma-separated factors to probe ("1,4,10,20"; "1"
+    // is 1× alone)
     val factors = args.headOption
       .map(_.split(",").map(_.trim.toInt).toSeq)
-      .map(fs => if (fs.size == 1) Seq(1, 4, fs.head) else fs)
       .getOrElse(Seq(1, 4, 10))
       .distinct
     // Optional 2nd arg: comma-separated query filter (fast re-probe of a

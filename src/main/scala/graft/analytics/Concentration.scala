@@ -1,6 +1,7 @@
 package graft.analytics
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,7 +54,7 @@ object Concentration {
         col("ck") === col("c_custkey"))
       .select(col("c_mktsegment").as("mktsegment"), col("x"), col("ck"))
       .withColumn("bkt", expr(s"shiftright(x, $BktBits)"))
-      .localCheckpoint() // slim per-customer frame; the rank/prefix
+      .materialized // slim per-customer frame; the rank/prefix
                          // machinery reads it twice (offsets agg + window)
   }
 
@@ -232,7 +233,7 @@ object Concentration {
       .select(col("rf"), col("rm"))
       .withColumn("b", expr(s"(rf - 1) div $KtB"))
       .withColumn("v", expr(s"(rm - 1) div $KtB"))
-      .localCheckpoint()
+      .materialized
     val l = ranked.select(col("b").as("b1"), col("v").as("v1"),
       col("rf").as("rf1"), col("rm").as("rm1"))
     val r = ranked.select(col("b").as("b2"), col("v").as("v2"),
@@ -332,8 +333,7 @@ object Concentration {
     // checkpointed: read three ways (per-segment counts + both rank-probe
     // join sides) — without the cut each consumer re-derived the whole
     // rank pipeline (the pre-r16 plan held 24 parquet scans)
-    val ranked = rankedSpend(s, dir).select(col("mktsegment"), col("x"), col("rnk"))
-      .localCheckpoint()
+    val ranked = Materialize(rankedSpend(s, dir).select(col("mktsegment"), col("x"), col("rnk")))
     val n = ranked.groupBy(col("mktsegment")).agg(count(lit(1)).as("n"))
     val k = n
       .withColumn("qnum", explode(array(lit(1L), lit(2L), lit(3L))))

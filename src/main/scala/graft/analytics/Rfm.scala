@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,7 +57,7 @@ object Rfm {
     * order over the same row set). */
   private[analytics] def exactRanks(df: DataFrame,
       specs: Seq[(Column, Int, String)]): DataFrame = {
-    val cp = df.localCheckpoint()
+    val cp = Materialize(df)
     graft.ext.SegmentedRank.withGlobalRanks(cp,
       specs.map { case (key, shift, out) =>
         (shiftright(key.cast("long"), shift), Seq(key.cast("long"), col("ck")), out)

@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,7 +41,7 @@ import org.apache.spark.sql.functions._
   * replace under a 1-row broadcast. M rounds = M tiny shuffles that
   * never touch the corpus again — at 100 TB the word table is ~10⁻⁶ of
   * the input, which is why BPE trainers run on word counts, not raw
-  * text. Each round is localCheckpoint'd: the table is tiny and the
+  * text. Each round is materialized: the table is tiny and the
   * alternative is 2^M-deep lineage re-running every prior round.
   *
   * Precondition: the pair inventory must survive M rounds (true for any
@@ -79,9 +80,10 @@ object Bpe {
 
   /** Run the `merges`-round training loop: returns the final merged
     * word table (w, freq, repr) and each round's 1-row argmax frame.
-    * Each round is localCheckpoint'd — the tables are tiny (bounded by
+    * Each round is materialized — the tables are tiny (bounded by
     * distinct-word count and 1 row respectively) and the alternative is
-    * exponentially deep lineage re-running every prior round.
+    * exponentially deep lineage re-running every prior round. Each
+    * superseded word table is released.
     *
     * Each round ASSERTS its argmax frame is non-empty (round-8 advice):
     * if the pair inventory runs dry before round `merges`, an empty
@@ -89,31 +91,31 @@ object Bpe {
     * silently emit fewer than M rows and x45b an empty encode, and the
     * oracle reproduces the same degenerate output, so nothing downstream
     * catches the violated precondition. The count is free: the frame is
-    * already localCheckpoint'd (materialized) and holds ≤ 1 row. */
+    * already materialized and holds ≤ 1 row. */
   private[graft] def train(docs: DataFrame,
       merges: Int = Merges): (DataFrame, Seq[DataFrame]) = {
-    var words = docs
+    val seed = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(col("w"), col("freq"), charRepr(col("w")).as("repr"))
-      .localCheckpoint()
-    val tops = (1 to merges).map { r =>
+      .materialized
+    val tops = Seq.newBuilder[DataFrame]
+    val (words, _) = Materialize.fixpoint(seed, merges) { (words, r) =>
       val top = pairs(words)
         .groupBy(col("a"), col("b")).agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .localCheckpoint()
+        .materialized
       require(top.count() == 1L,
         s"BPE pair inventory ran dry at round $r of $merges: every word is " +
           "a single symbol — lower the merge count for this corpus")
-      words = words.crossJoin(broadcast(top))
+      tops += top
+      words.crossJoin(broadcast(top))
         .select(col("w"), col("freq"),
           replace(col("repr"),
             concat(lit("["), col("a"), lit("]["), col("b"), lit("]")),
             concat(lit("["), col("a"), col("b"), lit("]"))).as("repr"))
-        .localCheckpoint()
-      top
     }
-    (words, tops)
+    (words, tops.result())
   }
 
   /** x45: the learned merge table after [[Merges]] BPE rounds. Bounded

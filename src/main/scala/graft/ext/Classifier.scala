@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -198,8 +198,8 @@ object Classifier {
     * twin of the `csc` CTE in [[clfOracleCtes]]. */
   private[graft] def scoredFrame(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val f = featFrame(docs).localCheckpoint() // slim (doc, bucket) frame
-    val l = labelFrame(docs).localCheckpoint()
+    val f = Materialize(featFrame(docs)) // slim (doc, bucket) frame
+    val l = Materialize(labelFrame(docs))
     val (sampIds, ws, bs) = train(s, l, f)
     val wlit = typedlit(ws.toSeq)
     val fs = f.select(col("doc_id"),

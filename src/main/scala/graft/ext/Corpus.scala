@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -445,7 +446,7 @@ object Corpus {
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .withColumn("negs", -col("score"))
       .withColumn("__seg", floor(col("negs") * 4096).cast("long"))
-      .localCheckpoint()
+      .materialized
     val ranked = SegmentedRank.withGroupedRank(sc, Seq("lang"), "__seg",
       Seq(col("negs"), col("doc_id")), "rnk")
     // per-language scored-doc totals: every doc with ≥2 tokens yields

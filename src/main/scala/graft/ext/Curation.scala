@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -194,9 +194,7 @@ object Curation {
     // per-decile and first-occurrence aggs below both read it, and
     // re-deriving x180's two segmented scans per consumer doubles the
     // schedule cost (the x170 slim-frame pattern)
-    val sched = curriculumOrder.fn(s, dir)
-      .select(col("doc_id"), col("position"))
-      .localCheckpoint()
+    val sched = Materialize(curriculumOrder.fn(s, dir).select(col("doc_id"), col("position")))
     val n = sched.agg(max(col("position")).as("n"))
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))

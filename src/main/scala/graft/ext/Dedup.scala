@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -277,7 +278,7 @@ object Dedup {
     * diameter (near-dup clusters are tiny; 8 is generous). At real
     * petabyte scale the same loop with the large-star/small-star edge
     * rewrite (Kiveris et al.) converges in O(log n) rounds; lineage is
-    * cut with localCheckpoint mid-loop exactly as here. */
+    * cut by materializing each round exactly as here. */
   /** The [[CcRounds]]-deep min-label CTE chain (`l0`..`l$CcRounds`) over
     * an `edges(u, v)` CTE the caller provides — the SQL twin of
     * [[ccLabels]], shared by the x16/x16b/x48 oracles and x192c's
@@ -313,23 +314,24 @@ object Dedup {
     * NOTE: the per-round isEmpty action means building this DataFrame
     * EXECUTES the loop (driver-coordinated iteration, as in any CC
     * implementation); plan audits over the returned frame see the final
-    * labels behind checkpoints, not the loop's (all equi-) joins. */
+    * labels behind checkpoints, not the loop's (all equi-) joins.
+    * Superseded rounds are released; the returned labels are a view over
+    * the last one, which the caller holds. */
   private[graft] def ccLabels(edges: DataFrame): DataFrame = {
-    var labels = edges.select(col("u").as("v"), col("u").as("comp")).distinct()
-    var round = 0
-    var converged = false
-    while (round < CcRounds && !converged) {
-      round += 1
+    // each generation keeps its input label (comp) next to the new one
+    // (comp2): materialized once, it feeds the check AND the next round
+    def next(gen: DataFrame) = gen.select(col("v"), col("comp2").as("comp"))
+    val seed = edges.select(col("u").as("v"), col("u").as("comp")).distinct()
+    val (last, _) = Materialize.fixpoint(seed, CcRounds,
+        (_, gen) => gen.filter(col("comp2") < col("comp")).isEmpty) { (gen, round) =>
+      val labels = if (round == 1) gen else next(gen)
       val nbrMin = edges.join(labels.select(col("v").as("u"), col("comp")), "u")
         .groupBy(col("v")).agg(min(col("comp")).as("nbr"))
-      val stepped = labels.join(nbrMin, Seq("v"), "left")
+      labels.join(nbrMin, Seq("v"), "left")
         .select(col("v"), col("comp"),
           least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp2"))
-        .localCheckpoint() // materialized once: feeds the check AND the next round
-      converged = stepped.filter(col("comp2") < col("comp")).isEmpty
-      labels = stepped.select(col("v"), col("comp2").as("comp"))
     }
-    labels
+    next(last)
   }
 
   val dedupClusters = Q.withOracle(
@@ -341,8 +343,7 @@ object Dedup {
        |FROM l$CcRounds ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val pairs = scoredPairs(s, dir).filter(col("jac") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"))
-    val edges = symmetrize(pairs)
-      .localCheckpoint() // computed once, read by every round
+    val edges = Materialize(symmetrize(pairs)) // computed once, read by every round
     ccLabels(edges)
       .select(col("v").as("doc_id"), col("comp").as("cluster_id"),
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -410,7 +411,7 @@ object Dedup {
     // duplicate pairs, the initial fingerprint over the multiset could
     // only FAIL to match round 1's distinct-ed fingerprint — one wasted
     // round, never a wrong fixpoint, and the oracle gates the answer.)
-    var edges = symmetrize(pairs).localCheckpoint()
+    val seed = symmetrize(pairs).materialized
     // Fixpoint detection by (count, bit_xor of edge hashes): edge sets are
     // distinct-ed every round, so equal fingerprints mean equal sets (xor
     // collision odds 2^-64, and the DuckDB oracle still gates the final
@@ -423,17 +424,14 @@ object Dedup {
       import e.sparkSession.implicits._
       e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).as[(Long, Option[Long])].head()
     }
-    var fp = fingerprint(edges)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 20) { // 20 ≈ log2 of any plausible n; the
-      rounds += 1                       // fixpoint check is the real stop
-      val next = starDoubleRound(edges).localCheckpoint()
+    var fp = fingerprint(seed)
+    // 20 ≈ log2 of any plausible n; the fixpoint check is the real stop
+    val (edges, _) = Materialize.fixpoint(seed, 20, { (_, next) =>
       val fpNext = fingerprint(next)
-      converged = fpNext == fp
+      val converged = fpNext == fp
       fp = fpNext
-      edges = next
-    }
+      converged
+    })((e, _) => starDoubleRound(e))
     // stars: a child's one neighbor is its center; a center's neighbors
     // are all larger children — least(min neighbor, self) labels both
     val labels = edges.groupBy(col("u")).agg(min(col("v")).as("mn"))
@@ -674,11 +672,11 @@ object Dedup {
        |LEFT JOIN mn ON c.comp = mn.comp
        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
     val shn = shingleHashesWithCount(Tables.documents(s, dir))
-      .localCheckpoint() // ONE corpus scan; the self-join reads this twice
+      .materialized // ONE corpus scan; the self-join reads this twice
     val pairs = scoredPairsFrom(shn).filter(col("jac") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"))
     val edges = symmetrize(pairs)
-      .localCheckpoint() // feeds the CC loop, the degree agg, the survivor rule
+      .materialized // feeds the CC loop, the degree agg, the survivor rule
     val labels = ccLabels(edges)
     val mins = labels.groupBy(col("comp")).agg(min(col("v")).as("m"))
     val deg = edges.groupBy(col("u").as("doc_id"))
@@ -707,13 +705,13 @@ object Dedup {
     "x27: simhash LSH bands → hamming-verified near-dup pairs (≤ 3)",
     simhashPairsOracle)(
     (s, dir) => {
-      // localCheckpoint: the banded self-join reads this table TWICE (sides
+      // Materialized: the banded self-join reads this table TWICE (sides
       // a and b), and without materialization each side re-runs x3's
       // 64-aggregate vote pass — measured ~2× the query's cost. The
       // checkpointed table is tiny ((doc_id, long) per doc), so this is
       // cheap insurance at any scale.
       val sh = simhash.fn(s, dir).select(col("doc_id"), col("simhash"))
-        .localCheckpoint()
+        .materialized
       val banded = sh.select(col("doc_id"), col("simhash"),
         explode(array((0 until SimhashBands).map { b =>
           struct(lit(b).as("band"),
@@ -918,8 +916,7 @@ object Dedup {
     s"x143: |minhash-estimate - exact-Jaccard| distribution over LSH candidates (integer eighth-bands)",
     calibrationOracle) { (s, dir) =>
     val docs = Tables.documents(s, dir)
-    val sig = signatures(docs)
-      .localCheckpoint() // read by banding AND twice by the agree join
+    val sig = Materialize(signatures(docs)) // read by banding AND twice by the agree join
     val cand = candidatePairs(sig)
     val agreeExpr = (0 until NumHashes)
       .map(j => when(col(s"a.mh$j") === col(s"b.mh$j"), 1L).otherwise(0L))
@@ -1005,7 +1002,7 @@ object Dedup {
          |FROM sz GROUP BY cfg_bands, cfg_rows ORDER BY cfg_bands""".stripMargin
     }) { (s, dir) =>
     val sig = signatures(Tables.documents(s, dir))
-      .localCheckpoint() // one signature pass feeds all six bandings
+      .materialized // one signature pass feeds all six bandings
     val banded = LshConfigs.map { case (b, r) =>
       val bands = explode(array((0 until b).map { bb =>
         val cols = (0 until r).map(i => col(s"mh${bb * r + i}").cast("string"))
@@ -1076,7 +1073,7 @@ object Dedup {
        |FROM wg, ec, tri""".stripMargin) { (s, dir) =>
     val e = scoredPairs(s, dir).filter(col("jac") >= JaccardThreshold)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint() // pair set read five ways below
+      .materialized // pair set read five ways below
     val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     val wg = deg.agg(count(lit(1)).cast("long").as("n_nodes"),
@@ -1219,14 +1216,14 @@ object Dedup {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
         md5(col("text")).as("h"))
-      .localCheckpoint() // ONE corpus text scan; all stages ride this slim frame
+      .materialized // ONE corpus text scan; all stages ride this slim frame
     val surv = d.groupBy(col("h")).agg(min(col("doc_id")).as("keep"))
     val j = d.join(surv, "h")
       .join(d.select(col("doc_id").as("keep"), col("source").as("keep_source")),
         "keep")
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
         (col("doc_id") === col("keep")).as("kept"), col("keep_source"))
-      .localCheckpoint() // doc-grain decisions read three ways below
+      .materialized // doc-grain decisions read three ways below
     val sav = j.groupBy(col("source")).agg(
       count(lit(1)).cast("long").as("n_docs"),
       sum(when(col("kept"), 1L).otherwise(0L)).cast("long").as("n_kept"),
@@ -1398,7 +1395,7 @@ object Dedup {
         col("text"), gateSortedLines(col("text")).as("ls"))
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
         md5(col("text")).as("h"), gateFromSorted(col("ls")).as("pass"))
-      .localCheckpoint() // ONE corpus text scan — md5 AND gate ride it
+      .materialized // ONE corpus text scan — md5 AND gate ride it
       // (two LAYERED projections, still one scan: the sorted-line array
       // must be an attribute under the gate's five references — see
       // gateSortedLines — or the interpreted HOF re-evaluates it per
@@ -1410,7 +1407,7 @@ object Dedup {
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
         col("pass"), (col("doc_id") === col("keep")).as("kept"),
         col("keep_source"))
-      .localCheckpoint() // doc-grain decisions read three ways below
+      .materialized // doc-grain decisions read three ways below
     val sav = j.groupBy(col("source")).agg(
       count(lit(1)).cast("long").as("n_docs"),
       sum(when(col("kept"), 1L).otherwise(0L)).cast("long").as("n_kept"),
@@ -1506,7 +1503,7 @@ object Dedup {
        |ORDER BY split_a, split_b""".stripMargin) { (s, dir) =>
     val e = scoredPairs(s, dir).filter(col("jac") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint() // pair relation read three ways below
+      .materialized // pair relation read three ways below
     val splitOf = (d: org.apache.spark.sql.Column) =>
       when(substring(md5(d.cast("string")), 1, 1).isin("0", "1"), "holdout")
         .otherwise("train")

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,7 +86,7 @@ object Drift {
       .agg(sum(lit(1L) - col("b")).cast("long").as("ca"),
         sum(col("b")).cast("long").as("cb"))
       .withColumn("bkt", expr(s"shiftright(v, $KsBktBits)"))
-      .localCheckpoint() // slim per-(type, value) counts; the prefix
+      .materialized // slim per-(type, value) counts; the prefix
                          // machinery reads it twice (offsets agg + window)
     // segmented cumulative counts + per-type totals via SegmentedRank's
     // shared core (in-bucket running sums + bucket-table prefix offsets,
@@ -315,7 +316,7 @@ object Drift {
       .agg(sum(lit(1L) - col("b")).cast("long").as("ca"),
         sum(col("b")).cast("long").as("cb"))
       .withColumn("bkt", expr(s"shiftright(v, $KsBktBits)"))
-      .localCheckpoint() // slim per-(type, value) counts; the prefix
+      .materialized // slim per-(type, value) counts; the prefix
                          // machinery reads it twice (offsets agg + window)
     // segmented prev-count: the SegmentedRank prefix core with the
     // EXCLUSIVE frame (rows strictly before the current value group)

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -142,7 +143,7 @@ object Frontend {
       .filter(col("r") > col("n") - expr("(n + 3) div 4"))
       .select(col("doc_id"), col("dscore"))
     val selected = clean.join(selIds, "doc_id")
-      .localCheckpoint() // read by the mix agg, the accept join, and x187b
+      .materialized // read by the mix agg, the accept join, and x187b
     val accepted = selected
       .join(Sampling.temperaturePipeline(selected.select(col("doc_id"), col("lang")))
         .filter(col("kept")).select(col("doc_id")), "doc_id")
@@ -186,7 +187,7 @@ object Frontend {
     // explodes) off the single task an unsplittable one-file scan yields
     // (Tables.withScanParallelism; no-op on splittable layouts).
     val slim = slimFrame(
-      Tables.withScanParallelism(s, Tables.documents(s, dir))).localCheckpoint()
+      Tables.withScanParallelism(s, Tables.documents(s, dir))).materialized
     val train = slim.filter(!col("holdout"))
     // stages 1+2: the page-local gates
     val gated = train.filter(col("c4k") && col("gpass"))
@@ -199,7 +200,7 @@ object Frontend {
     val cov = coveredPositions(trigramRows(deduped), holdoutGrams(slim))
       .groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("covered"))
     val clean = cleanFilter(deduped, cov)
-      .localCheckpoint() // read by the DSIR explode, the join-back, and x187b
+      .materialized // read by the DSIR explode, the join-back, and x187b
     // stage 5 input: the clean survivors' per-(doc, lang, bucket) bigram
     // counts — the shared Dsir occurrence explode over the checkpointed
     // token arrays (attributes, never re-inlined subtrees)

@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -82,12 +83,11 @@ object Fuzzy {
         |    i -> concat(substring(c_name, 1, i - 1),
         |                substring(c_name, i + 1, length(c_name))))))""".stripMargin))
       .as("k"))
-      .localCheckpoint() // one explode, three consumers (df table + both join sides)
+      .materialized // one explode, three consumers (df table + both join sides)
     // (key, df) table read twice (keep filter + guard counters) — the
     // checkpoint stops the corpus explode+agg from running once per
     // consumer
-    val dfk = keys.groupBy(col("k")).agg(count(lit(1)).as("df"))
-      .localCheckpoint()
+    val dfk = Materialize(keys.groupBy(col("k")).agg(count(lit(1)).as("df")))
     val keep = dfk.filter(col("df") <= MaxBucket).select(col("k"))
     // Guard telemetry (the HoltFeed n_ignored posture): the MaxBucket
     // guard SILENTLY empties pathologically-duplicated buckets by

@@ -1,7 +1,8 @@
 package graft.ext
 
-import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   *   - x59 PageRank: Pregel-style synchronous iteration expressed as K
   *     rounds of (edge ⋈ rank) + dst-keyed aggregation. The edge and
-  *     degree tables are materialized ONCE (localCheckpoint) and re-read
+  *     degree tables are materialized ONCE and re-read
   *     every round, so the per-round cost is one keyed shuffle join plus
   *     one aggregation — never a growing lineage. All arithmetic is
   *     integer-scaled (rank fixed-point at 1e12) so a DuckDB replay is
@@ -101,19 +102,23 @@ object Graph {
        |FROM r$Rounds ORDER BY pr DESC, part LIMIT 100""".stripMargin
   }
 
-  /** Full (part, pr) rank table after [[Rounds]] synchronous rounds —
-    * the registered query takes its deterministic top-100; specs read the
-    * whole table (mass conservation is a global invariant). */
-  def pagerankFull(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coEdges(s, dir).localCheckpoint() // degree agg + the adj build
-    val deg = pairs.groupBy(col("src")).agg(count(lit(1)).as("d")).localCheckpoint()
+  /** [[Rounds]] synchronous fixed-point rank rounds from `start(v)`, each
+    * adding `teleport(v)` to the damped in-neighbor sum (x59: every node,
+    * x148: its seeds). `finish`'s result is materialized, then the E-row
+    * edge and degree tables are released: repeated invocations (a
+    * probe's warm+timed runs) otherwise ACCUMULATE them, the storage
+    * pressure the round-11 20× probe OOM'ed on. */
+  private def rankRounds(s: SparkSession, dir: String, start: Column => Column,
+      teleport: Column => Column)(finish: DataFrame => DataFrame): DataFrame = {
+    val pairs = coEdges(s, dir).materialized // degree agg + the adj build
+    val deg = pairs.groupBy(col("src")).agg(count(lit(1)).as("d")).materialized
     // Round-invariant degree-annotated adjacency (optimization r16):
     // joined ONCE and checkpointed, so each round is adj ⋈ ranks + the
     // dst aggregation — the former per-round pairs ⋈ deg pass over E
     // rows is paid a single time.
-    val adj = pairs.join(broadcast(deg), "src").localCheckpoint()
-    pairs.unpersist() // adj supersedes the raw edge checkpoint
-    var ranks = deg.select(col("src").as("v"), lit(RScale).as("r"))
+    val adj = pairs.join(broadcast(deg), "src").materialized
+    Materialize.release(pairs) // adj supersedes the raw edge checkpoint
+    var ranks = deg.select(col("src").as("v"), start(col("src")).as("r"))
     for (_ <- 1 to Rounds) {
       val contrib = adj
         .join(broadcast(ranks), col("src") === col("v"))
@@ -127,21 +132,21 @@ object Graph {
         .select(col("src").as("v"))
         .join(contrib, col("v") === col("dst"), "left")
         .select(col("v"),
-          (lit(RScale * 15 / 100) + expr(
+          (teleport(col("v")) + expr(
             s"CAST(($DampNum * coalesce(m, CAST(0 AS DECIMAL(38,0)))) div 100 AS BIGINT)"))
             .as("r"))
     }
-    // Materialize the final ranks (N rows) and release the edge/degree
-    // checkpoints (E rows) they were built from: repeated invocations —
-    // a probe's warm+timed runs, a bench's reps — otherwise ACCUMULATE
-    // E-row block-manager generations per call, the storage-pressure
-    // tail the round-11 20× probe OOM'ed on. One N-row block per
-    // invocation remains for the ContextCleaner.
-    val out = ranks.select(col("v").as("part"), col("r").as("pr")).localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
+    val out = finish(ranks).materialized
+    Materialize.release(adj, deg)
     out
   }
+
+  /** Full (part, pr) rank table after [[Rounds]] synchronous rounds —
+    * the registered query takes its deterministic top-100; specs read the
+    * whole table (mass conservation is a global invariant). */
+  def pagerankFull(s: SparkSession, dir: String): DataFrame =
+    rankRounds(s, dir, _ => lit(RScale), _ => lit(RScale * 15 / 100))(
+      _.select(col("v").as("part"), col("r").as("pr")))
 
   /** x59: K-round integer-fixed-point PageRank over the part
     * co-occurrence graph; edges + degrees checkpointed once, each round
@@ -197,7 +202,7 @@ object Graph {
           |    y -> struct(ps[i] AS u, y AS v))))""".stripMargin)).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
-      .localCheckpoint()
+      .materialized
   }
 
   /** Orient an undirected (u, v) edge set low→high in the packed
@@ -251,8 +256,8 @@ object Graph {
     // edge counts read off o directly - ONE edge construction total
     val e = undirected(s, dir)
     val o = orientEdgeSet(e)
-      .localCheckpoint() // pivot of both wedge sides, the closure probe, and the counts
-    e.unpersist() // o is materialized; keep ONE edge generation, not two
+      .materialized // pivot of both wedge sides, the closure probe, and the counts
+    Materialize.release(e) // o is materialized; keep ONE edge generation, not two
     val tri = countTriangles(o).select(col("t").as("n_triangles"))
     val nn = o.select(explode(array(col("src"), col("dst"))).as("p")).distinct()
       .agg(count(lit(1)).cast("long").as("n_nodes"))
@@ -339,10 +344,9 @@ object Graph {
       .filter(keep)
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
-      .localCheckpoint() // orientation reads it three times (degrees + both join sides)
-    val o = orientEdgeSet(sampled)
-      .localCheckpoint() // pivot of both wedge sides + the closure probe
-    sampled.unpersist() // o is materialized; keep ONE edge generation
+      .materialized // orientation reads it three times (degrees + both join sides)
+    val o = Materialize(orientEdgeSet(sampled)) // pivot of both wedge sides + the closure probe
+    Materialize.release(sampled) // o is materialized; keep ONE edge generation
     val tri = countTriangles(o)
     val ne = o.agg(count(lit(1)).cast("long").as("n_sampled_edges"))
     ne.crossJoin(tri) // two 1-row scalars
@@ -381,35 +385,39 @@ object Graph {
        |FROM d$Hops GROUP BY hop ORDER BY hop""".stripMargin
   }
 
-  /** x63: multi-source BFS hop histogram — [[Hops]] rounds of frontier
-    * join + min-hop aggregation over the co-occurrence graph; only the
-    * CURRENT frontier joins edges each round, never the full label
-    * table. */
-  val bfs = Q.withOracle(
-    "x63_bfs_hops",
-    s"x63: $Hops-hop multi-source BFS reach histogram (seeds: part % $SeedMod = 0)",
-    bfsOracle) { (s, dir) =>
-    val pairs = coEdges(s, dir).localCheckpoint() // read once per round
-    // the edge set is symmetrized, so src alone covers every node
-    var dist = pairs.select(col("src").as("v")).distinct()
-      .filter(col("v") % SeedMod === 0)
-      .select(col("v"), lit(0).as("hop"))
-      .localCheckpoint()
-    for (k <- 1 to Hops) {
+  /** `hops` rounds of min-hop frontier BFS over the materialized edge
+    * table from `seeds` (`walk` columns, v, hop = 0): only the CURRENT
+    * frontier joins edges each round, never the full label table. */
+  private def bfsLabels(pairs: DataFrame, seeds: DataFrame, hops: Int,
+      walk: Seq[String] = Nil): DataFrame = {
+    val (dist, _) = Materialize.fixpoint(seeds, hops) { (dist, k) =>
       // frontier side pinned broadcast (optimization r16): the N-row
       // node table is the side a cluster broadcasts (the x73 alive-set
       // posture); the hint keeps the round plan independent of the edge
       // checkpoint's sizeInBytes estimate
       val reached = broadcast(dist.filter(col("hop") === k - 1))
         .join(pairs, col("v") === col("src"))
-        .select(col("dst").as("v"), lit(k).as("hop"))
-      val prev = dist
-      dist = dist.unionAll(reached)
-        .groupBy(col("v")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint() // each round's labels feed the next frontier
-      prev.unpersist() // superseded generation — the x73 block-manager hygiene
+        .select(walk.map(col) ++ Seq(col("dst").as("v"), lit(k).as("hop")): _*)
+      dist.unionAll(reached)
+        .groupBy(walk.map(col) :+ col("v"): _*).agg(min(col("hop")).as("hop"))
     }
-    pairs.unpersist() // final dist is materialized; edges no longer needed
+    dist
+  }
+
+  /** x63: multi-source BFS hop histogram — [[Hops]] rounds of
+    * [[bfsLabels]] over the co-occurrence graph. */
+  val bfs = Q.withOracle(
+    "x63_bfs_hops",
+    s"x63: $Hops-hop multi-source BFS reach histogram (seeds: part % $SeedMod = 0)",
+    bfsOracle) { (s, dir) =>
+    val pairs = coEdges(s, dir).materialized // read once per round
+    // the edge set is symmetrized, so src alone covers every node
+    val seeds = pairs.select(col("src").as("v")).distinct()
+      .filter(col("v") % SeedMod === 0)
+      .select(col("v"), lit(0).as("hop"))
+      .materialized
+    val dist = bfsLabels(pairs, seeds, Hops)
+    Materialize.release(pairs) // final dist is materialized; edges no longer needed
     dist.groupBy(col("hop")).agg(count(lit(1)).cast("long").as("n_nodes"))
       .orderBy(col("hop"))
   }
@@ -455,27 +463,17 @@ object Graph {
 
   /** Exact (seed, node, min-hop) labels for the [[DiamSeeds]]-seed panel
     * after [[DiamHops]] frontier rounds — the shared walk behind x155
-    * (hop-plot) and x158 (harmonic scores). Returned frame is
-    * localCheckpointed; intermediate generations and the edge cache are
-    * released before returning (the x73 hygiene). */
+    * (hop-plot) and x158 (harmonic scores): [[bfsLabels]] with the seed
+    * as the walk key. Returned frame is materialized; the edge table is
+    * released before returning. */
   private def seedPanelDist(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coEdges(s, dir).localCheckpoint() // read once per round
+    val pairs = coEdges(s, dir).materialized // read once per round
     val seeds = pairs.select(col("src").as("p")).distinct()
       .orderBy(md5(col("p").cast("string")), col("p")).limit(DiamSeeds)
-    var dist = seeds.select(col("p").as("s"), col("p").as("v"), lit(0).as("hop"))
-      .localCheckpoint()
-    for (k <- 1 to DiamHops) {
-      // frontier side pinned broadcast — the x63 round-join posture
-      val reached = broadcast(dist.filter(col("hop") === k - 1))
-        .join(pairs, col("v") === col("src"))
-        .select(col("s"), col("dst").as("v"), lit(k).as("hop"))
-      val prev = dist
-      dist = dist.unionAll(reached)
-        .groupBy(col("s"), col("v")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint() // each round's labels feed the next frontier
-      prev.unpersist() // superseded generation — the x73 hygiene
-    }
-    pairs.unpersist() // final dist is materialized; edges no longer needed
+      .select(col("p").as("s"), col("p").as("v"), lit(0).as("hop"))
+      .materialized
+    val dist = bfsLabels(pairs, seeds, DiamHops, walk = Seq("s"))
+    Materialize.release(pairs)
     dist
   }
 
@@ -622,13 +620,6 @@ object Graph {
        |FROM l$LpaRounds GROUP BY label
        |ORDER BY n_nodes DESC, community LIMIT 100""".stripMargin
 
-  /** x70: synchronous label propagation over the part co-occurrence
-    * graph — each round every node adopts the most frequent label among
-    * its neighbors (ties → smallest), realized as one keyed count
-    * aggregation plus one packed-long min per round. Completes the
-    * graph family: CC (x16) answers "connected?", LPA answers "which
-    * DENSE region?" — communities are the curation unit for
-    * domain-cluster analysis over co-occurrence graphs. */
   /** One synchronous LPA round: every node adopts the most frequent
     * neighbor label (ties → smallest), as one keyed count aggregation
     * plus one packed-long min (both hash aggregates with map-side
@@ -642,21 +633,29 @@ object Graph {
       .agg(min((lit(PackBase) - col("c")) * lit(PackBase) + col("label")).as("p"))
       .select(col("dst").as("v"), pmod(col("p"), lit(PackBase)).as("label"))
 
+  /** LPA round 0: every node labelled by itself, materialized. */
+  private def lpaSeed(pairs: DataFrame): DataFrame =
+    pairs.select(col("src").as("v")).distinct().withColumn("label", col("v")).materialized
+
+  /** The [[LpaRounds]]-round label table over the materialized edge
+    * table, materialized: what x70 histograms and x149 scores. */
+  private def lpaLabels(pairs: DataFrame): DataFrame =
+    Materialize.fixpoint(lpaSeed(pairs), LpaRounds)((l, _) => lpaRound(pairs, l))._1
+
+  /** x70: synchronous label propagation over the part co-occurrence
+    * graph — each round every node adopts the most frequent label among
+    * its neighbors (ties → smallest), realized as one keyed count
+    * aggregation plus one packed-long min per round. Completes the
+    * graph family: CC (x16) answers "connected?", LPA answers "which
+    * DENSE region?" — communities are the curation unit for
+    * domain-cluster analysis over co-occurrence graphs. */
   val labelProp = Q.withOracle(
     "x70_label_propagation",
     s"x70: $LpaRounds-round label propagation communities (top-100 by size)",
     lpaOracle) { (s, dir) =>
-    val pairs = coEdges(s, dir).localCheckpoint() // read once per round
-    var labels = pairs.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    for (_ <- 1 to LpaRounds) {
-      val prev = labels
-      labels = lpaRound(pairs, labels)
-        .localCheckpoint() // each round's labels feed the next join
-      prev.unpersist() // superseded generation — the x73 block-manager hygiene
-    }
-    pairs.unpersist() // final labels are materialized; edges no longer needed
+    val pairs = coEdges(s, dir).materialized // read once per round
+    val labels = lpaLabels(pairs)
+    Materialize.release(pairs) // final labels are materialized; edges no longer needed
     labels.groupBy(col("label"))
       .agg(count(lit(1)).cast("long").as("n_nodes"))
       .select(col("label").as("community"), col("n_nodes"))
@@ -674,33 +673,23 @@ object Graph {
     * convergence is a property of the graph STRUCTURE, not its size).
     * Each round adds one (v-keyed) self-join + count to detect change —
     * the stability check costs one more bounded aggregation, nothing
-    * corpus-shaped. Superseded label generations are unpersisted as the
-    * iteration advances (the x73 block-manager hygiene). */
+    * corpus-shaped. Superseded label generations are released as the
+    * iteration advances. */
   def convergedLabelProp(s: SparkSession, dir: String,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    val pairs = coEdges(s, dir).localCheckpoint()
-    var labels = pairs.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    var rounds = 0
-    var changed = 1L
-    // Change detection fused into the round checkpoint (optimization
-    // r16): each round's materialization carries the previous label, so
-    // the stability check is a filter-count over the checkpointed N-row
+    val pairs = coEdges(s, dir).materialized
+    // Change detection fused into the round materialization
+    // (optimization r16): each generation carries the previous label, so
+    // the stability check is a filter-count over the materialized N-row
     // frame instead of a separate join job per round.
-    var ck = labels // the checkpointed generation to release
-    while (changed > 0 && rounds < maxRounds) {
-      val next = lpaRound(pairs, labels)
+    val (last, rounds) = Materialize.fixpoint(lpaSeed(pairs), maxRounds,
+        (_, gen) => gen.filter(col("label") =!= col("prev")).count() == 0) { (gen, _) =>
+      val labels = gen.select(col("v"), col("label"))
+      lpaRound(pairs, labels)
         .join(broadcast(labels.select(col("v"), col("label").as("prev"))), "v")
-        .localCheckpoint()
-      changed = next.filter(col("label") =!= col("prev")).count()
-      ck.unpersist()
-      ck = next
-      labels = next.select(col("v"), col("label"))
-      rounds += 1
     }
-    pairs.unpersist()
-    (labels, rounds)
+    Materialize.release(pairs)
+    (last.select(col("v"), col("label")), rounds)
   }
 
   /** Round cap for the REGISTERED converged-tier query — the oracle
@@ -770,39 +759,21 @@ object Graph {
     * fixpoint). */
   def kcoreFixpoint(s: SparkSession, dir: String, k: Int = CoreK,
       maxRounds: Int = 1000): (DataFrame, Int) = {
-    // Node-centric like the registered x73 (edges checkpointed once,
-    // N-row alive sets per round); the peel is MONOTONE (k_r ⊆
-    // alive_{r-1} — a node outside the alive set has no induced edges
-    // and can never re-enter), so an unchanged alive COUNT proves an
-    // unchanged alive SET proves the fixpoint.
-    val e = coEdges(s, dir).localCheckpoint()
-    var alive: Option[DataFrame] = None
-    var gen: Option[DataFrame] = None // the checkpointed degree generation
+    // The peel is MONOTONE (k_r ⊆ alive_{r-1} — a node outside the
+    // alive set has no induced edges and can never re-enter), so an
+    // unchanged alive COUNT proves an unchanged alive SET proves the
+    // fixpoint.
+    val e = coEdges(s, dir).materialized
     var aliveN = -1L // unknown until round 1 counts the full node set
-    var rounds = 0
-    var stable = false
-    // One N-row checkpoint per round (optimization r16): the alive set
-    // is a filter VIEW over the checkpointed degree table instead of a
-    // second materialization — its consumers (two broadcast sides and
-    // the next round's degree build) re-read N checkpointed rows.
-    while (!stable && rounds < maxRounds) {
-      val deg = induced(e, alive).groupBy(col("src")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+    val (deg, rounds) = peel(e, k, maxRounds) { (_, deg) =>
       val prevN = if (aliveN >= 0) aliveN else deg.count() // alive_0 = all nodes
-      val keep = deg.filter(col("c") >= k).select(col("src").as("v"))
-      val keptN = keep.count()
-      gen.foreach(_.unpersist())
-      gen = Some(deg)
-      alive = Some(keep)
-      stable = keptN == prevN
-      aliveN = keptN
-      rounds += 1
+      aliveN = survivors(deg, k).count()
+      aliveN == prevN
     }
     // materialize the final alive set so callers hold (and can release)
     // a self-contained N-row block, then drop the loop's generations
-    val out = alive.get.localCheckpoint()
-    gen.foreach(_.unpersist())
-    e.unpersist()
+    val out = survivors(deg, k).materialized
+    Materialize.release(deg, e)
     (out, rounds)
   }
 
@@ -845,6 +816,23 @@ object Graph {
        |SELECT * FROM ($out) ORDER BY round""".stripMargin
   }
 
+  /** Round r's alive set: the nodes of degree ≥ `k` in its degree
+    * table, as a filter view over that materialized table. */
+  private def survivors(deg: DataFrame, k: Int): DataFrame =
+    deg.filter(col("c") >= k).select(col("src").as("v"))
+
+  /** Node-centric peel rounds over the materialized edge table `e`:
+    * round r materializes the degrees of the edges induced by round
+    * r−1's [[survivors]] (all of `e` in round 1) — one N-row table per
+    * round (optimization r16), whose alive-set views feed the next. */
+  private def peel(e: DataFrame, k: Int, maxRounds: Int)(
+      done: (DataFrame, DataFrame) => Boolean): (DataFrame, Int) = {
+    def degrees(edges: DataFrame) = edges.groupBy(col("src")).agg(count(lit(1)).as("c"))
+    Materialize.fixpoint(degrees(e), maxRounds, done) { (deg, r) =>
+      if (r == 1) deg else degrees(induced(e, Some(survivors(deg, k))))
+    }
+  }
+
   /** The alive-restricted edge set: `e` when no peel has happened yet,
     * otherwise edges with BOTH endpoints in the (small, AQE-broadcast)
     * alive-node table. Lazy — the edge table is never rewritten. */
@@ -865,8 +853,8 @@ object Graph {
     *
     * NODE-CENTRIC (round 11): the edge table is checkpointed ONCE and
     * each round restricts it LAZILY through the current alive-node set;
-    * the only per-round materializations are the N-row degree and node
-    * tables. The round-10 form instead rewrote and localCheckpointed
+    * the only per-round materialization is the N-row degree table
+    * ([[peel]]). The round-10 form instead rewrote and localCheckpointed
     * the (shrinking) EDGE table every round — at the 10×/20× probe
     * factors those O(E)-row generations overflowed the storage pool
     * and spilled inside the timed run, the one superlinear curve left
@@ -882,29 +870,21 @@ object Graph {
     "x73_kcore_peel",
     s"x73: $CoreRounds-round peel toward the $CoreK-core (per-round survivor counts)",
     kcoreOracle) { (s, dir) =>
-    val e = coEdges(s, dir).localCheckpoint()
-    var alive: Option[DataFrame] = None
-    // iteration r yields (r, |k_r|, |e_{r-1}|): the degree table OVER
+    val e = coEdges(s, dir).materialized
+    // round r yields (r, |k_r|, |e_{r-1}|): the degree table OVER
     // e_{r-1} is both the round-r filter input and, summed, the
     // previous round's edge count
-    val stats = (1 to CoreRounds).map { r =>
-      val deg = induced(e, alive).groupBy(col("src")).agg(count(lit(1)).as("c"))
-        .localCheckpoint() // N rows: read by the sum, the filter, and the count
+    val stats = collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+    val (deg, _) = peel(e, CoreK, CoreRounds) { (_, deg) =>
       val prevEdges = deg.agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
-      val keep = deg.filter(col("c") >= CoreK).select(col("src").as("v"))
-        .localCheckpoint() // N rows: next round's broadcast side
-      deg.unpersist()
-      val nn = keep.count()
-      alive.foreach(_.unpersist())
-      alive = Some(keep)
-      (r, nn, prevEdges)
+      stats += ((stats.size + 1, survivors(deg, CoreK).count(), prevEdges))
+      false
     }
-    val lastEdges = induced(e, alive).count() // |e_CoreRounds|
-    alive.foreach(_.unpersist())
-    e.unpersist()
+    val lastEdges = induced(e, Some(survivors(deg, CoreK))).count() // |e_CoreRounds|
+    Materialize.release(deg, e)
     val perRound = stats.zip(stats.drop(1).map(_._3) :+ lastEdges)
       .map { case ((r, nn, _), ne) => (r, nn, ne) }
-    s.createDataFrame(perRound).toDF("round", "n_nodes", "n_edges")
+    s.createDataFrame(perRound.toSeq).toDF("round", "n_nodes", "n_edges")
       .orderBy(col("round"))
   }
 
@@ -959,7 +939,7 @@ object Graph {
     val (core, rounds) = kcoreFixpoint(s, dir, CoreK, KcoreMaxRounds)
     val nNodes = core.count()
     val nEdges = induced(coEdges(s, dir), Some(core)).count()
-    core.unpersist()
+    Materialize.release(core)
     s.createDataFrame(Seq((CoreK.toLong, nNodes, nEdges, rounds.toLong)))
       .toDF("core_k", "n_core_nodes", "n_core_edges", "rounds_to_fixpoint")
   }
@@ -1030,38 +1010,34 @@ object Graph {
       .groupBy(col("e.src").as("src"), col("e.dst").as("dst"))
       .agg(count(lit(1)).as("cooc"))
       .select(col("src"), col("dst"), (expr("1000 div cooc") + 1L).as("w"))
-      .localCheckpoint() // read once per round
-    var dist = wedges.select(col("src").as("v")).distinct()
+      .materialized // read once per round
+    val seeds = wedges.select(col("src").as("v")).distinct()
       .filter(col("v") % SeedMod === 0)
       .select(col("v"), lit(0L).as("d"))
-      .localCheckpoint()
-    var frontier = dist // round 0: every seed is "improved"
-    for (_ <- 1 to SsspRounds) {
+      .materialized
+    var frontier = seeds // round 0: every seed is "improved"
+    // improved = strictly better than (or absent from) the previous
+    // round — the only nodes whose outgoing relaxations can still lower
+    // anything next round. Materialized while the superseded round is
+    // still held (it reads it); the frontier it replaces is not read again.
+    val (dist, _) = Materialize.fixpoint(seeds, SsspRounds, { (prev, next) =>
+      val improved = next.as("n")
+        .join(prev.as("o"), col("n.v") === col("o.v"), "left")
+        .filter(col("o.d").isNull || col("n.d") < col("o.d"))
+        .select(col("n.v").as("v"), col("n.d").as("d"))
+        .materialized
+      Materialize.release(frontier)
+      frontier = improved
+      false
+    }) { (dist, _) =>
       // frontier side pinned broadcast — the x63 round-join posture
       val relaxed = broadcast(frontier)
         .join(wedges, col("v") === col("src"))
         .select(col("dst").as("v"), (col("d") + col("w")).as("d"))
-      val prevDist = dist
-      val prevFrontier = frontier
-      dist = dist.unionAll(relaxed)
-        .groupBy(col("v")).agg(min(col("d")).as("d"))
-        .localCheckpoint()
-      // improved = strictly better than (or absent from) the previous
-      // round — the only nodes whose outgoing relaxations can still
-      // lower anything next round. Checkpointed eagerly BEFORE the
-      // superseded generations are dropped (it reads prevDist).
-      frontier = dist.as("n")
-        .join(prevDist.as("o"), col("n.v") === col("o.v"), "left")
-        .filter(col("o.d").isNull || col("n.d") < col("o.d"))
-        .select(col("n.v").as("v"), col("n.d").as("d"))
-        .localCheckpoint()
-      // superseded generations — x73 block-manager hygiene (frontier
-      // round 0 aliases dist's checkpoint; don't double-unpersist)
-      if (prevFrontier ne prevDist) prevFrontier.unpersist()
-      prevDist.unpersist()
+      dist.unionAll(relaxed).groupBy(col("v")).agg(min(col("d")).as("d"))
     }
-    frontier.unpersist() // the loop's last frontier is not read again
-    wedges.unpersist() // final dist is materialized; edges no longer needed
+    // final dist is materialized; frontier and edges are not read again
+    Materialize.release(frontier, wedges)
     dist.select(col("v").as("part"), col("d").cast("long").as("dist"))
       .orderBy(col("dist"), col("part")).limit(100)
   }
@@ -1141,9 +1117,8 @@ object Graph {
     s"x99: top-20 local clustering coefficients (degree >= $CcMinDeg) on the part graph",
     clusteringOracle) { (s, dir) =>
     val e = undirected(s, dir)
-    val o = orientEdgeSet(e)
-      .localCheckpoint() // degrees, both wedge sides, and the closure probe
-    e.unpersist() // o is materialized; keep ONE edge generation
+    val o = Materialize(orientEdgeSet(e)) // degrees, both wedge sides, and the closure probe
+    Materialize.release(e) // o is materialized; keep ONE edge generation
     val deg = o.select(explode(array(col("src"), col("dst"))).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).as("d"))
     val perNode = perNodeTriangles(o)
@@ -1231,9 +1206,8 @@ object Graph {
     val keep = substring(
       md5(concat(col("u").cast("string"), lit("_"), col("v").cast("string"))),
       1, 1).isin(TriSampleNibbles: _*)
-    val o = orientEdgeSet(e.filter(keep))
-      .localCheckpoint() // both wedge sides + the closure probe
-    // NO unpersist of e: the result is lazy and deg still reads it;
+    val o = Materialize(orientEdgeSet(e.filter(keep))) // both wedge sides + the closure probe
+    // NO release of e: the result is lazy and deg still reads it;
     // the callers' sweep/ContextCleaner reclaims after materialization.
     val perNode = perNodeTriangles(o) // sampled-graph credits
     deg.join(perNode, Seq("p"), "left")
@@ -1316,8 +1290,8 @@ object Graph {
     val crossMoment = e.join(du, "u").join(dv, "v")
       .agg((sum(col("xdu").cast("decimal(13,0)") * col("xdv").cast("decimal(13,0)"))
         * 2).cast("double").as("sxy"))
-    // NO unpersist here: the result is returned lazily, and dropping a
-    // lineage-truncated localCheckpoint before execution is unrecoverable
+    // NO release here: the result is returned lazily, and dropping a
+    // lineage-truncated materialization before execution is unrecoverable
     // — e is the single edge generation this query ever holds, and the
     // callers' sweep/ContextCleaner reclaims it after materialization.
     val a = nodeMoments.crossJoin(crossMoment) // two 1-row scalars
@@ -1495,7 +1469,7 @@ object Graph {
     val e = Tables.lineitem(s, dir)
       .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
       .distinct()
-      .localCheckpoint() // read 2·rounds times: once per half-round
+      .materialized // read 2·rounds times: once per half-round
     var h = e.select(col("s")).distinct().withColumn("h", lit(1L))
     var a: DataFrame = e.sparkSession.emptyDataFrame
     for (_ <- 1 to HitsRounds) {
@@ -1510,8 +1484,8 @@ object Graph {
       .orderBy(col("kind"), col("score").desc, col("id"))
       // materialize the ≤2·TopK-row result, then release the E-row edge
       // checkpoint (the cross-invocation leak discipline)
-      .localCheckpoint()
-    e.unpersist()
+      .materialized
+    Materialize.release(e)
     top
   }
 
@@ -1567,39 +1541,14 @@ object Graph {
     "x148_personalized_pagerank",
     s"x148: $Rounds-round personalized PageRank from the md5-bucket seed set (top-100)",
     pprOracle) { (s, dir) =>
-    val pairs = coEdges(s, dir).localCheckpoint()
-    val deg = pairs.groupBy(col("src")).agg(count(lit(1)).as("d")).localCheckpoint()
-    // round-invariant degree-annotated adjacency — the x59 optimization
-    val adj = pairs.join(broadcast(deg), "src").localCheckpoint()
-    pairs.unpersist()
-    def seed(c: org.apache.spark.sql.Column) =
-      substring(md5(c.cast("string")), 1, 1) === "0"
-    var ranks = deg.select(col("src").as("v"),
-      when(seed(col("src")), lit(RScale)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to Rounds) {
-      val contrib = adj
-        .join(broadcast(ranks), col("src") === col("v"))
-        .select(col("dst"), expr("r div d").as("c"))
-        // decimal(38,0) carry — same overflow posture as x59's rounds
-        .groupBy(col("dst")).agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      ranks = deg
-        .select(col("src").as("v"))
-        .join(contrib, col("v") === col("dst"), "left")
-        .select(col("v"),
-          (when(seed(col("v")), lit(RScale * 15 / 100)).otherwise(lit(0L))
-            + expr(
-              s"CAST(($DampNum * coalesce(m, CAST(0 AS DECIMAL(38,0)))) div 100 AS BIGINT)"))
-            .as("r"))
-    }
-    val out = ranks.filter(col("r") > 0)
-      .select(col("v").as("part"),
-        when(seed(col("v")), 1L).otherwise(0L).as("is_seed"),
-        col("r").as("ppr"))
-      .orderBy(col("ppr").desc, col("part")).limit(100)
-      .localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
-    out
+    def seed(c: Column) = substring(md5(c.cast("string")), 1, 1) === "0"
+    def onSeeds(r: Long)(v: Column) = when(seed(v), lit(r)).otherwise(lit(0L))
+    rankRounds(s, dir, onSeeds(RScale), onSeeds(RScale * 15 / 100))(
+      _.filter(col("r") > 0)
+        .select(col("v").as("part"),
+          when(seed(col("v")), 1L).otherwise(0L).as("is_seed"),
+          col("r").as("ppr"))
+        .orderBy(col("ppr").desc, col("part")).limit(100))
   }
 
   // ---- x149: modularity of the LPA partition --------------------------
@@ -1668,15 +1617,8 @@ object Graph {
     "x149_lpa_modularity",
     s"x149: Newman modularity of the $LpaRounds-round LPA partition (exact integer numerator)",
     modularityOracle) { (s, dir) =>
-    val pairs = coEdges(s, dir).localCheckpoint()
-    var labels = pairs.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    for (_ <- 1 to LpaRounds) {
-      val prev = labels
-      labels = lpaRound(pairs, labels).localCheckpoint()
-      prev.unpersist()
-    }
+    val pairs = coEdges(s, dir).materialized
+    val labels = lpaLabels(pairs)
     val deg = pairs.groupBy(col("src")).agg(count(lit(1)).cast("long").as("d"))
     val la = labels.select(col("v").as("sv"), col("label").as("la"))
     val lb = labels.select(col("v").as("dv"), col("label").as("lb"))
@@ -1699,9 +1641,8 @@ object Graph {
         (col("q_num").cast("double")
           / (col("m2").cast("double") * col("m2").cast("double")))
           .as("modularity"))
-      .localCheckpoint()
-    labels.unpersist()
-    pairs.unpersist()
+      .materialized
+    Materialize.release(labels, pairs)
     out
   }
 

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.functions._
 
 /** Association-rule mining over order baskets — the frequent-itemset
@@ -55,7 +56,7 @@ object Itemsets {
     val baskets = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))
-      .localCheckpoint() // read by supports, pair explode, and the order count
+      .materialized // read by supports, pair explode, and the order count
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
     val sup = baskets.select(explode(col("ps")).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).cast("long").as("s"))
@@ -145,7 +146,7 @@ object Itemsets {
       .join(Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")), "ok")
       .select(col("c"), col("p")).distinct()
-      .localCheckpoint() // read by degree filter, pair join, and sizes
+      .materialized // read by degree filter, pair join, and sizes
     val deg = bask.groupBy(col("p")).agg(count(lit(1)).cast("long").as("d"))
     val small = bask.join(deg.filter(col("d").between(2, MaxPartDeg)), "p")
       .select(col("c"), col("p"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.{Q, Tables}
 import graft.functions.CosineSimilarity
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -269,10 +270,10 @@ object Ivf {
     val gBits = bitsFor(s * subK) // global id = sup·subK + sub < s·subK
     requireCellBits(sBits); requireCellBits(gBits)
     // Level 1: S super-cells by the shared deterministic Lloyd chain.
-    val supers = refinedCentroids(vq, lloydIters, s, sBits).localCheckpoint()
+    val supers = refinedCentroids(vq, lloydIters, s, sBits).materialized
     val vqs = vq.join(
       assignCells(vq, supers, sBits).withColumnRenamed("cell", "sup"), "vec_id")
-      .localCheckpoint() // feeds every sub-training and probe pass below
+      .materialized // feeds every sub-training and probe pass below
     // Level 2: per-super md5-rank seeds (the flat seed rule, windowed by
     // super), then Lloyd where assignment joins each vector to its OWN
     // super's centroids only.
@@ -294,7 +295,7 @@ object Ivf {
           col("m").bitwiseAND(lit((1L << gBits) - 1)).cast("int").as("cell"))
     val cents = (1 to lloydIters).foldLeft(seeds) { (c, _) =>
       meanByCell(vqs.join(assignWithin(c), "vec_id"))
-    }.localCheckpoint()
+    }.materialized
     // Probe selection: top-superProbe supers per vector, then the
     // bounded top-n pick over ONLY the probed supers' centroids.
     val probedSup = topNCells(vq, supers, superProbe, sBits)

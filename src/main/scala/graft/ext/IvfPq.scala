@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,7 +37,7 @@ object IvfPq {
   /** The pipeline, parameterized on nProbe for the spec's exhaustiveness
     * anchor (nProbe = [[Ivf.K]] probes every cell → must equal x50). */
   private[graft] def ivfPqTopK(e: DataFrame, nProbe: Int = NProbe): DataFrame = {
-    val vqn = Ivf.quantized(Pq.normalized(e)).localCheckpoint()
+    val vqn = Materialize(Ivf.quantized(Pq.normalized(e)))
     // level 1: coarse cells (x12's quantizer on the normalized basis,
     // literal-centroid tier — K=10 is driver-bounded metadata)
     val cs = Ivf.refinedCentsCollected(vqn, Ivf.LloydIters)
@@ -51,7 +51,7 @@ object IvfPq {
     // level 2: PQ codes (x50's literal codebooks on the same basis) —
     // ADC over the probed population is the candidate join plus a
     // literal-LUT lookup per (row, subspace); no codebook join at all.
-    val subv = Pq.subvectors(vqn).localCheckpoint()
+    val subv = Materialize(Pq.subvectors(vqn))
     val books = Pq.trainBooks(vqn, subv)
     val ql = Pq.buildLut(subv, books)
     val codes = Pq.assignLit(subv, books)

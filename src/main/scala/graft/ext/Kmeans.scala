@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.functions._
 
 /** x64: k-means training as a FIRST-CLASS operator — the quantizer that
@@ -54,7 +55,7 @@ object Kmeans {
       "- centroid model + cell sizes",
     kmeansOracle) { (s, dir) =>
     val vq = Ivf.quantized(Tables.embeddings(s, dir))
-      .localCheckpoint() // read once per Lloyd pass + the final assignment
+      .materialized // read once per Lloyd pass + the final assignment
     val cs = Ivf.refinedCentsCollected(vq)
     val sizes = Ivf.assignCellsLit(vq, cs)
       .groupBy(col("cell")).agg(count(lit(1)).cast("long").as("n"))
@@ -110,8 +111,7 @@ object Kmeans {
          |FROM ag ORDER BY cell""".stripMargin
     }) { (s, dir) =>
     val e = Tables.embeddings(s, dir)
-    val vq = Ivf.quantized(e)
-      .localCheckpoint() // read once per Lloyd pass + the final assignment
+    val vq = Materialize(Ivf.quantized(e)) // read once per Lloyd pass + the final assignment
     val cs = Ivf.refinedCentsCollected(vq)
     Ivf.assignCellsLit(vq, cs).select(col("vec_id"), col("cell"))
       .join(e.select(col("vec_id"), col("label")), "vec_id")
@@ -180,7 +180,7 @@ object Kmeans {
     s"x189: SSL-prototype pruning (K=${Ivf.K}) - keep the hardest ⌈n/2⌉ per cell by exact integer distance-to-centroid rank",
     prototypeOracle) { (s, dir) =>
     val vq = Ivf.quantized(Tables.embeddings(s, dir))
-      .localCheckpoint() // read once per Lloyd pass + the final assignment
+      .materialized // read once per Lloyd pass + the final assignment
     val cs = Ivf.refinedCentsCollected(vq)
     val asg = Ivf.assignCellsDistLit(vq, cs)
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("dist"))

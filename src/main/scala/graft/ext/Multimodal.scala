@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -320,7 +321,7 @@ object Multimodal {
     val frk = fr.withColumn("df", count(lit(1)).over(w))
       .filter(col("df") <= FrameDfCap)
       .select(col("doc_id"), col("sig"))
-      .localCheckpoint() // read by the size agg and both join sides
+      .materialized // read by the size agg and both join sides
     val n = frk.groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("n"))
     val p = frk.as("a").join(frk.as("b"),
         col("a.sig") === col("b.sig") && col("a.doc_id") < col("b.doc_id"))
@@ -422,8 +423,7 @@ object Multimodal {
        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
     val prs = frameNearDupPairs(blobTable(s, dir))
       .select(col("doc_a"), col("doc_b"))
-    val edges = Dedup.symmetrize(prs)
-      .localCheckpoint() // computed once, read by every CC round
+    val edges = Materialize(Dedup.symmetrize(prs)) // computed once, read by every CC round
     val cl = Dedup.ccLabels(edges)
     val mins = cl.groupBy(col("comp")).agg(min(col("v")).as("m"))
     Tables.documents(s, dir).select(col("doc_id"))

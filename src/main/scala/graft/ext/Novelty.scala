@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -106,7 +107,7 @@ object Novelty {
       .select(col("source"),
         explode(graft.functions.ShingleStr3.shingleStr3(split(col("text"), " "))).as("g"))
       .distinct()
-      .localCheckpoint() // feeds the totals, and BOTH sides of the pair join
+      .materialized // feeds the totals, and BOTH sides of the pair join
     val tot = gs.groupBy(col("source")).agg(count(lit(1)).cast("long").as("n"))
     val sh = gs.as("a").join(gs.as("b"),
         col("a.g") === col("b.g") && col("a.source") < col("b.source"))
@@ -158,7 +159,7 @@ object Novelty {
     val cnt = Tables.documents(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("w"))
-      .localCheckpoint() // feeds the totals, and BOTH sides of the pair join
+      .materialized // feeds the totals, and BOTH sides of the pair join
     val tot = cnt.groupBy(col("source")).agg(sum(col("w")).cast("long").as("n"))
     val mn = cnt.as("a").join(cnt.as("b"),
         col("a.token") === col("b.token") && col("a.source") < col("b.source"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -145,7 +145,7 @@ object Pq {
 
   /** Codebooks as a frame, for persistence ([[graft.streaming.PqIndexFeed]]). */
   private[graft] def codebooks(vq: DataFrame, iters: Int = Ivf.LloydIters): DataFrame = {
-    val subv = subvectors(vq).localCheckpoint() // feeds every pass
+    val subv = Materialize(subvectors(vq)) // feeds every pass
     booksDf(vq.sparkSession, trainBooks(vq, subv, iters))
   }
 
@@ -234,7 +234,7 @@ object Pq {
     * the shortlist only. */
   private[graft] def pqTopK(e: DataFrame, reRank: Int = ReRank): DataFrame = {
     val vq = Ivf.quantized(normalized(e))
-    val subv = subvectors(vq).localCheckpoint() // read by train + encode + LUT
+    val subv = Materialize(subvectors(vq)) // read by train + encode + LUT
     val books = trainBooks(vq, subv)
     val ql = buildLut(subv, books)
     val codes = assignLit(subv, books)

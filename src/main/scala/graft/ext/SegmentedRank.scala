@@ -66,7 +66,7 @@ object SegmentedRank {
     * set, so the values are identical to the chained form (pinned by
     * SegmentedRankSpec) while the plan stays k windows + k bounded aggs +
     * k broadcast joins over ONE copy of the input. Callers with an
-    * expensive input should still `localCheckpoint()` it first so the k
+    * expensive input should still materialize it first so the k
     * offset aggregations and the window chain share one materialization. */
   def withGlobalRanks(df: DataFrame,
       specs: Seq[(Column, Seq[Column], String)],

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.functions.CosineSimilarity
 import org.apache.spark.sql.functions._
 
@@ -122,8 +122,8 @@ object SemDedup {
   private[graft] def probeTable(e: org.apache.spark.sql.DataFrame,
       k: Int, cellBits: Int, nProbe: Int): org.apache.spark.sql.DataFrame = {
     val vq = Ivf.quantized(e)
-    val cents = Ivf.refinedCentroids(vq, Ivf.LloydIters, k, cellBits).localCheckpoint()
-    Ivf.topNCells(vq, cents, nProbe, cellBits).localCheckpoint()
+    val cents = Materialize(Ivf.refinedCentroids(vq, Ivf.LloydIters, k, cellBits))
+    Materialize(Ivf.topNCells(vq, cents, nProbe, cellBits))
   }
 
   /** Candidate pairs of a probe table: co-probed ids, each unordered
@@ -152,7 +152,7 @@ object SemDedup {
       nProbe: Int = NProbe): org.apache.spark.sql.DataFrame = {
     val probed =
       if (k <= HierThreshold) probeTable(e, k, cellBits, nProbe)
-      else Ivf.hierTopNCells(Ivf.quantized(e), k, nProbe).localCheckpoint()
+      else Materialize(Ivf.hierTopNCells(Ivf.quantized(e), k, nProbe))
     pipelineFrom(e, probed)
   }
 

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -154,8 +154,7 @@ object SignalCorr {
     // its offsets from the previous rank's output — 2^5 instantiations of
     // the whole panel subtree (3,408 physical operators, 340 parquet
     // scans at plan time).
-    val joined = base.join(lm, "doc_id").join(ds, "doc_id").join(cf, "doc_id")
-      .localCheckpoint()
+    val joined = Materialize(base.join(lm, "doc_id").join(ds, "doc_id").join(cf, "doc_id"))
     // exact global rank per signal — one segmented scan each, never a
     // single-partition window, all five in ONE linear plan
     // (SegmentedRank.withGlobalRanks). Segments: len is its own

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.functions._
 
 /** Winnowing (MOSS) document fingerprinting — the dedup family's
@@ -105,8 +106,8 @@ object Winnowing {
     val fp = Tables.documents(s, dir).select(col("doc_id"),
         explode(graft.functions.Winnow3.winnow3(
           split(col("text"), " "), lit(W))).as("fp"))
-      .localCheckpoint()
-    val df = fp.groupBy(col("fp")).agg(count(lit(1)).as("df")).localCheckpoint()
+      .materialized
+    val df = fp.groupBy(col("fp")).agg(count(lit(1)).as("df")).materialized
     val cand = df.filter(col("df") <= MaxDf)
       .agg(sum(expr("df * (df - 1) div 2")).as("n_cand_pairs"))
     val stats = df.agg(count(lit(1)).as("n_distinct_fp"),

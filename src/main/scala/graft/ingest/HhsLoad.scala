@@ -2,6 +2,7 @@ package graft.ingest
 
 import graft.etl.Etl
 import graft.model.StoreInsert
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -116,7 +117,7 @@ object HhsLoad {
     * transaction; returns each table's total row count. */
   def load(spark: SparkSession, csvPath: String, storeDir: String): Map[String, Long] = {
     val raw = readRaw(spark, csvPath)
-    val prepped = prepData(raw).localCheckpoint() // one materialization, three consumers
+    val prepped = prepData(raw).materialized // one materialization, three consumers
 
     val location = locationRows(prepped)
     // rename the dim's key columns before joining — location derives from

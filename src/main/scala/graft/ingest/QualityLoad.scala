@@ -2,7 +2,7 @@ package graft.ingest
 
 import graft.etl.Etl
 import graft.model.{StoreInsert, StoreSchemas}
-import graft.Parity
+import graft.{Materialize, Parity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -63,8 +63,7 @@ object QualityLoad {
   def load(spark: SparkSession, csvPath: String, ratingDate: java.sql.Date,
       storeDir: String): Map[String, Long] = {
     val raw = readRaw(spark, csvPath)
-    val batch = processBatch(raw, ratingDate)
-      .localCheckpoint()
+    val batch = Materialize(processBatch(raw, ratingDate))
 
     def deduped(table: String, rows: DataFrame, keys: Seq[String]) = StoreInsert.Batch(table,
       Etl.dedupFirst(rows, keys, rows.columns.map(col(_).asc_nulls_last)), keys)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.etl.Etl
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -338,7 +339,7 @@ object AggView {
       // reads — unless the caller's frame is already checkpoint-derived
       // (the min/max path checkpoints flagged + the rescan aggregate),
       // in which case a second materialization would just double memory.
-      val merged = if (checkpoint) rows.localCheckpoint(true) else rows
+      val merged = if (checkpoint) rows.materialized else rows
       // Dynamic partition overwrite only rewrites partitions PRESENT in
       // the output — a touched bucket whose last group was removed emits
       // zero rows and would keep its stale file. Delete those explicitly.
@@ -413,7 +414,7 @@ object AggView {
               (exMin.isNotNull && rmMin.isNotNull && (rmMin === exMin) &&
                 (insMin.isNull || insMin > exMin)).as(s"need_min_$m"))
           }: _*)
-        .localCheckpoint(true) // probed for rescan groups, then written
+        .materialized // probed for rescan groups, then written
       val needAny = minMaxCols
         .map(m => col(s"need_max_$m") || col(s"need_min_$m")).reduce(_ || _)
       val needGroups = flagged.filter(needAny).select(g: _*)
@@ -433,7 +434,7 @@ object AggView {
           val re = nsJoin(Cdc.readStore(spark, storeDir),
               broadcast(needGroups), groupCols, "left_semi")
             .groupBy(g: _*).agg(aggs.head, aggs.tail: _*)
-            .localCheckpoint(true) // tiny (one row per retracting group);
+            .materialized // tiny (one row per retracting group);
               // resolved is consumed twice and must not re-scan the base
           minMaxCols.foldLeft(nsJoin(flagged, re, groupCols, "left")) { (d, m) =>
             d.withColumn(s"max_$m",

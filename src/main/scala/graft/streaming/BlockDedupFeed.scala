@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.Rewrite
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -101,7 +102,7 @@ object BlockDedupFeed {
     val blocks = Rewrite.blockFrame(batch.select(col("doc_id"), col("text")))
       .withColumn("bh", md5(col("btxt")))
       .withColumn("p", Rewrite.packedCol)
-      .localCheckpoint() // read three times (touched + flag + append); batch-sized
+      .materialized // read three times (touched + flag + append); batch-sized
     val touched = blocks.select(bucketCol(n)).distinct()
       .collect().map(_.getInt(0)).toSeq
     // one-time migration: a pre-manifest store's files must be in the
@@ -112,7 +113,7 @@ object BlockDedupFeed {
       .withColumn("bf", col("p") === min(col("p")).over(Window.partitionBy(col("bh"))))
       .join(idx, Seq("bh"), "left")
       .withColumn("keep", col("bf") && (col("owner").isNull || col("owner") === col("p")))
-      .localCheckpoint() // decisions must not shift between append and output
+      .materialized // decisions must not shift between append and output
     if (pinned == 0) BucketStore.writeBucketsFile(spark, indexDir, n)
     // Unconditional append (round 8): a replay's new-owner frame is
     // empty and writes nothing — probing it with isEmpty first was one
@@ -143,7 +144,7 @@ object BlockDedupFeed {
     * (BlockDedupFeedSpec pins both). Idempotent and replay-safe: rows
     * are immutable, so compaction only re-groups them; dynamic
     * partition overwrite touches exactly the bucket dirs and leaves the
-    * `_BUCKETS` pin in place; the localCheckpoint materializes the
+    * `_BUCKETS` pin in place; the materialization holds the
     * index before its source files are replaced. */
   def compact(spark: SparkSession, indexDir: String): Unit = {
     val n = BucketStore.pinnedBuckets(spark, indexDir)
@@ -158,7 +159,7 @@ object BlockDedupFeed {
       // compaction is where the store heals them PERMANENTLY
       val all = BucketStore.readBuckets(spark, indexDir, None, Some(idxSchema))
         .dropDuplicates("bh")
-        .localCheckpoint()
+        .materialized
       val touched = all.select(col("b")).distinct()
         .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
       all

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize.MaterializeOps
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -301,7 +302,7 @@ object BucketStore {
     if (pinned == 0) writeBucketsFile(spark, store, n)
     else ensureManifest(spark, store)
     val withB = rows.withColumn("b", bucketCol(keys, n))
-      .localCheckpoint() // touched-bucket collect + write; batch-sized
+      .materialized // touched-bucket collect + write; batch-sized
     val touched = withB.select(col("b")).distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
     val before = snapshotBuckets(spark, store, touched)

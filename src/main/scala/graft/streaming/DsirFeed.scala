@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.Dsir
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -168,7 +169,7 @@ object DsirFeed {
           sum(col("ct")).cast("long").as("ct"))
         .withColumn("batch", lit(-1L))
         .withColumn("b", BucketStore.bucketCol(Seq("fb"), n))
-        .localCheckpoint() // materialize BEFORE the manifest swap hides sources
+        .materialized // materialize BEFORE the manifest swap hides sources
       val touched = (0 until n).toSeq // replace-commit must cover every bucket
       val before = BucketStore.snapshotBuckets(spark, store, touched)
       folded.repartition(col("b")) // one file per bucket

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.{Dsir, Frontend}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -134,20 +135,20 @@ object FrontendFeed {
     if (AggView.readStamp(spark, dir, AppliedStamp) >= batchId) return // replay
     val slim = Frontend.slimFrame(
         docs.select(col("doc_id"), col("source"), col("lang"), col("text")))
-      .localCheckpoint() // the batch's one text scan; read by every store below
+      .materialized // the batch's one text scan; read by every store below
     val facts = slim.drop("ts").withColumn("batch", lit(batchId))
     val gated = slim
       .filter(!col("holdout") && col("c4k") && col("gpass"))
       .select(col("doc_id"), col("lang"), col("ts"), col("h"))
-      .localCheckpoint() // hmin + trigram + bigram consumers; batch-sized
+      .materialized // hmin + trigram + bigram consumers; batch-sized
     val hminB = Frontend.hashMin(gated)
       .select(col("h"), col("keep").as("m"))
       .withColumn("batch", lit(batchId))
     val trigB = Frontend.trigramRows(gated)
-      .localCheckpoint() // coverage (a) + the grams append; batch-sized
+      .materialized // coverage (a) + the grams append; batch-sized
     val holdB = Frontend.holdoutGrams(slim)
       .withColumn("batch", lit(batchId))
-      .localCheckpoint() // coverage (a)+(b) + the hold append; batch-sized
+      .materialized // coverage (a)+(b) + the hold append; batch-sized
     // coverage (a): this batch's train grams × the FULL holdout gram set
     // (history ∪ this batch's drop — the benchmark-suite side, bounded
     // by nature at deployment scale)
@@ -162,7 +163,7 @@ object FrontendFeed {
     val newHold = holdB.select(col("g"))
       .join(histHoldAll.filter(col("batch") =!= batchId).select(col("g")),
         Seq("g"), "left_anti")
-      .localCheckpoint() // bucket collect + probe join; drop-sized
+      .materialized // bucket collect + probe join; drop-sized
     val ng = buckets(spark, gramsDir(dir), numBuckets)
     val touchedG = newHold.select(BucketStore.bucketCol(Seq("g"), ng))
       .distinct().collect().map(_.getInt(0)).toSeq // bounded by bucket count
@@ -206,7 +207,7 @@ object FrontendFeed {
     val covCnt = visible(spark, covDir(dir), covSchema, Seq("doc_id", "j"))
       .groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("covered"))
     val clean = Frontend.cleanFilter(deduped, covCnt)
-      .localCheckpoint() // read by the db semi-join, the select join, funnel
+      .materialized // read by the db semi-join, the select join, funnel
     val db = visible(spark, dbDir(dir), dbSchema, Seq("doc_id", "fb"))
       .join(clean.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("lang"), col("fb").as("b"), col("c"))
@@ -257,7 +258,7 @@ object FrontendFeed {
         BucketStore.ensureManifest(spark, store)
         val all = BucketStore.readBuckets(spark, store, None, Some(schema))
           .dropDuplicates(keys)
-          .localCheckpoint() // materialize BEFORE the overwrite replaces sources
+          .materialized // materialize BEFORE the overwrite replaces sources
         val touched = all.select(col("b")).distinct()
           .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
         all.repartition(col("b")) // one file per bucket dir
@@ -276,7 +277,7 @@ object FrontendFeed {
               .drop("b").dropDuplicates(keys :+ "batch"))
           .withColumn("batch", lit(-1L))
           .withColumn("b", BucketStore.bucketCol(keys, n))
-          .localCheckpoint() // materialize BEFORE the manifest swap
+          .materialized // materialize BEFORE the manifest swap
         val touched = (0 until n).toSeq // replace-commit covers every bucket
         val before = BucketStore.snapshotBuckets(spark, store, touched)
         folded.repartition(col("b"))

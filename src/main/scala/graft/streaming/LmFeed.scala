@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -134,7 +135,7 @@ object LmFeed {
           .groupBy(keys.map(col): _*).agg(sum(col("c")).cast("long").as("c"))
           .withColumn("batch", lit(-1L))
           .withColumn("b", BucketStore.bucketCol(keys, n))
-          .localCheckpoint() // materialize BEFORE the manifest swap hides sources
+          .materialized // materialize BEFORE the manifest swap hides sources
         val touched = (0 until n).toSeq // replace-commit must cover every bucket
         val before = BucketStore.snapshotBuckets(spark, store, touched)
         folded.repartition(col("b")) // one file per bucket

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.Dedup
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -111,12 +112,12 @@ object MinHashFeed {
     val batchDocs = docs.select(col("doc_id"), col("text"))
     // doc-local state of the batch: shingle sets (+ counts) and band rows
     val shn = Dedup.shingleHashesWithCount(batchDocs)
-      .localCheckpoint() // verification joins + shingle append; batch-sized
+      .materialized // verification joins + shingle append; batch-sized
     val docsN = batchDocs.select(col("doc_id"))
       .join(shn.select(col("doc_id"), col("n")).distinct(), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("n"), lit(0L)).cast("long").as("n"))
     val bands = Dedup.bandRows(Dedup.signatures(batchDocs))
-      .localCheckpoint() // probe + pairing + append; 8 rows per doc
+      .materialized // probe + pairing + append; 8 rows per doc
     // candidates: in-batch bucket-mates ∪ history bucket-mates from the
     // TOUCHED band buckets only
     val nb = buckets(spark, bandsDir(dir), numBuckets)
@@ -132,14 +133,14 @@ object MinHashFeed {
       .filter(col("doc_a") =!= col("doc_b"))
     val cand = Dedup.pairsFromBandRows(bands)
       .unionByName(newOld).distinct()
-      .localCheckpoint() // old-id bucket collect + verify join; candidate-sized
+      .materialized // old-id bucket collect + verify join; candidate-sized
     // verification shingle table: the batch's sets + ONLY the implicated
     // historical docs' sets (semi-joined out of their touched buckets)
     val batchIds = batchDocs.select(col("doc_id"))
     val oldIds = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
       .join(batchIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint() // bucket collect + two semi joins; candidate-sized
+      .materialized // bucket collect + two semi joins; candidate-sized
     val nd = buckets(spark, docsDir(dir), numBuckets)
     val touchedDocs = oldIds.select(BucketStore.bucketCol(Seq("doc_id"), nd))
       .distinct().collect().map(_.getInt(0)).toSeq
@@ -180,8 +181,7 @@ object MinHashFeed {
   def survivors(spark: SparkSession, dir: String): DataFrame = {
     val prs = visible(spark, pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"))
       .select(col("doc_a"), col("doc_b"))
-    val edges = Dedup.symmetrize(prs)
-      .localCheckpoint() // computed once, read by every CC round
+    val edges = Dedup.symmetrize(prs).materialized // computed once, read by every CC round
     val cl = Dedup.ccLabels(edges) // (v, comp)
     val mins = cl.groupBy(col("comp")).agg(min(col("v")).as("m"))
     visible(spark, docsDir(dir), docsSchema, Seq("doc_id"))
@@ -205,7 +205,7 @@ object MinHashFeed {
         BucketStore.ensureManifest(spark, store)
         val all = BucketStore.readBuckets(spark, store, None, Some(schema))
           .dropDuplicates(keys)
-          .localCheckpoint() // materialize BEFORE the overwrite replaces sources
+          .materialized // materialize BEFORE the overwrite replaces sources
         val touched = all.select(col("b")).distinct()
           .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
         all.repartition(col("b")) // one file per bucket dir

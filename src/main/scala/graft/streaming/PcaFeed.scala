@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.Pca
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ object PcaFeed {
     * [[Pca.pcaPower]]'s output so incremental == batch is a direct
     * frame comparison. */
   def view(store: DataFrame): DataFrame = {
-    val st = store.localCheckpoint() // 2,145 rows, read three ways below
+    val st = store.materialized // 2,145 rows, read three ways below
     val n = st.filter(col("j") === -1L && col("k") === -1L)
       .select(col("v").cast("decimal(18,0)").as("n"))
     val sj = st.filter(col("k") === -1L && col("j") >= 0L)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.{Ivf, Pq}
+import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,7 +87,7 @@ object PqIndexFeed {
     val cents = readCodebooks(spark, storeDir)
     val codes = Pq.encode(batch, cents)
       .withColumn("b", bucketCol(n))
-      .localCheckpoint() // read twice (touched + append); batch-sized
+      .materialized // read twice (touched + append); batch-sized
     val touched = codes.select(col("b")).distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
     // one-time migration for pre-manifest stores, then the append-commit
@@ -114,7 +115,7 @@ object PqIndexFeed {
     val all = BucketStore.readBuckets(spark, codesDir(storeDir), None,
         Some(codesSchema))
       .dropDuplicates("vec_id", "sub")
-      .localCheckpoint() // materialize before replacing source files
+      .materialized // materialize before replacing source files
     val touched = all.select(col("b")).distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

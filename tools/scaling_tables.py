@@ -4,7 +4,7 @@
 Usage: python3 tools/scaling_tables.py /tmp/scaleprobe_rN.log
 
 Parses the one-JSON-line-per-(query, factor) output of
-`sbt "runMain graft.ScaleProbe 10"` and prints the three markdown
+`sbt "runMain graft.ScaleProbe 1,4,10"` and prints the three markdown
 tables in SCALING.md's layout, so a re-measure session updates the doc
 mechanically instead of by hand-transcription (which is how digits get
 dropped). Output notes (linear / bounded / see-note) are part of each
