@@ -1,7 +1,7 @@
 package graft.model
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned parquet store: S6's version-and-swap commit grown into the
@@ -20,10 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All metadata IO goes through the Hadoop FileSystem / FileContext API,
   * so the store works against any Hadoop-supported filesystem
   * (`file://`, `hdfs://`, object stores with an FS connector) — the same
-  * paths `df.write.parquet` accepts. The pointer swap uses
-  * `FileContext.rename(…, Options.Rename.OVERWRITE)`: atomic on HDFS and
-  * POSIX; on S3-style stores the connector maps it to a copy+delete, and
-  * a conditional-put pointer object is the documented hardening.
+  * paths `df.write.parquet` accepts. The pointer swap is a [[MetaFile]]
+  * write: tmp file, then an atomic rename-overwrite.
   *
   * Scale notes: the pointer file is the only mutable object; version
   * data is immutable-once-written, so concurrent readers never block
@@ -44,15 +42,8 @@ object VersionedStore {
   private def versionDir(root: String, v: Int) = s"$root/v=$v"
 
   /** Current pointer target, 0 if the store is empty / unborn. */
-  def latestVersion(root: String): Int = {
-    val p = latestPath(root)
-    val fs = p.getFileSystem(hadoopConf)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toInt
-      finally in.close()
-    } else 0
-  }
+  def latestVersion(root: String): Int =
+    MetaFile.read(SparkSession.active, latestPath(root)).fold(0)(_.trim.toInt)
 
   /** Highest `v=<n>` directory present on disk — the version-allocation
     * watermark. Distinct from `latestVersion` after a rollback: the
@@ -159,19 +150,6 @@ object VersionedStore {
     doomed
   }
 
-  private def setLatest(root: String, v: Int): Unit = {
-    val conf = hadoopConf
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    if (!fs.exists(rootPath)) fs.mkdirs(rootPath)
-    // write-then-rename: the tmp file is fully written and closed before
-    // the atomic-overwrite rename makes it the pointer
-    val tmp = new Path(root, "_LATEST.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8"))
-    finally out.close()
-    val fc = FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(latestPath(root)),
-      Options.Rename.OVERWRITE)
-  }
+  private def setLatest(root: String, v: Int): Unit =
+    MetaFile.write(SparkSession.active, latestPath(root), v.toString)
 }

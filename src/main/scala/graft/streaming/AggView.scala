@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.etl.Etl
 import graft.Materialize.MaterializeOps
+import graft.model.MetaFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -36,12 +38,12 @@ import org.apache.spark.sql.types.StructType
   * the only witness of the old extremum).
   *
   * Layout mirrors [[Cdc]]: the view is parquet bucketed by
-  * `b = pmod(xxhash64(groupCols), n)` and updated with dynamic partition
-  * overwrite, so a batch that touches 3 groups rewrites the ≤3 bucket
-  * directories those groups hash into — every other view bucket is
-  * byte-identical on disk. Group-key changes in an update are handled:
-  * the old image's group gets a negative delta and the new image's group
-  * a positive one.
+  * `b = pmod(xxhash64(groupCols), n)` and updated by
+  * [[BucketStore.overwrite]] (dynamic partition overwrite), so a batch
+  * that touches 3 groups rewrites the ≤3 bucket directories those
+  * groups hash into — every other view bucket is byte-identical on
+  * disk. Group-key changes in an update are handled: the old image's
+  * group gets a negative delta and the new image's group a positive one.
   *
   * Scale shape per batch: one keyed join of the batch against the
   * touched BASE buckets (to find replaced rows), one groupBy of batch
@@ -247,38 +249,18 @@ object AggView {
 
   private[graft] def walDir(viewDir: String): String = viewDir + "_wal"
 
-  private def hconf(spark: SparkSession) = spark.sessionState.newHadoopConf()
-
   /** Stamp read: the long in `<dir>/<name>`, or -1 if absent/unborn. */
-  private[graft] def readStamp(spark: SparkSession, dir: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = p.getFileSystem(hconf(spark))
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
+  private[graft] def readStamp(spark: SparkSession, dir: String, name: String): Long =
+    MetaFile.read(spark, new Path(dir, name)).fold(-1L)(_.trim.toLong)
 
-  /** Atomic stamp write: tmp file + FileContext rename-overwrite, so a
-    * reader never sees a torn stamp. */
+  /** Atomic stamp write ([[MetaFile]]): a reader never sees a torn stamp. */
   private[graft] def writeStamp(spark: SparkSession, dir: String,
-      name: String, v: Long): Unit = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(hconf(spark))
-    fs.mkdirs(d)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val dst = new org.apache.hadoop.fs.Path(dir, name)
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, hconf(spark))
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      name: String, v: Long): Unit =
+    MetaFile.write(spark, new Path(dir, name), v.toString)
 
   private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(hconf(spark)).delete(p, true)
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
 
   /** Continuous form: a stream of row images maintains base + view. */
@@ -330,36 +312,8 @@ object AggView {
       storeDir: String): Unit = {
     // Honor the view's pinned bucket count (fixed at creation; a later
     // different argument must not silently re-hash groups).
-    val pinned = BucketStore.pinnedBuckets(spark, viewDir)
-    val n = if (pinned > 0) pinned else numBuckets
+    val n = BucketStore.buckets(spark, viewDir, numBuckets)
     val g = groupCols.map(col)
-    def writeOut(rows: DataFrame, touched: Seq[Int],
-        checkpoint: Boolean = true): Unit = {
-      // Consumed twice, and the write below replaces the files the plan
-      // reads — unless the caller's frame is already checkpoint-derived
-      // (the min/max path checkpoints flagged + the rescan aggregate),
-      // in which case a second materialization would just double memory.
-      val merged = if (checkpoint) rows.materialized else rows
-      // Dynamic partition overwrite only rewrites partitions PRESENT in
-      // the output — a touched bucket whose last group was removed emits
-      // zero rows and would keep its stale file. Delete those explicitly.
-      val present = merged.select(col("b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      merged.repartition(col("b")) // one file per touched bucket — keeps the view's
-        // total file count at O(buckets) so later root listings don't grow
-        .write.partitionBy("b").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(viewDir)
-      val fs = new org.apache.hadoop.fs.Path(viewDir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      touched.filterNot(present).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(viewDir, s"b=$b"), true)
-      }
-      // overwrite-commit refresh: touched entries := current listings
-      // (emptied buckets drop out); crash before this line leaves a
-      // stale manifest that the next read stat-detects and rebuilds
-      BucketStore.refreshTouched(spark, viewDir, touched)
-    }
     if (!BucketStore.storeExists(spark, viewDir)) {
       val init0 = deltas.withColumn("b", BucketStore.bucketCol(groupCols, n))
         .filter(col("cnt") =!= 0L)
@@ -368,24 +322,22 @@ object AggView {
           .withColumn(s"min_$m", col(s"ins_min_$m"))
           .drop(s"ins_max_$m", s"ins_min_$m", s"rm_max_$m", s"rm_min_$m")
       }
-      init.repartition(col("b")).write.partitionBy("b").mode("overwrite").parquet(viewDir)
-      BucketStore.writeBucketsFile(spark, viewDir, numBuckets)
-      BucketStore.rebuildManifest(spark, viewDir) // creation pays ONE recursive listing
+      BucketStore.overwrite(spark, viewDir, init, Nil, n)
     } else if (minMaxCols.isEmpty) {
-      val withB = deltas.withColumn("b", BucketStore.bucketCol(groupCols, n))
-      val touched = withB.select(col("b")).distinct()
-        .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
+      val touched = BucketStore.touchedBuckets(deltas, groupCols, n)
       val existing = BucketStore.readBuckets(spark, viewDir, Some(touched))
-      writeOut(existing.unionByName(withB)
+      // groups whose count reaches zero drop out; a touched bucket left
+      // with no group is deleted by the overwrite
+      BucketStore.overwrite(spark, viewDir, existing
+        .unionByName(deltas.withColumn("b", BucketStore.bucketCol(groupCols, n)))
         .groupBy((g :+ col("b")): _*)
         .agg(sum(col("cnt")).as("cnt"),
           sumCols.map(c => sum(col(s"sum_$c")).as(s"sum_$c")): _*)
-        .filter(col("cnt") =!= 0L), touched)
+        .filter(col("cnt") =!= 0L), touched, n)
     } else {
       // MIN/MAX path: a join shape instead of a union-sum — the new
       // extremum is conditional on what left vs what remains.
-      val touched = deltas.withColumn("b", BucketStore.bucketCol(groupCols, n))
-        .select(col("b")).distinct().collect().map(_.getInt(0)).toSeq
+      val touched = BucketStore.touchedBuckets(deltas, groupCols, n)
       val ex = BucketStore.readBuckets(spark, viewDir, Some(touched))
         .drop("b")
         .select(g ++ Seq(col("cnt").as("__ex_cnt")) ++
@@ -434,8 +386,6 @@ object AggView {
           val re = nsJoin(Cdc.readStore(spark, storeDir),
               broadcast(needGroups), groupCols, "left_semi")
             .groupBy(g: _*).agg(aggs.head, aggs.tail: _*)
-            .materialized // tiny (one row per retracting group);
-              // resolved is consumed twice and must not re-scan the base
           minMaxCols.foldLeft(nsJoin(flagged, re, groupCols, "left")) { (d, m) =>
             d.withColumn(s"max_$m",
                 when(col(s"need_max_$m"), col(s"re_max_$m")).otherwise(col(s"cand_max_$m")))
@@ -443,12 +393,11 @@ object AggView {
                 when(col(s"need_min_$m"), col(s"re_min_$m")).otherwise(col(s"cand_min_$m")))
           }.drop(minMaxCols.flatMap(m => Seq(s"re_max_$m", s"re_min_$m")): _*)
         }
-      writeOut(resolved
+      BucketStore.overwrite(spark, viewDir, resolved
         .drop(minMaxCols.flatMap(m => Seq(s"cand_max_$m", s"cand_min_$m",
           s"need_max_$m", s"need_min_$m")): _*)
         .filter(col("cnt") =!= 0L)
-        .withColumn("b", BucketStore.bucketCol(groupCols, n)), touched,
-        checkpoint = false)
+        .withColumn("b", BucketStore.bucketCol(groupCols, n)), touched, n)
     }
   }
 
@@ -463,9 +412,7 @@ object AggView {
       groupCols: Seq[String], sumCols: Seq[String],
       numBuckets: Int = Cdc.DefaultBuckets,
       minMaxCols: Seq[String] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(viewDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(viewDir), true)
+    deleteDir(spark, viewDir)
     val base = Cdc.readStore(spark, storeDir)
     val d0 = contributions(base, groupCols, sumCols)
     val d =

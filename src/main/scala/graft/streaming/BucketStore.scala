@@ -1,21 +1,35 @@
 package graft.streaming
 
 import graft.Materialize.MaterializeOps
-import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.model.MetaFile
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The shared hash-bucketed parquet store layer — one layout, one
-  * metadata discipline, four users ([[Cdc]] snapshots, [[AggView]] view
-  * stores, [[BlockDedupFeed]] block indexes, [[PqIndexFeed]] code
-  * tables).
+/** The shared hash-bucketed parquet store — one layout, one metadata
+  * discipline, eight users: the OVERWRITE stores of [[Cdc]] (snapshots)
+  * and [[AggView]] (views), and the APPEND stores of [[BlockDedupFeed]],
+  * [[PqIndexFeed]], [[LmFeed]], [[DsirFeed]], [[MinHashFeed]] and
+  * [[FrontendFeed]]. This object is the only code that knows the commit
+  * protocol; the users call its verbs:
+  *
+  *  - [[read]] the visible rows, deduped on the store's logical key,
+  *    optionally only the touched buckets; an unborn store reads empty.
+  *    [[readBuckets]] is the raw, undeduped form.
+  *  - [[appendRows]] (or [[appendBucketed]] for rows already carrying
+  *    `b` and their touched set): the append commit.
+  *  - [[overwrite]] the touched buckets, or create the store.
+  *  - [[compact]] an immutable-fact store: dedup, then overwrite.
+  *  - [[fold]] a partial-count store to one `batch = -1` row per key.
+  *  - [[buckets]], [[bucketCol]], [[touchedBuckets]]: the bucket count
+  *    and the bucket of a row.
   *
   * Layout: `b=<k>/` partition directories with
   * `k = pmod(xxhash64(keys…), n)`, the bucket count pinned in a
   * `_BUCKETS` file at creation (re-hashing an existing store would
   * silently split keys across buckets, so a later different `numBuckets`
-  * argument is ignored by every user).
+  * argument is ignored — [[buckets]]).
   *
   * Metadata: a `_MANIFEST` file caching the store's live data files
   * (one `<bucket>\t<relative-path>` line per file; underscore-prefixed →
@@ -27,39 +41,39 @@ import org.apache.spark.sql.types.StructType
   * manifest, a read stats only the files it would open anyway: cost
   * follows the BATCH, which is the whole incremental contract. This is
   * the table-format move (Delta/Iceberg put file lists in the commit
-  * log for the same reason).
+  * log for the same reason). `_BUCKETS` and `_MANIFEST` are written
+  * whole and atomically ([[MetaFile]]).
   *
   * Two commit disciplines, matching the two writer shapes:
   *
-  *  - OVERWRITE stores (Cdc, AggView): dynamic partition overwrite
-  *    replaces whole bucket directories, then [[refreshTouched]]
-  *    re-lists exactly those directories. A crash between the two
-  *    leaves the manifest STALE — pointing at files the overwrite
-  *    deleted — which every manifest-driven read detects by stat'ing
-  *    its file list ([[validatedFiles]]) and repairs by one recursive
-  *    [[rebuildManifest]] listing; the writer's replay then converges
-  *    (merges are idempotent by order-column competition). No manual
-  *    `_MANIFEST` deletion, ever — the round-11 advisor finding.
+  *  - OVERWRITE ([[overwrite]]: Cdc, AggView, and [[compact]]): dynamic
+  *    partition overwrite replaces whole bucket directories, then
+  *    [[refreshTouched]] re-lists exactly those directories. A crash
+  *    between the two leaves the manifest STALE — pointing at files the
+  *    overwrite deleted — which every manifest-driven read detects by
+  *    stat'ing its file list ([[validatedFiles]]) and repairs by one
+  *    recursive [[rebuildManifest]] listing; the writer's replay then
+  *    converges (merges are idempotent by order-column competition). No
+  *    manual `_MANIFEST` deletion, ever — the round-11 advisor finding.
   *
-  *  - APPEND stores (BlockDedupFeed, PqIndexFeed): the manifest is the
-  *    COMMIT POINT. [[snapshotBuckets]] before the write and
-  *    [[appendToManifest]] with the before/after difference means the
+  *  - APPEND ([[appendRows]], [[appendBucketed]], [[fold]]): the
+  *    manifest is the COMMIT POINT. [[snapshotBuckets]] before the write
+  *    and [[commitAppended]] with the before/after difference means the
   *    manifest gains exactly the files this batch wrote: a crash
   *    between data write and manifest append leaves ORPHAN files that
   *    no manifest-driven read ever sees — logically the append never
   *    happened, the replayed batch recomputes identical decisions,
   *    re-appends, and commits; orphans are physical garbage only,
-  *    reclaimed when compaction's dynamic overwrite replaces the
-  *    bucket directory. One recovery path CAN make orphans visible:
-  *    a [[rebuildManifest]] (triggered when a crashed COMPACTION left
-  *    the manifest pointing at deleted files) lists the raw
-  *    directories and so resurrects any crashed-append orphan next to
-  *    its replayed twin. Replay determinism makes the twins
-  *    byte-identical, so the READ CONTRACT for append stores is:
-  *    every read path deduplicates on the store's logical key
-  *    (BlockDedupFeed on `bh`, PqIndexFeed on `(vec_id, sub)`), and
-  *    compaction heals the duplication permanently by deduping before
-  *    it rewrites.
+  *    reclaimed when [[compact]]'s dynamic overwrite replaces the
+  *    bucket directory or by [[fold]]'s vacuum. One recovery path CAN
+  *    make orphans visible: a [[rebuildManifest]] (triggered when a
+  *    crashed compaction left the manifest pointing at deleted files)
+  *    lists the raw directories and so resurrects any crashed-append
+  *    orphan next to its replayed twin. Replay determinism makes the
+  *    twins byte-identical, so the READ CONTRACT for append stores is:
+  *    every read path deduplicates on the store's logical key ([[read]]),
+  *    and [[compact]] heals the duplication permanently by deduping
+  *    before it rewrites.
   *
   * Concurrency contract: ONE WRITER PER STORE. [[commitAppended]] and
   * [[refreshTouched]] are read-modify-write over the whole `_MANIFEST`
@@ -80,66 +94,201 @@ object BucketStore {
   def bucketCol(keys: Seq[String], n: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int").as("b")
 
+  /** The buckets `rows` hash into — a driver-side collect BOUNDED BY the
+    * bucket count (metadata, not data). */
+  def touchedBuckets(rows: DataFrame, keys: Seq[String], n: Int): Seq[Int] =
+    rows.select(bucketCol(keys, n)).distinct().collect().map(_.getInt(0)).toSeq
+
   /** The store's pinned bucket count, or 0 if the store is unborn. */
-  def pinnedBuckets(spark: SparkSession, storeDir: String): Int = {
-    val p = bucketsPath(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toInt
-      finally in.close()
-    }
+  def pinnedBuckets(spark: SparkSession, storeDir: String): Int =
+    MetaFile.read(spark, bucketsPath(storeDir)).fold(0)(_.trim.toInt)
+
+  /** The pinned bucket count, or `numBuckets` before the store is born. */
+  def buckets(spark: SparkSession, storeDir: String, numBuckets: Int): Int = {
+    val pinned = pinnedBuckets(spark, storeDir)
+    if (pinned > 0) pinned else numBuckets
   }
 
   /** Whether a bucketed store has been created at `dir`. */
   def storeExists(spark: SparkSession, dir: String): Boolean =
     pinnedBuckets(spark, dir) > 0
 
-  def writeBucketsFile(spark: SparkSession, storeDir: String, n: Int): Unit = {
-    val p = bucketsPath(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(n.toString.getBytes("UTF-8"))
-    finally out.close()
+  // ---- verbs ---------------------------------------------------------
+
+  /** The visible rows of `touched` (all buckets when None), `b` dropped
+    * and deduped on `keys` — the append-store read contract (object
+    * doc). An unborn store, or an empty touched set, reads as an empty
+    * frame of `schema` without `b`. */
+  def read(spark: SparkSession, store: String, schema: StructType,
+      keys: Seq[String], touched: Option[Seq[Int]]): DataFrame =
+    if (!storeExists(spark, store) || touched.exists(_.isEmpty))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).drop("b")
+    else
+      readBuckets(spark, store, touched, Some(schema))
+        .drop("b")
+        .dropDuplicates(keys)
+
+  /** Append one batch of rows under the append commit, bucketed by
+    * `keys` into the pinned (or, for an unborn store, `numBuckets`)
+    * bucket count. */
+  def appendRows(spark: SparkSession, store: String, rows: DataFrame,
+      keys: Seq[String], numBuckets: Int): Unit = {
+    val n = buckets(spark, store, numBuckets)
+    val withB = rows.withColumn("b", bucketCol(keys, n))
+      .materialized // touched-bucket collect + write; batch-sized
+    appendBucketed(spark, store, withB, touchedBuckets(withB, keys, n), n)
   }
+
+  /** The append commit for rows that already carry `b` (bucketed into
+    * `n`) and whose touched buckets the caller holds: pin `_BUCKETS`
+    * before the first append (a crash right after leaves an empty
+    * pinned store, which reads empty and replays clean), snapshot the
+    * touched dirs, write one file per touched bucket, and commit exactly
+    * the before/after difference ([[commitAppended]]). */
+  def appendBucketed(spark: SparkSession, store: String, withB: DataFrame,
+      touched: Seq[Int], n: Int): Unit = {
+    if (storeExists(spark, store)) ensureManifest(spark, store)
+    else writeBucketsFile(spark, store, n)
+    val before = snapshotBuckets(spark, store, touched)
+    withB.repartition(col("b")) // one file per touched bucket per batch, not tasks × buckets
+      .write.partitionBy("b").mode("append").parquet(store)
+    commitAppended(spark, store, touched, before)
+  }
+
+  /** Replace the `touched` buckets with `rows` (which carry `b`, bucketed
+    * into `n`). An unborn store is written whole, pinned to `n`, and
+    * given a manifest by one recursive listing (`touched` is unused). An
+    * existing store takes a dynamic partition overwrite, which rewrites
+    * only the buckets present in `rows`: a touched bucket left with no
+    * rows still holds exactly the files it had before the write, so it
+    * is deleted. Then the touched entries of the manifest are refreshed
+    * from their listings ([[refreshTouched]]); a crash before that leaves
+    * a stale manifest that the next read detects and rebuilds. */
+  def overwrite(spark: SparkSession, store: String, rows: DataFrame,
+      touched: Seq[Int], n: Int): Unit = {
+    // one file per bucket: the store's file count stays O(buckets), so a
+    // listing fallback does not grow with history
+    val out = rows.repartition(col("b")).write.partitionBy("b").mode("overwrite")
+    if (!storeExists(spark, store)) {
+      out.parquet(store)
+      writeBucketsFile(spark, store, n)
+      rebuildManifest(spark, store)
+    } else {
+      val before = snapshotBuckets(spark, store, touched)
+      out.option("partitionOverwriteMode", "dynamic").parquet(store)
+      val fs = new Path(store).getFileSystem(spark.sessionState.newHadoopConf())
+      touched.filter(b => before(b).nonEmpty &&
+          listBucketFiles(spark, store, b).toSet == before(b))
+        .foreach(b => fs.delete(new Path(store, s"b=$b"), true))
+      refreshTouched(spark, store, touched)
+    }
+  }
+
+  /** Compact an immutable-fact append store to one file per bucket:
+    * read the manifest-visible rows, dedup on `keys` (healing any
+    * rebuild-resurrected twins for good), and [[overwrite]] every live
+    * bucket. The dir overwrite also deletes crashed appends' invisible
+    * orphans, so compaction doubles as garbage collection. Idempotent
+    * and replay-safe: the rows are immutable, so it only re-groups them.
+    * No-op for an unborn store. */
+  def compact(spark: SparkSession, store: String, schema: StructType,
+      keys: Seq[String]): Unit =
+    if (storeExists(spark, store)) {
+      ensureManifest(spark, store)
+      val all = readBuckets(spark, store, None, Some(schema))
+        .dropDuplicates(keys)
+        .materialized // materialize BEFORE the overwrite replaces sources
+      overwrite(spark, store, all, readManifest(spark, store).get.keys.toSeq,
+        pinnedBuckets(spark, store))
+    }
+
+  /** Fold a partial-count append store (rows carry a `batch` id) to one
+    * row per `keys`: `agg` folds the visible, twin-healed partials (it
+    * must group by `keys`), the result is appended as `batch = -1`, and
+    * a replace-commit over EVERY bucket ([[commitReplaced]]) swaps it in
+    * atomically — two generations visible at once would double-sum,
+    * which is why these stores cannot take [[compact]]'s dedup heal.
+    * The replaced partials are then vacuumed. Idempotent: re-folding a
+    * folded store is the identity. No-op for an unborn store. */
+  def fold(spark: SparkSession, store: String, schema: StructType,
+      keys: Seq[String], agg: DataFrame => DataFrame): Unit =
+    if (storeExists(spark, store)) {
+      ensureManifest(spark, store)
+      val n = pinnedBuckets(spark, store)
+      val folded = agg(read(spark, store, schema, keys :+ "batch", None))
+        .withColumn("batch", lit(-1L))
+        .withColumn("b", bucketCol(keys, n))
+        .materialized // materialize BEFORE the manifest swap hides sources
+      val touched = (0 until n).toSeq // replace-commit must cover every bucket
+      val before = snapshotBuckets(spark, store, touched)
+      folded.repartition(col("b")) // one file per bucket
+        .write.partitionBy("b").mode("append").parquet(store)
+      commitReplaced(spark, store, touched, before)
+      vacuum(spark, store)
+    }
+
+  /** Read the touched buckets (all when None): manifest fast path with
+    * stat validation; pre-manifest stores fall back to one
+    * partition-discovery read with a bucket filter. `schemaHint`
+    * covers the empty-file-list case (all-fresh buckets) and lets
+    * append stores read consistently before their first compaction;
+    * without it the schema comes from any one manifest file. */
+  def readBuckets(spark: SparkSession, storeDir: String,
+      touched: Option[Seq[Int]],
+      schemaHint: Option[StructType] = None): DataFrame =
+    validatedFiles(spark, storeDir, touched) match {
+      case Some(files) =>
+        val reader0 = spark.read.option("basePath", storeDir)
+        val reader = schemaHint.fold(reader0)(reader0.schema)
+        if (files.nonEmpty) reader.parquet(files.map(f => s"$storeDir/$f"): _*)
+        else schemaHint match {
+          case Some(sc) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sc)
+          case None =>
+            // schema from any one live file of the whole store; a
+            // fully-empty manifest falls back to partition discovery
+            // (matches the pre-manifest read for degenerate stores)
+            readManifest(spark, storeDir).get.values.flatten.headOption match {
+              case Some(any) => reader0.parquet(s"$storeDir/$any").limit(0)
+              case None => reader0.parquet(storeDir)
+            }
+        }
+      case None =>
+        val reader0 = spark.read.option("basePath", storeDir)
+        val reader = schemaHint.fold(reader0)(reader0.schema)
+        touched match {
+          case Some(bs) => reader.parquet(storeDir)
+            .filter(col("b").isin(bs: _*)) // partition-pruned scan
+          case None => reader.parquet(storeDir)
+        }
+    }
+
+  // ---- the protocol steps (the verbs above are their only callers) ---
+
+  private[graft] def writeBucketsFile(spark: SparkSession, storeDir: String,
+      n: Int): Unit =
+    MetaFile.write(spark, bucketsPath(storeDir), n.toString)
 
   /** The manifest's file map, or `None` for a pre-manifest store (every
     * reader falls back to directory listing and the next write
     * self-heals by writing one). */
-  def readManifest(spark: SparkSession,
-      storeDir: String): Option[Map[Int, Seq[String]]] = {
-    val p = manifestPath(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Some(text.linesIterator.filter(_.nonEmpty).map { line =>
+  private[graft] def readManifest(spark: SparkSession,
+      storeDir: String): Option[Map[Int, Seq[String]]] =
+    MetaFile.read(spark, manifestPath(storeDir)).map { text =>
+      text.linesIterator.filter(_.nonEmpty).map { line =>
         val Array(b, f) = line.split("\t", 2)
         (b.toInt, f)
-      }.toSeq.groupMap(_._1)(_._2))
+      }.toSeq.groupMap(_._1)(_._2)
     }
-  }
 
   private def writeManifest(spark: SparkSession, storeDir: String,
-      entries: Map[Int, Seq[String]]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val tmp = new Path(storeDir, "_MANIFEST.tmp")
-    val fs = tmp.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(entries.toSeq.sortBy(_._1)
+      entries: Map[Int, Seq[String]]): Unit =
+    MetaFile.write(spark, manifestPath(storeDir), entries.toSeq.sortBy(_._1)
       .flatMap { case (b, fsq) => fsq.sorted.map(f => s"$b\t$f") }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val fc = FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(manifestPath(storeDir)),
-      Options.Rename.OVERWRITE)
-  }
+      .mkString("\n"))
 
   /** Data files of one `b=<k>` directory as manifest-relative paths —
     * one targeted listing, O(files-in-bucket). */
-  def listBucketFiles(spark: SparkSession, storeDir: String,
+  private[graft] def listBucketFiles(spark: SparkSession, storeDir: String,
       bucket: Int): Seq[String] = {
     val dir = new Path(storeDir, s"b=$bucket")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -152,7 +301,7 @@ object BucketStore {
 
   /** Rebuild `_MANIFEST` from one recursive listing — store creation,
     * and the overwrite stores' recovery path after a crash mid-commit. */
-  def rebuildManifest(spark: SparkSession, storeDir: String): Unit = {
+  private[graft] def rebuildManifest(spark: SparkSession, storeDir: String): Unit = {
     val root = new Path(storeDir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val entries = scala.collection.mutable.Map.empty[Int, List[String]]
@@ -177,7 +326,7 @@ object BucketStore {
     * listings, one file each under the one-file-per-bucket write
     * discipline). No-op fallback to [[rebuildManifest]] for a
     * pre-manifest store. */
-  def refreshTouched(spark: SparkSession, storeDir: String,
+  private[graft] def refreshTouched(spark: SparkSession, storeDir: String,
       touched: Seq[Int]): Unit =
     readManifest(spark, storeDir) match {
       case Some(m) => writeManifest(spark, storeDir,
@@ -189,12 +338,12 @@ object BucketStore {
   /** One-time migration for a pre-manifest store: build the manifest
     * from the current listing so later append commits extend it rather
     * than shadowing the existing files. No-op when one exists. */
-  def ensureManifest(spark: SparkSession, storeDir: String): Unit =
+  private[graft] def ensureManifest(spark: SparkSession, storeDir: String): Unit =
     if (readManifest(spark, storeDir).isEmpty) rebuildManifest(spark, storeDir)
 
   /** Current per-bucket file sets of the touched dirs — the "before"
     * side of an append commit's before/after difference. */
-  def snapshotBuckets(spark: SparkSession, storeDir: String,
+  private[graft] def snapshotBuckets(spark: SparkSession, storeDir: String,
       touched: Seq[Int]): Map[Int, Set[String]] =
     touched.map(b => b -> listBucketFiles(spark, storeDir, b).toSet).toMap
 
@@ -202,7 +351,7 @@ object BucketStore {
     * since `before` ([[snapshotBuckets]]) — orphans from earlier
     * crashed appends stay invisible (see object doc). Initializes the
     * manifest for a first-append store. */
-  def commitAppended(spark: SparkSession, storeDir: String,
+  private[graft] def commitAppended(spark: SparkSession, storeDir: String,
       touched: Seq[Int], before: Map[Int, Set[String]]): Unit = {
     val m = readManifest(spark, storeDir).getOrElse(Map.empty)
     val added = touched.map { b =>
@@ -218,18 +367,17 @@ object BucketStore {
   /** Replace-commit: the touched buckets' manifest entries become EXACTLY
     * the files that appeared since `before` ([[snapshotBuckets]]) — one
     * atomic manifest swap that makes every pre-existing file of those
-    * buckets invisible garbage WITHOUT a physical delete. This is the
-    * compaction commit for append stores whose rows are NOT immutable
+    * buckets invisible garbage WITHOUT a physical delete. This is
+    * [[fold]]'s commit, for append stores whose rows are NOT immutable
     * (folded count partials: two generations visible at once would
     * double-sum, so the dedup-on-logical-key heal that protects
     * [[commitAppended]] stores cannot apply). Because nothing is
     * deleted, the stat-validation rebuild — the one path that can
     * resurrect invisible files — is never triggered by this commit;
     * a crash BEFORE the swap leaves the new files as invisible orphans
-    * and re-running the compaction converges. Replaced files are
-    * physical garbage; reclaim with a manifest-diff vacuum once the
-    * swap is durable. */
-  def commitReplaced(spark: SparkSession, storeDir: String,
+    * and re-running the fold converges. Replaced files are physical
+    * garbage, reclaimed by [[vacuum]] once the swap is durable. */
+  private[graft] def commitReplaced(spark: SparkSession, storeDir: String,
       touched: Seq[Int], before: Map[Int, Set[String]]): Unit = {
     val m = readManifest(spark, storeDir).getOrElse(Map.empty)
     val repl = touched.map { b =>
@@ -245,7 +393,7 @@ object BucketStore {
     * file is never read, and a replayed batch re-appends FRESH files
     * rather than re-attaching old orphans. No-op for pre-manifest
     * stores (everything visible there). */
-  def vacuum(spark: SparkSession, storeDir: String): Unit =
+  private[graft] def vacuum(spark: SparkSession, storeDir: String): Unit =
     readManifest(spark, storeDir).foreach { m =>
       val live = m.values.flatten.toSet
       val root = new Path(storeDir)
@@ -272,7 +420,7 @@ object BucketStore {
     * the stale-manifest crash signature — triggers one
     * [[rebuildManifest]] and a re-read, automatically. Returns None
     * for a pre-manifest store (callers fall back to listing reads). */
-  def validatedFiles(spark: SparkSession, storeDir: String,
+  private[graft] def validatedFiles(spark: SparkSession, storeDir: String,
       touched: Option[Seq[Int]]): Option[Seq[String]] = {
     def files(m: Map[Int, Seq[String]]): Seq[String] = touched match {
       case Some(bs) => bs.flatMap(b => m.getOrElse(b, Nil))
@@ -288,62 +436,4 @@ object BucketStore {
       }
     }
   }
-
-  /** Append one batch of rows to an append store under the full commit
-    * protocol: pin `_BUCKETS` before the first append, ensure the
-    * manifest, bucket by `keys`, snapshot the touched dirs, write one
-    * file per touched bucket, and commit exactly the before/after
-    * difference ([[commitAppended]]). Shared by [[LmFeed]]'s count
-    * partials and [[MinHashFeed]]'s four index stores. */
-  def appendRows(spark: SparkSession, store: String, rows: DataFrame,
-      keys: Seq[String], numBuckets: Int): Unit = {
-    val pinned = pinnedBuckets(spark, store)
-    val n = if (pinned > 0) pinned else numBuckets
-    if (pinned == 0) writeBucketsFile(spark, store, n)
-    else ensureManifest(spark, store)
-    val withB = rows.withColumn("b", bucketCol(keys, n))
-      .materialized // touched-bucket collect + write; batch-sized
-    val touched = withB.select(col("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
-    val before = snapshotBuckets(spark, store, touched)
-    withB.repartition(col("b")) // one file per touched bucket per batch
-      .write.partitionBy("b").mode("append").parquet(store)
-    commitAppended(spark, store, touched, before)
-  }
-
-  /** Read the touched buckets (all when None): manifest fast path with
-    * stat validation; pre-manifest stores fall back to one
-    * partition-discovery read with a bucket filter. `schemaHint`
-    * covers the empty-file-list case (all-fresh buckets) and lets
-    * append stores read consistently before their first compaction;
-    * without it the schema comes from any one manifest file. */
-  def readBuckets(spark: SparkSession, storeDir: String,
-      touched: Option[Seq[Int]],
-      schemaHint: Option[StructType] = None): DataFrame =
-    validatedFiles(spark, storeDir, touched) match {
-      case Some(files) =>
-        val reader0 = spark.read.option("basePath", storeDir)
-        val reader = schemaHint.fold(reader0)(reader0.schema)
-        if (files.nonEmpty) reader.parquet(files.map(f => s"$storeDir/$f"): _*)
-        else schemaHint match {
-          case Some(sc) => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-          case None =>
-            // schema from any one live file of the whole store; a
-            // fully-empty manifest falls back to partition discovery
-            // (matches the pre-manifest read for degenerate stores)
-            readManifest(spark, storeDir).get.values.flatten.headOption match {
-              case Some(any) => reader0.parquet(s"$storeDir/$any").limit(0)
-              case None => reader0.parquet(storeDir)
-            }
-        }
-      case None =>
-        val reader0 = spark.read.option("basePath", storeDir)
-        val reader = schemaHint.fold(reader0)(reader0.schema)
-        touched match {
-          case Some(bs) => reader.parquet(storeDir)
-            .filter(col("b").isin(bs: _*)) // partition-pruned scan
-          case None => reader.parquet(storeDir)
-        }
-    }
 }

@@ -12,19 +12,15 @@ import org.apache.spark.sql.types.StructType
   * snapshot store per micro-batch — the streaming face of `Etl.merge`,
   * sibling of WeeklyFeed's insert-only feed.
   *
-  * Store layout: `<store>/b=<k>/` partition directories, `k =
-  * pmod(xxhash64(keys), n)`, with the bucket count pinned in a
-  * `_BUCKETS` file at creation (underscore-prefixed → invisible to
-  * partition discovery). A micro-batch rewrites ONLY the buckets its
-  * keys hash into: the existing-side read resolves the touched
-  * buckets' files through the `_MANIFEST` cache (falling back to a
-  * partition-pruned listing scan for pre-manifest stores), and the
-  * write uses dynamic partition overwrite, so at 100 TB a trickle of
-  * CDC images pays for the touched slice of the store, not a
-  * full-corpus rewrite per batch (the round-4 shape) — and not even a
-  * full-store LISTING per batch (the round-10 residual: with buckets
-  * ∝ snapshot size, O(buckets) root listing made the history axis
-  * 2.4× instead of flat; see [[BucketStore.readManifest]]).
+  * The store is a [[BucketStore]] bucketed by `keys`. A micro-batch
+  * rewrites ONLY the buckets its keys hash into: the existing-side read
+  * resolves the touched buckets' files through the store's manifest,
+  * and [[BucketStore.overwrite]] replaces just those bucket
+  * directories, so at 100 TB a trickle of CDC images pays for the
+  * touched slice of the store, not a full-corpus rewrite per batch (the
+  * round-4 shape) — and not even a full-store LISTING per batch (the
+  * round-10 residual: with buckets ∝ snapshot size, O(buckets) root
+  * listing made the history axis 2.4× instead of flat).
   *
   * Scale notes: each micro-batch pays one keyed join against the
   * touched buckets only (AQE broadcasts small batches); state lives in
@@ -76,25 +72,15 @@ object Cdc {
       keys: Seq[String], orderCol: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     val spark = batch.sparkSession
-    val pinned = BucketStore.pinnedBuckets(spark, storeDir)
-    val n = if (pinned > 0) pinned else numBuckets
+    val n = BucketStore.buckets(spark, storeDir, numBuckets)
     val newest = Etl.dedupFirst(batch, keys, Seq(col(orderCol).desc))
       .withColumn("b", BucketStore.bucketCol(keys, n))
-    if (pinned == 0) {
-      newest.repartition(col("b")) // one file per bucket: store file count stays = bucket
-        // count, so any listing fallback is O(buckets), not
-        // O(buckets × writer-tasks) growing with history
-        .write.partitionBy("b").mode("overwrite").parquet(storeDir)
-      BucketStore.writeBucketsFile(spark, storeDir, n)
-      BucketStore.rebuildManifest(spark, storeDir) // creation pays ONE recursive listing
-    } else {
-      val touched = batch.select(BucketStore.bucketCol(keys, n)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // Manifest fast path (with stale-entry stat validation + self-heal
-      // in BucketStore): the exact file list of the touched buckets —
-      // stats O(batch-keys) files, never lists the root. basePath
-      // re-attaches the b partition column from the paths. Pre-manifest
-      // stores take one partition-pruned listing read and heal below.
+    if (!BucketStore.storeExists(spark, storeDir))
+      BucketStore.overwrite(spark, storeDir, newest, Nil, n)
+    else {
+      val touched = BucketStore.touchedBuckets(batch, keys, n)
+      // the touched buckets' exact file list through the manifest —
+      // stats O(batch-keys) files, never lists the root
       val existing = BucketStore.readBuckets(spark, storeDir, Some(touched),
         schemaHint = Some(newest.schema))
       val merged = Etl.dedupFirst(
@@ -102,15 +88,7 @@ object Cdc {
           .unionByName(newest.withColumn("__src", lit(1))),
         keys, Seq(col(orderCol).desc, col("__src").desc))
         .drop("__src")
-      merged.repartition(col("b")) // one file per touched bucket (see creation note)
-        .write.partitionBy("b").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(storeDir)
-      // Overwrite-commit refresh: touched buckets' entries become their
-      // current listings — O(touched) targeted listings, each one file
-      // under the write discipline; pre-manifest stores self-heal with
-      // one full listing.
-      BucketStore.refreshTouched(spark, storeDir, touched)
+      BucketStore.overwrite(spark, storeDir, merged, touched, n)
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ext.Dsir
-import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -46,8 +45,8 @@ import org.apache.spark.sql.types._
   * a crash between append-commit and stamp leaves committed partials
   * the replay duplicates, so every read path dedups on (batch, key)
   * first. Docs are ingested ONCE (the [[MinHashFeed]] doc-once
-  * contract). [[compact]] folds `cnt` to one row per feature bucket via
-  * the atomic [[BucketStore.commitReplaced]] manifest swap; `docs` and
+  * contract). [[compact]] folds `cnt` to one row per feature bucket with
+  * [[BucketStore.fold]]'s atomic manifest swap; `docs` and
   * `univ` rows are immutable facts and need no folding. */
 object DsirFeed {
 
@@ -70,12 +69,6 @@ object DsirFeed {
     StructField("doc_id", LongType), StructField("batch", LongType),
     StructField("b", IntegerType)))
 
-  /** Test hook (private[graft]): DsirFeedSpec drives this directly to
-    * simulate the crash-between-commit-and-stamp twin. */
-  private[graft] def appendPartials(spark: SparkSession, store: String,
-      partials: DataFrame, keys: Seq[String], numBuckets: Int): Unit =
-    BucketStore.appendRows(spark, store, partials, keys, numBuckets)
-
   /** Ingest one document batch — (doc_id, text, lang) rows, each doc_id
     * ONCE across the feed's lifetime. `batchId` must be monotonic
     * (foreachBatch epochs); a replayed id is a no-op. */
@@ -93,24 +86,17 @@ object DsirFeed {
       .withColumn("batch", lit(batchId))
     val univ = docs.select(col("doc_id").cast("long").as("doc_id"))
       .withColumn("batch", lit(batchId))
-    appendPartials(spark, cntDir(dir), cnt, Seq("fb"), numBuckets)
-    appendPartials(spark, docsDir(dir), db, Seq("fb"), numBuckets)
-    appendPartials(spark, univDir(dir), univ, Seq("doc_id"), numBuckets)
+    BucketStore.appendRows(spark, cntDir(dir), cnt, Seq("fb"), numBuckets)
+    BucketStore.appendRows(spark, docsDir(dir), db, Seq("fb"), numBuckets)
+    BucketStore.appendRows(spark, univDir(dir), univ, Seq("doc_id"), numBuckets)
     AggView.writeStamp(spark, dir, AppliedStamp, batchId)
   }
-
-  /** Visible rows of one store, crash-twin-healed. */
-  private def visible(spark: SparkSession, store: String,
-      schema: StructType, keys: Seq[String]): DataFrame =
-    BucketStore.readBuckets(spark, store, None, Some(schema))
-      .drop("b")
-      .dropDuplicates(keys :+ "batch")
 
   /** Folded per-bucket count table (b, cr, ct) — x177's `cr`/`ct`
     * tables in one frame (a bucket with target hits always has raw
     * hits, so the frames share one bucket set). */
   def bucketCounts(spark: SparkSession, dir: String): DataFrame =
-    visible(spark, cntDir(dir), cntSchema, Seq("fb"))
+    BucketStore.read(spark, cntDir(dir), cntSchema, Seq("fb", "batch"), None)
       .groupBy(col("fb"))
       .agg(sum(col("cr")).cast("long").as("cr"),
         sum(col("ct")).cast("long").as("ct"))
@@ -125,7 +111,8 @@ object DsirFeed {
     val ratio = Dsir.ratioTable(
       counts.select(col("b"), col("cr")),
       counts.select(col("b"), col("ct")), tot)
-    val db = visible(spark, docsDir(dir), docSchema, Seq("doc_id", "fb"))
+    val db = BucketStore.read(spark, docsDir(dir), docSchema,
+        Seq("doc_id", "fb", "batch"), None)
       .select(col("doc_id"), col("fb").as("b"), col("c"))
     Dsir.scoreDocBuckets(db, ratio)
   }
@@ -135,7 +122,7 @@ object DsirFeed {
     * batch query on the concatenated corpus. */
   def selected(spark: SparkSession, dir: String): DataFrame =
     Dsir.selectTail(scores(spark, dir),
-      visible(spark, univDir(dir), univSchema, Seq("doc_id"))
+      BucketStore.read(spark, univDir(dir), univSchema, Seq("doc_id", "batch"), None)
         .select(col("doc_id")))
 
   /** The continuous pipeline ([[BlockDedupFeed.run]]'s shape): document
@@ -155,27 +142,12 @@ object DsirFeed {
       }
       .start()
 
-  /** Fold `cnt` to one row per feature bucket (`batch = -1`) via the
-    * atomic manifest swap — the LSM maintenance pass. `docs`/`univ`
+  /** Fold `cnt` to one row per feature bucket (`batch = -1`) with
+    * [[BucketStore.fold]] — the LSM maintenance pass. `docs`/`univ`
     * are immutable facts: nothing to fold. Idempotent. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val store = cntDir(dir)
-    if (BucketStore.storeExists(spark, store)) {
-      BucketStore.ensureManifest(spark, store)
-      val n = BucketStore.pinnedBuckets(spark, store)
-      val folded = visible(spark, store, cntSchema, Seq("fb"))
-        .groupBy(col("fb"))
+  def compact(spark: SparkSession, dir: String): Unit =
+    BucketStore.fold(spark, cntDir(dir), cntSchema, Seq("fb"),
+      _.groupBy(col("fb"))
         .agg(sum(col("cr")).cast("long").as("cr"),
-          sum(col("ct")).cast("long").as("ct"))
-        .withColumn("batch", lit(-1L))
-        .withColumn("b", BucketStore.bucketCol(Seq("fb"), n))
-        .materialized // materialize BEFORE the manifest swap hides sources
-      val touched = (0 until n).toSeq // replace-commit must cover every bucket
-      val before = BucketStore.snapshotBuckets(spark, store, touched)
-      folded.repartition(col("b")) // one file per bucket
-        .write.partitionBy("b").mode("append").parquet(store)
-      BucketStore.commitReplaced(spark, store, touched, before)
-      BucketStore.vacuum(spark, store)
-    }
-  }
+          sum(col("ct")).cast("long").as("ct")))
 }

@@ -98,32 +98,9 @@ object FrontendFeed {
     StructField("fb", LongType), StructField("c", LongType),
     StructField("b", IntegerType)))
 
-  /** Test hook (private[graft]): FrontendFeedSpec drives this directly
-    * to simulate the crash-between-append-and-stamp twin. */
-  private[graft] def appendPartials(spark: SparkSession, store: String,
-      partials: DataFrame, keys: Seq[String], numBuckets: Int): Unit =
-    BucketStore.appendRows(spark, store, partials, keys, numBuckets)
-
   /** The hold store's physical dir — FrontendFeedSpec's crash twin
     * targets the one order-sensitive store. */
   private[graft] def holdStoreDir(dir: String): String = holdDir(dir)
-
-  /** Visible rows of one store, crash-twin-healed (dedup on the logical
-    * key), bucket-pruned to `touched` when given. */
-  private def visible(spark: SparkSession, store: String, schema: StructType,
-      keys: Seq[String], touched: Option[Seq[Int]] = None): DataFrame =
-    if (!BucketStore.storeExists(spark, store))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).drop("b")
-    else
-      BucketStore.readBuckets(spark, store, touched, Some(schema))
-        .drop("b")
-        .dropDuplicates(keys)
-
-  private def buckets(spark: SparkSession, store: String, numBuckets: Int): Int = {
-    val pinned = BucketStore.pinnedBuckets(spark, store)
-    if (pinned > 0) pinned else numBuckets
-  }
 
   /** Ingest one document batch — (doc_id, source, lang, text) rows, each
     * doc_id ONCE across the feed's lifetime (the crawl-drop contract).
@@ -152,7 +129,8 @@ object FrontendFeed {
     // coverage (a): this batch's train grams × the FULL holdout gram set
     // (history ∪ this batch's drop — the benchmark-suite side, bounded
     // by nature at deployment scale)
-    val histHoldAll = visible(spark, holdDir(dir), holdSchema, Seq("g", "batch"))
+    val histHoldAll = BucketStore.read(spark, holdDir(dir), holdSchema,
+      Seq("g", "batch"), None)
     val allHold = histHoldAll.select(col("g"))
       .unionByName(holdB.select(col("g"))).distinct()
     val covA = Frontend.coveredPositions(trigB, allHold)
@@ -164,10 +142,9 @@ object FrontendFeed {
       .join(histHoldAll.filter(col("batch") =!= batchId).select(col("g")),
         Seq("g"), "left_anti")
       .materialized // bucket collect + probe join; drop-sized
-    val ng = buckets(spark, gramsDir(dir), numBuckets)
-    val touchedG = newHold.select(BucketStore.bucketCol(Seq("g"), ng))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by bucket count
-    val histGrams = visible(spark, gramsDir(dir), gramsSchema,
+    val touchedG = BucketStore.touchedBuckets(newHold, Seq("g"),
+      BucketStore.buckets(spark, gramsDir(dir), numBuckets))
+    val histGrams = BucketStore.read(spark, gramsDir(dir), gramsSchema,
       Seq("doc_id", "i"), Some(touchedG))
     val covB = Frontend.coveredPositions(histGrams, newHold)
     val covRows = covA.unionByName(covB).distinct()
@@ -177,7 +154,7 @@ object FrontendFeed {
       .withColumnRenamed("b", "fb")
       .groupBy(col("doc_id"), col("lang"), col("fb"))
       .agg(count(lit(1)).cast("long").as("c"))
-    // appends (each under the snapshot/commit protocol), then the stamp
+    // appends (each a BucketStore append commit), then the stamp
     BucketStore.appendRows(spark, factsDir(dir), facts, Seq("doc_id"), numBuckets)
     BucketStore.appendRows(spark, hminDir(dir), hminB, Seq("h"), numBuckets)
     BucketStore.appendRows(spark, holdDir(dir), holdB, Seq("g"), numBuckets)
@@ -195,20 +172,20 @@ object FrontendFeed {
   private def stagesFromState(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame, DataFrame,
       DataFrame, DataFrame) = {
-    val facts = visible(spark, factsDir(dir), factsSchema, Seq("doc_id"))
+    val facts = BucketStore.read(spark, factsDir(dir), factsSchema, Seq("doc_id"), None)
       .drop("batch")
     val train = facts.filter(!col("holdout"))
     val gated = train.filter(col("c4k") && col("gpass"))
-    val hmin = visible(spark, hminDir(dir), hminSchema, Seq("h", "batch"))
+    val hmin = BucketStore.read(spark, hminDir(dir), hminSchema, Seq("h", "batch"), None)
       .groupBy(col("h")).agg(min(col("m")).as("keep")) // mergeable min fold
     val deduped = Frontend.dedupKeepFirst(gated, hmin)
       .select(col("doc_id"), col("source"), col("lang"), col("n_ts"),
         col("qscore"))
-    val covCnt = visible(spark, covDir(dir), covSchema, Seq("doc_id", "j"))
+    val covCnt = BucketStore.read(spark, covDir(dir), covSchema, Seq("doc_id", "j"), None)
       .groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("covered"))
     val clean = Frontend.cleanFilter(deduped, covCnt)
       .materialized // read by the db semi-join, the select join, funnel
-    val db = visible(spark, dbDir(dir), dbSchema, Seq("doc_id", "fb"))
+    val db = BucketStore.read(spark, dbDir(dir), dbSchema, Seq("doc_id", "fb"), None)
       .join(clean.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("lang"), col("fb").as("b"), col("c"))
     val (selected, accepted) = Frontend.selectAndMix(clean, db)
@@ -247,51 +224,19 @@ object FrontendFeed {
       .start()
 
   /** Fold every store to one file per bucket. `facts`/`grams`/`cov`/`db`
-    * rows are immutable facts (dedup on the logical key — twins healed
-    * permanently, [[MinHashFeed.compact]]'s posture); `hmin` folds to
-    * one min row per hash and `hold` to one row per gram (`batch = -1`,
-    * [[DsirFeed.compact]]'s posture — the replace-commit covers every
-    * bucket so a crashed append can never resurrect). Idempotent. */
+    * rows are immutable facts ([[BucketStore.compact]]: dedup on the
+    * logical key, twins healed permanently); `hmin` folds to one min row
+    * per hash and `hold` to one row per gram ([[BucketStore.fold]]: the
+    * replace-commit covers every bucket so a crashed append can never
+    * resurrect). Idempotent. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    def dedupOne(store: String, schema: StructType, keys: Seq[String]): Unit =
-      if (BucketStore.storeExists(spark, store)) {
-        BucketStore.ensureManifest(spark, store)
-        val all = BucketStore.readBuckets(spark, store, None, Some(schema))
-          .dropDuplicates(keys)
-          .materialized // materialize BEFORE the overwrite replaces sources
-        val touched = all.select(col("b")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
-        all.repartition(col("b")) // one file per bucket dir
-          .write.partitionBy("b").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(store)
-        BucketStore.refreshTouched(spark, store, touched)
-      }
-    def foldOne(store: String, schema: StructType, keys: Seq[String],
-        fold: DataFrame => DataFrame): Unit =
-      if (BucketStore.storeExists(spark, store)) {
-        BucketStore.ensureManifest(spark, store)
-        val n = BucketStore.pinnedBuckets(spark, store)
-        val folded = fold(
-            BucketStore.readBuckets(spark, store, None, Some(schema))
-              .drop("b").dropDuplicates(keys :+ "batch"))
-          .withColumn("batch", lit(-1L))
-          .withColumn("b", BucketStore.bucketCol(keys, n))
-          .materialized // materialize BEFORE the manifest swap
-        val touched = (0 until n).toSeq // replace-commit covers every bucket
-        val before = BucketStore.snapshotBuckets(spark, store, touched)
-        folded.repartition(col("b"))
-          .write.partitionBy("b").mode("append").parquet(store)
-        BucketStore.commitReplaced(spark, store, touched, before)
-        BucketStore.vacuum(spark, store)
-      }
-    dedupOne(factsDir(dir), factsSchema, Seq("doc_id"))
-    dedupOne(gramsDir(dir), gramsSchema, Seq("doc_id", "i"))
-    dedupOne(covDir(dir), covSchema, Seq("doc_id", "j"))
-    dedupOne(dbDir(dir), dbSchema, Seq("doc_id", "fb"))
-    foldOne(hminDir(dir), hminSchema, Seq("h"),
-      df => df.groupBy(col("h")).agg(min(col("m")).as("m")))
-    foldOne(holdDir(dir), holdSchema, Seq("g"),
-      df => df.select(col("g")).distinct())
+    BucketStore.compact(spark, factsDir(dir), factsSchema, Seq("doc_id"))
+    BucketStore.compact(spark, gramsDir(dir), gramsSchema, Seq("doc_id", "i"))
+    BucketStore.compact(spark, covDir(dir), covSchema, Seq("doc_id", "j"))
+    BucketStore.compact(spark, dbDir(dir), dbSchema, Seq("doc_id", "fb"))
+    BucketStore.fold(spark, hminDir(dir), hminSchema, Seq("h"),
+      _.groupBy(col("h")).agg(min(col("m")).as("m")))
+    BucketStore.fold(spark, holdDir(dir), holdSchema, Seq("g"),
+      _.select(col("g")).distinct())
   }
 }

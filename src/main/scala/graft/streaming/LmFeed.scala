@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,11 +33,9 @@ import org.apache.spark.sql.types._
   *    dedup on (batch, key) first (replay determinism makes the twins
   *    byte-identical, the [[BucketStore]] append-store read contract);
   *  - [[compact]] folds the visible partials to one row per key
-  *    (`batch = -1`) and commits via [[BucketStore.commitReplaced]] —
-  *    an atomic manifest swap, because two GENERATIONS visible at once
-  *    would double-sum where BlockDedupFeed's immutable rows just
-  *    dedup; the replaced partials become invisible garbage reclaimed
-  *    by [[BucketStore.vacuum]].
+  *    (`batch = -1`) with [[BucketStore.fold]] — an atomic manifest
+  *    swap, because two GENERATIONS visible at once would double-sum
+  *    where BlockDedupFeed's immutable rows just dedup.
   *
   * Scale shape per batch: one batch-sized aggregation per table and a
   * bucketed append; per view, one fold of the state (vocab-bounded
@@ -75,14 +72,6 @@ object LmFeed {
         col("p.w1").as("w1"), col("p.w2").as("w2"))
   }
 
-  /** Append one batch's aggregated partial counts to a store — pin
-    * before first append, snapshot/commit protocol, one file per
-    * touched bucket. Test hook (private[graft]): LmFeedSpec drives this
-    * directly to simulate the crash-between-commit-and-stamp twin. */
-  private[graft] def appendPartials(spark: SparkSession, store: String,
-      partials: DataFrame, keys: Seq[String], numBuckets: Int): Unit =
-    BucketStore.appendRows(spark, store, partials, keys, numBuckets)
-
   /** Count one document batch into the feed. `batchId` must be
     * monotonic (foreachBatch epochs); a replayed id is a no-op. */
   def ingest(spark: SparkSession, dir: String, docs: DataFrame,
@@ -96,55 +85,31 @@ object LmFeed {
     val bi = bigramFrame(docs).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).cast("long").as("c"))
       .withColumn("batch", lit(batchId))
-    appendPartials(spark, uniDir(dir), uni, Seq("tok"), numBuckets)
-    appendPartials(spark, biDir(dir), bi, Seq("w1", "w2"), numBuckets)
+    BucketStore.appendRows(spark, uniDir(dir), uni, Seq("tok"), numBuckets)
+    BucketStore.appendRows(spark, biDir(dir), bi, Seq("w1", "w2"), numBuckets)
     AggView.writeStamp(spark, dir, AppliedStamp, batchId)
   }
-
-  /** Visible rows of one store, crash-twin-healed (dedup on
-    * (batch, key)) — NOT yet folded. */
-  private def visible(spark: SparkSession, store: String,
-      schema: StructType, keys: Seq[String]): DataFrame =
-    BucketStore.readBuckets(spark, store, None, Some(schema))
-      .drop("b")
-      .dropDuplicates(keys :+ "batch")
 
   /** Folded unigram table (tok, c) — token OCCURRENCE counts; its row
     * count is the corpus's distinct-token count (x40's `v`). */
   def uniCounts(spark: SparkSession, dir: String): DataFrame =
-    visible(spark, uniDir(dir), uniSchema, Seq("tok"))
+    BucketStore.read(spark, uniDir(dir), uniSchema, Seq("tok", "batch"), None)
       .groupBy(col("tok")).agg(sum(col("c")).cast("long").as("c"))
 
   /** Folded bigram table (w1, w2, c) — x40/x172's `c12`. */
   def biCounts(spark: SparkSession, dir: String): DataFrame =
-    visible(spark, biDir(dir), biSchema, Seq("w1", "w2"))
+    BucketStore.read(spark, biDir(dir), biSchema, Seq("w1", "w2", "batch"), None)
       .groupBy(col("w1"), col("w2")).agg(sum(col("c")).cast("long").as("c"))
 
   /** Fold each store to one row per key (`batch = -1`) — the LSM
     * maintenance pass that makes the view's fold vocab-bounded instead
-    * of Σ-batch-vocab-bounded. Commit is [[BucketStore.commitReplaced]]
-    * (atomic manifest swap; see object doc), then the replaced partials
-    * are vacuumed. Idempotent: re-folding a folded store is the
-    * identity. */
+    * of Σ-batch-vocab-bounded ([[BucketStore.fold]]: atomic manifest
+    * swap, then the replaced partials are vacuumed). Idempotent. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    def one(store: String, schema: StructType, keys: Seq[String]): Unit =
-      if (BucketStore.storeExists(spark, store)) {
-        BucketStore.ensureManifest(spark, store)
-        val n = BucketStore.pinnedBuckets(spark, store)
-        val folded = visible(spark, store, schema, keys)
-          .groupBy(keys.map(col): _*).agg(sum(col("c")).cast("long").as("c"))
-          .withColumn("batch", lit(-1L))
-          .withColumn("b", BucketStore.bucketCol(keys, n))
-          .materialized // materialize BEFORE the manifest swap hides sources
-        val touched = (0 until n).toSeq // replace-commit must cover every bucket
-        val before = BucketStore.snapshotBuckets(spark, store, touched)
-        folded.repartition(col("b")) // one file per bucket
-          .write.partitionBy("b").mode("append").parquet(store)
-        BucketStore.commitReplaced(spark, store, touched, before)
-        BucketStore.vacuum(spark, store)
-      }
-    one(uniDir(dir), uniSchema, Seq("tok"))
-    one(biDir(dir), biSchema, Seq("w1", "w2"))
+    def sumC(keys: Seq[String])(df: DataFrame): DataFrame =
+      df.groupBy(keys.map(col): _*).agg(sum(col("c")).cast("long").as("c"))
+    BucketStore.fold(spark, uniDir(dir), uniSchema, Seq("tok"), sumC(Seq("tok")))
+    BucketStore.fold(spark, biDir(dir), biSchema, Seq("w1", "w2"), sumC(Seq("w1", "w2")))
   }
 
   /** x40 add-one-smoothed per-doc mean bigram probability, scored

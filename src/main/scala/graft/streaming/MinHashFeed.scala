@@ -82,25 +82,6 @@ object MinHashFeed {
     StructField("n_b", LongType), StructField("jac", DoubleType),
     StructField("b", IntegerType)))
 
-  /** Visible rows of one store, crash-twin-healed (dedup on the logical
-    * key), bucket-pruned to `touched` when given. */
-  private def visible(spark: SparkSession, store: String, schema: StructType,
-      keys: Seq[String], touched: Option[Seq[Int]] = None): DataFrame =
-    if (!BucketStore.storeExists(spark, store))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).drop("b")
-    else
-      BucketStore.readBuckets(spark, store, touched, Some(schema))
-        .drop("b")
-        .dropDuplicates(keys)
-
-  /** The pinned bucket count of a store (or the default before its
-    * first append). */
-  private def buckets(spark: SparkSession, store: String, numBuckets: Int): Int = {
-    val pinned = BucketStore.pinnedBuckets(spark, store)
-    if (pinned > 0) pinned else numBuckets
-  }
-
   /** Near-dup-check one document batch against (and into) the index.
     * `batchId` must be monotonic (foreachBatch epochs); a replayed id is
     * a no-op. Doc ids must be unique across the feed's lifetime (each
@@ -120,10 +101,9 @@ object MinHashFeed {
       .materialized // probe + pairing + append; 8 rows per doc
     // candidates: in-batch bucket-mates ∪ history bucket-mates from the
     // TOUCHED band buckets only
-    val nb = buckets(spark, bandsDir(dir), numBuckets)
-    val touchedBands = bands.select(BucketStore.bucketCol(Seq("bh"), nb))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by bucket count
-    val hist = visible(spark, bandsDir(dir), bandsSchema,
+    val touchedBands = BucketStore.touchedBuckets(bands, Seq("bh"),
+      BucketStore.buckets(spark, bandsDir(dir), numBuckets))
+    val hist = BucketStore.read(spark, bandsDir(dir), bandsSchema,
       Seq("doc_id", "band"), Some(touchedBands))
     val newOld = bands.as("nw")
       .join(hist.as("old"),
@@ -141,20 +121,19 @@ object MinHashFeed {
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
       .join(batchIds, Seq("doc_id"), "left_anti")
       .materialized // bucket collect + two semi joins; candidate-sized
-    val nd = buckets(spark, docsDir(dir), numBuckets)
-    val touchedDocs = oldIds.select(BucketStore.bucketCol(Seq("doc_id"), nd))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val oldShn = visible(spark, shinglesDir(dir), shinglesSchema,
+    val touchedDocs = BucketStore.touchedBuckets(oldIds, Seq("doc_id"),
+      BucketStore.buckets(spark, docsDir(dir), numBuckets))
+    val oldShn = BucketStore.read(spark, shinglesDir(dir), shinglesSchema,
         Seq("doc_id", "g"), Some(touchedDocs))
       .join(oldIds, Seq("doc_id"), "left_semi")
-    val oldN = visible(spark, docsDir(dir), docsSchema,
+    val oldN = BucketStore.read(spark, docsDir(dir), docsSchema,
         Seq("doc_id"), Some(touchedDocs))
       .join(oldIds, Seq("doc_id"), "left_semi")
     val allShn = shn.unionByName(oldShn.join(oldN, "doc_id")
       .select(col("doc_id"), col("g"), col("n")))
     val verified = Dedup.exactJaccard(cand, allShn)
       .filter(col("jac") >= Threshold)
-    // appends (each under the snapshot/commit protocol), then the stamp
+    // appends (each a BucketStore append commit), then the stamp
     BucketStore.appendRows(spark, pairsDir(dir), verified,
       Seq("doc_a", "doc_b"), numBuckets)
     BucketStore.appendRows(spark, bandsDir(dir), bands, Seq("bh"), numBuckets)
@@ -168,7 +147,7 @@ object MinHashFeed {
     * the registered batch `x2_minhash_lsh_pairs` on the concatenated
     * corpus (MinHashFeedSpec pins it). */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    visible(spark, pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"))
+    BucketStore.read(spark, pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"), None)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("n_a"),
         col("n_b"), col("jac"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -179,12 +158,12 @@ object MinHashFeed {
     * The pairs store is ≪ corpus (near-dup mass only); the doc universe
     * comes from the docs store. */
   def survivors(spark: SparkSession, dir: String): DataFrame = {
-    val prs = visible(spark, pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"))
+    val prs = BucketStore.read(spark, pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"), None)
       .select(col("doc_a"), col("doc_b"))
     val edges = Dedup.symmetrize(prs).materialized // computed once, read by every CC round
     val cl = Dedup.ccLabels(edges) // (v, comp)
     val mins = cl.groupBy(col("comp")).agg(min(col("v")).as("m"))
-    visible(spark, docsDir(dir), docsSchema, Seq("doc_id"))
+    BucketStore.read(spark, docsDir(dir), docsSchema, Seq("doc_id"), None)
       .select(col("doc_id"))
       .join(cl.select(col("v").as("doc_id"), col("comp")), Seq("doc_id"), "left")
       .join(mins, Seq("comp"), "left")
@@ -194,29 +173,14 @@ object MinHashFeed {
       .orderBy(col("doc_id"))
   }
 
-  /** Fold every store to one file per bucket (dedup on the logical key
-    * first — twins healed permanently), [[BlockDedupFeed.compact]]'s
-    * posture: rows are immutable, so dynamic partition overwrite +
-    * [[BucketStore.refreshTouched]] is the correct commit, and the
-    * overwrite doubles as garbage collection for crashed appends. */
+  /** Fold every store to one file per bucket with
+    * [[BucketStore.compact]]: rows are immutable, so dedup on the
+    * logical key heals twins permanently and the dir overwrite doubles
+    * as garbage collection for crashed appends. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    def one(store: String, schema: StructType, keys: Seq[String]): Unit =
-      if (BucketStore.storeExists(spark, store)) {
-        BucketStore.ensureManifest(spark, store)
-        val all = BucketStore.readBuckets(spark, store, None, Some(schema))
-          .dropDuplicates(keys)
-          .materialized // materialize BEFORE the overwrite replaces sources
-        val touched = all.select(col("b")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
-        all.repartition(col("b")) // one file per bucket dir
-          .write.partitionBy("b").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(store)
-        BucketStore.refreshTouched(spark, store, touched)
-      }
-    one(bandsDir(dir), bandsSchema, Seq("doc_id", "band"))
-    one(shinglesDir(dir), shinglesSchema, Seq("doc_id", "g"))
-    one(docsDir(dir), docsSchema, Seq("doc_id"))
-    one(pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"))
+    BucketStore.compact(spark, bandsDir(dir), bandsSchema, Seq("doc_id", "band"))
+    BucketStore.compact(spark, shinglesDir(dir), shinglesSchema, Seq("doc_id", "g"))
+    BucketStore.compact(spark, docsDir(dir), docsSchema, Seq("doc_id"))
+    BucketStore.compact(spark, pairsDir(dir), pairsSchema, Seq("doc_a", "doc_b"))
   }
 }

@@ -11,10 +11,9 @@ import org.apache.spark.sql.types._
   * (retraining would re-encode the whole history; real systems version
   * the codebook instead), and every arriving batch pays exactly one
   * broadcast keyed join to encode against them — the increment never
-  * reads the accumulated corpus. The store is the same hash-bucketed
-  * append-only layout as [[BlockDedupFeed]]'s ownership index
-  * (`_BUCKETS` pin, `b=<k>` partition dirs): appends write one file
-  * per touched bucket per batch, replay-idempotence costs one
+  * reads the accumulated corpus. The codes live in a [[BucketStore]]
+  * append store bucketed by vec_id: appends write one file per touched
+  * bucket per batch, replay-idempotence costs one
   * PARTITION-PRUNED anti-join against only the buckets the batch's
   * vec_ids hash into, and [[compact]] is the LSM maintenance pass that
   * bounds files-read. IncProbe measures the flat-increment claim on
@@ -29,37 +28,27 @@ object PqIndexFeed {
     StructField("vec_id", LongType), StructField("sub", IntegerType),
     StructField("code", IntegerType), StructField("b", IntegerType)))
 
-  private def bucketCol(n: Int) =
-    pmod(xxhash64(col("vec_id")), lit(n.toLong)).cast("int").as("b")
-
   private def codebooksDir(storeDir: String) = s"$storeDir/codebooks"
   private def codesDir(storeDir: String) = s"$storeDir/codes"
 
-  /** Train codebooks on the seed corpus, freeze them, pin the bucket
-    * count, and encode the seed as the first batch. */
+  /** Train codebooks on the seed corpus, freeze them, and encode the
+    * seed as the first batch, which pins the bucket count. */
   def init(seed: DataFrame, storeDir: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     val spark = seed.sparkSession
     Pq.codebooks(Ivf.quantized(Pq.normalized(seed)))
       .write.mode("overwrite").parquet(codebooksDir(storeDir))
-    BucketStore.writeBucketsFile(spark, codesDir(storeDir), numBuckets)
-    applyBatch(seed, storeDir)
+    encodeInto(seed, storeDir, BucketStore.buckets(spark, codesDir(storeDir), numBuckets))
   }
 
   /** The frozen codebooks (M × Codes rows — broadcast-sized always). */
   def readCodebooks(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(codebooksDir(storeDir))
 
-  /** All accumulated codes — manifest-driven via the shared store layer
-    * (stat-validated, self-healing), listing fallback for pre-manifest
-    * stores. Deduped on the logical key (vec_id, sub): the append-store
-    * read contract ([[BucketStore]] object doc) — a manifest rebuild can
-    * resurrect crashed-append orphans next to their replayed twins, and
-    * the twins are byte-identical, so any survivor is correct. */
+  /** All accumulated codes, deduped on the logical key (vec_id, sub) —
+    * the append-store read contract ([[BucketStore.read]]). */
   def readCodes(spark: SparkSession, storeDir: String): DataFrame =
-    BucketStore.readBuckets(spark, codesDir(storeDir), None, Some(codesSchema))
-      .drop("b")
-      .dropDuplicates("vec_id", "sub")
+    BucketStore.read(spark, codesDir(storeDir), codesSchema, Seq("vec_id", "sub"), None)
 
   /** Manifest-driven read of only the `touched` buckets' files.
     * NOT deduped: its only consumer is applyBatch's replay anti-join,
@@ -68,7 +57,7 @@ object PqIndexFeed {
     * dedup shuffle the public reads pay. */
   private def readTouched(spark: SparkSession, storeDir: String,
       touched: Seq[Int]): DataFrame =
-    if (touched.isEmpty)
+    if (touched.isEmpty || !BucketStore.storeExists(spark, codesDir(storeDir)))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], codesSchema).drop("b")
     else
@@ -81,48 +70,29 @@ object PqIndexFeed {
     * the history is read only for replay-idempotence, and only the
     * buckets the batch's keys hash into. Returns the batch's codes. */
   def applyBatch(batch: DataFrame, storeDir: String): DataFrame = {
-    val spark = batch.sparkSession
-    val n = BucketStore.pinnedBuckets(spark, codesDir(storeDir))
+    val n = BucketStore.pinnedBuckets(batch.sparkSession, codesDir(storeDir))
     require(n > 0, s"PqIndexFeed store at $storeDir not initialized")
-    val cents = readCodebooks(spark, storeDir)
-    val codes = Pq.encode(batch, cents)
-      .withColumn("b", bucketCol(n))
+    encodeInto(batch, storeDir, n)
+  }
+
+  private def encodeInto(batch: DataFrame, storeDir: String, n: Int): DataFrame = {
+    val spark = batch.sparkSession
+    val codes = Pq.encode(batch, readCodebooks(spark, storeDir))
+      .withColumn("b", BucketStore.bucketCol(Seq("vec_id"), n))
       .materialized // read twice (touched + append); batch-sized
-    val touched = codes.select(col("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
-    // one-time migration for pre-manifest stores, then the append-commit
-    // protocol: snapshot → write → commit the difference ([[BlockDedupFeed]]
-    // has the crash analysis; orphans stay invisible, replay reconverges)
-    BucketStore.ensureManifest(spark, codesDir(storeDir))
+    val touched = BucketStore.touchedBuckets(codes, Seq("vec_id"), n)
     val known = readTouched(spark, storeDir, touched)
       .select(col("vec_id")).distinct()
-    val before = BucketStore.snapshotBuckets(spark, codesDir(storeDir), touched)
-    codes.join(known, Seq("vec_id"), "left_anti")
-      .repartition(col("b")) // one file per touched bucket per batch
-      .write.partitionBy("b").mode("append").parquet(codesDir(storeDir))
-    BucketStore.commitAppended(spark, codesDir(storeDir), touched, before)
+    BucketStore.appendBucketed(spark, codesDir(storeDir),
+      codes.join(known, Seq("vec_id"), "left_anti"), touched, n)
     codes.drop("b")
   }
 
-  /** Fold each bucket's per-batch appends into one file ([[BlockDedupFeed]]'s
-    * LSM posture; rows are immutable so re-grouping is replay-safe). */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    // manifest-visible rows only: the dir overwrite deletes crashed
-    // appends' invisible orphans together with the per-batch files
-    BucketStore.ensureManifest(spark, codesDir(storeDir))
-    // dedup on (vec_id, sub): permanently heal any rebuild-resurrected
-    // orphan twins (identical rows) while re-grouping
-    val all = BucketStore.readBuckets(spark, codesDir(storeDir), None,
-        Some(codesSchema))
-      .dropDuplicates("vec_id", "sub")
-      .materialized // materialize before replacing source files
-    val touched = all.select(col("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded by the bucket count
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    all.repartition(col("b"))
-      .write.partitionBy("b").mode("overwrite").parquet(codesDir(storeDir))
-    BucketStore.refreshTouched(spark, codesDir(storeDir), touched)
-  }
+  /** Fold each bucket's per-batch appends into one file
+    * ([[BucketStore.compact]]; rows are immutable so re-grouping is
+    * replay-safe). */
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    BucketStore.compact(spark, codesDir(storeDir), codesSchema, Seq("vec_id", "sub"))
 
   /** ADC shortlist for a query frame against the accumulated store —
     * the store-level search primitive (the exact refine belongs to the

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.etl.Etl
+import graft.model.VersionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -79,12 +80,23 @@ object WeeklyFeed {
       }
       .start()
 
-  /** Snapshot upsert: read current store, anti-join the batch, append only
-    * new grain keys. Committed via the shared SnapshotStore
-    * version-and-swap protocol. */
-  def upsertIntoStore(batch: DataFrame, storeDir: String): Unit =
-    SnapshotStore.commit(batch, storeDir)(
-      (existing, incoming) => Etl.upsert(existing, incoming, Seq("user_id", "day")))
+  /** Snapshot upsert: read the current snapshot if one exists, anti-join
+    * the batch against it and keep only new grain keys, then commit
+    * through [[VersionedStore]]. The new version directory is written
+    * FULLY before the `_LATEST` pointer swaps, so a crash mid-commit
+    * leaves the previous snapshot live and an unreferenced directory to
+    * garbage-collect, never a half-written store (the batch analog of
+    * the reference's single-transaction commit, load-hhs.py:28-33).
+    * `VersionedStore.compact` bounds file counts for trickle feeds. */
+  def upsertIntoStore(batch: DataFrame, storeDir: String): Unit = {
+    val merged =
+      if (VersionedStore.latestVersion(storeDir) >= 1) {
+        val existing = VersionedStore.read(batch.sparkSession, storeDir)
+        Etl.upsert(existing, batch.select(existing.columns.map(col): _*),
+          Seq("user_id", "day"))
+      } else batch
+    VersionedStore.commit(merged, storeDir)
+  }
 
   /** Stream-static enrichment: the event feed joined against a bounded
     * dimension table (the reference's hospital→location chain shape, as

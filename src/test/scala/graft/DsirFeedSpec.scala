@@ -62,7 +62,7 @@ class DsirFeedSpec extends SparkSuite {
       .agg(count(lit(1)).cast("long").as("cr"),
         count(when($"lang" === "en", 1)).cast("long").as("ct"))
       .withColumn("batch", lit(0L))
-    DsirFeed.appendPartials(spark, s"$d/cnt", twin, Seq("fb"),
+    BucketStore.appendRows(spark, s"$d/cnt", twin, Seq("fb"),
       DsirFeed.DefaultBuckets)
     assert(cntSet(d) === before._1, "twin partial double-counted")
     assert(selSet(d) === before._2)

@@ -82,7 +82,7 @@ class FrontendFeedSpec extends SparkSuite {
     // simulate the crash window of batch 1: its hold rows land, no stamp
     val slim1 = ext.Frontend.slimFrame(b1).localCheckpoint()
     val hold1 = ext.Frontend.holdoutGrams(slim1).withColumn("batch", lit(1L))
-    FrontendFeed.appendPartials(spark, FrontendFeed.holdStoreDir(d), hold1,
+    BucketStore.appendRows(spark, FrontendFeed.holdStoreDir(d), hold1,
       Seq("g"), FrontendFeed.DefaultBuckets)
     // the replay (a real ingest of batch 1) must land the same state a
     // crash-free run produces

@@ -66,7 +66,7 @@ class LmFeedSpec extends SparkSuite {
     val uniPartial = b0.select(explode(split($"text", " ")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).cast("long").as("c"))
       .withColumn("batch", lit(0L))
-    LmFeed.appendPartials(spark, s"$d/uni", uniPartial, Seq("tok"),
+    BucketStore.appendRows(spark, s"$d/uni", uniPartial, Seq("tok"),
       LmFeed.DefaultBuckets)
     assert(uniSet(d) === before._1, "twin partial double-counted")
     assert(biSet(d) === before._2)

@@ -104,4 +104,19 @@ class PqIndexFeedSpec extends SparkSuite {
     PqIndexFeed.compact(spark, dir)
     assert(spark.read.parquet(s"$dir/codes").count() === clean.size.toLong)
   }
+
+  test("compaction leaves the session's partition-overwrite mode as it was") {
+    // a session of its own, so no earlier compaction in this JVM can
+    // have set the mode already
+    val s2 = spark.newSession()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val dir = freshStore()
+    PqIndexFeed.applyBatch(batch1, dir)
+    val before = s2.conf.getOption(key)
+    PqIndexFeed.compact(s2, dir)
+    assert(s2.conf.getOption(key) === before)
+    assert(codesSet(PqIndexFeed.readCodes(spark, dir))
+      === codesSet(ext.Pq.encode(e.filter($"vec_id" < 400),
+        PqIndexFeed.readCodebooks(spark, dir))))
+  }
 }
