@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -41,8 +41,11 @@ object Bench {
     if (!sys.env.contains("SPARK_GRAFT_LANE") && !sys.env.contains("SPARK_GRAFT_ONLY"))
       runForkedLanes()
     else
-      runSuite()
+      runSuite(sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet), benchOut,
+        quiet = false, laneReps, sys.env.getOrElse("SPARK_GRAFT_LANE", "main"))
   }
+
+  // ---- the measurement core: Bench, ScaleProbe and IncProbe share it ----
 
   /** A fixed-point number for a jsonl line, written by Bench and the
     * probes. Locale-pinned: under a comma-decimal default locale `%.3f`
@@ -50,11 +53,64 @@ object Bench {
   private[graft] def fmt(v: Double, digits: Int = 3): String = String.format(
     java.util.Locale.ROOT, s"%.${digits}f", java.lang.Double.valueOf(v))
 
-  private def summaryLine(results: Map[String, (Double, Double, Double)],
-      reps: Int, sfDir: String, lanesTag: Option[String]): String = {
-    val failed = results.filter(_._2._1 < 0).keys.toSeq.sorted
-    val ok = results.collect { case (k, (med, _, _)) if med >= 0 => k -> med }
-    val total = if (ok.nonEmpty) ok.values.sum else 0.0
+  /** Seconds `body` takes: the one timer. */
+  private[graft] def time(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Produce every row of `df` into the noop sink. The timed consumer is
+    * the sink, not count(): count() lets the optimizer prune aggregate
+    * values, projection expressions, and the final sort (a pure-map query
+    * like the x24 scrub "benches" as a row count of its input). The noop
+    * write materializes every output column of every row and keeps the
+    * ORDER BY in the plan — the honest cost of actually producing the
+    * result. */
+  private[graft] def sink(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The one timed unit: a query's construction plus one noop write. */
+  private[graft] def timed(spark: SparkSession, dir: String,
+      fn: (SparkSession, String) => DataFrame): Double = time(sink(fn(spark, dir)))
+
+  /** The one reset between timed runs, so every timed run starts from an
+    * empty block manager and pays exactly its own state.
+    *  - A blocking unpersist of every persistent RDD: result-backing
+    *    local-checkpoint blocks (the one generation a checkpointing query
+    *    legitimately returns) otherwise outlive the run until the
+    *    ContextCleaner notices, and at big probe factors evict or spill
+    *    INTO the next timed run (they OOM'ed the first 20× graph
+    *    session outright).
+    *  - `clearCache` drops cached relations.
+    *  - A GC, so the ContextCleaner reclaims dereferenced shuffles and
+    *    blocks NOW, on untimed ground, instead of amortizing into a later
+    *    query (round 6: d5 read 3.15s in-suite vs 0.51s isolated on
+    *    identical code, a position tax of accumulated state).
+    *  - A 150 ms drain, letting the async cleaner finish off the clock. */
+  private[graft] def reset(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    System.gc()
+    Thread.sleep(150)
+  }
+
+  // ---- the suite and its lanes --------------------------------------
+
+  private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Timed passes per lane; an explicit SPARK_GRAFT_REPS overrides. */
+  private def laneReps: Int = sys.env.get("SPARK_GRAFT_REPS").fold(LaneReps)(_.toInt)
+
+  /** Where the full artifact goes; `none` disables it (one-off
+    * profiling). */
+  private def benchOut: String =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/full_latest.jsonl")
+
+  private def summaryLine(medians: Map[String, Double], reps: Int,
+      lanesTag: Option[String]): String = {
+    val failed = medians.filter(_._2 < 0).keys.toSeq.sorted
+    val ok = medians.filter(_._2 >= 0)
     val slowest = ok.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     // failure NAMES (bounded) ride the summary line — the count alone
@@ -62,46 +118,61 @@ object Bench {
     val failedJson = failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
     val lanes = lanesTag.fold("")(t => s""","lanes":$t""")
     // headline value = sum of per-query MEDIANS
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failures":${failed.size},"failed":$failedJson,"queries":$slowest,"sf":"$sfDir","warmup":true,"reps":$reps,"stat":"median","order":"shuffled-per-rep","reset":"clearCache+gc"$lanes}"""
+    s"""{"metric":"total","value":${fmt(ok.values.sum)},"unit":"sec","n":${medians.size},"failures":${failed.size},"failed":$failedJson,"queries":$slowest,"sf":"$sfDir","warmup":true,"reps":$reps,"stat":"median","order":"shuffled-per-rep","reset":"unpersist+clearCache+gc"$lanes}"""
   }
 
-  private def writeLines(path: String, lines: Seq[String]): Unit = {
+  private def writeLines(path: String, lines: Seq[String]): Unit = if (path != "none") {
     val f = new java.io.File(path)
     Option(f.getParentFile).foreach(_.mkdirs())
     val w = new java.io.PrintWriter(f, "UTF-8")
     try lines.foreach(w.println) finally w.close()
   }
 
-  /** Fork one JVM per lane (graph family, rest), collect their jsonl,
-    * and emit the merged per-query lines + one merged summary — the
-    * exact artifact shape a single-JVM run produced, so
-    * tools/bench_delta.py and the driver's tail parse are unchanged.
-    * The child inherits this JVM's arguments (add-opens, -Xmx, -D) and
-    * classpath (`run / fork := true` puts the real application
-    * classpath in java.class.path). A lane whose child dies is re-run
-    * in-process (numbers beat no numbers; the summary says it
-    * happened). */
   private val qLinePattern = """"name":"([^"]+)".*?"value":(-?[0-9.]+)""".r
 
-  /** (name, median, raw line) for each per-query line in a lane file. */
-  private def parseQueryLines(path: String): Seq[(String, Double, String)] = {
-    if (!new java.io.File(path).isFile) return Seq.empty
-    scala.io.Source.fromFile(path, "UTF-8").getLines()
-      .filter(_.contains("\"metric\":\"query\"")).toList
-      .flatMap { line =>
-        qLinePattern.findFirstMatchIn(line)
-          .map(m => (m.group(1), m.group(2).toDouble, line))
-      }
+  /** (name, median, raw line) for each per-query line of a jsonl file. */
+  private def queryLines(lines: Seq[String]): Seq[(String, Double, String)] =
+    lines.filter(_.contains("\"metric\":\"query\"")).flatMap { line =>
+      qLinePattern.findFirstMatchIn(line).map(m => (m.group(1), m.group(2).toDouble, line))
+    }
+
+  /** The requested queries no lane file has a line for. A child killed
+    * mid-suite leaves a file cut short, and a dead child leaves none, so
+    * the universe is the REQUESTED list, never whatever the files hold. */
+  private[graft] def missing(requested: Seq[String], files: Seq[Seq[String]]): Set[String] =
+    requested.toSet -- files.flatMap(queryLines).map(_._1)
+
+  /** The merged artifact of the lane (and re-run) files: every
+    * calibration line verbatim, every query line ordered by median with
+    * failures (-1) last, and one summary recomputed over them (each
+    * file's own summary is dropped). The exact shape a single-JVM run
+    * produces, so tools/bench_delta.py and a parse of the log's tail read
+    * it unchanged. */
+  private[graft] def merge(files: Seq[Seq[String]], reps: Int, lanesTag: String): Seq[String] = {
+    val cal = files.flatten.filter(_.contains("\"metric\":\"calibration\""))
+    val parsed = files.flatMap(queryLines).sortBy { case (_, v, _) => (v < 0, v) }
+    cal ++ parsed.map(_._3) :+
+      summaryLine(parsed.map { case (n, v, _) => n -> v }.toMap, reps, Some(lanesTag))
   }
 
+  private def readLines(path: String): Seq[String] =
+    if (!new java.io.File(path).isFile) Seq.empty
+    else {
+      val src = scala.io.Source.fromFile(path, "UTF-8")
+      try src.getLines().toList finally src.close()
+    }
+
+  /** Fork one JVM per lane (graph family, rest), then merge their jsonl.
+    * The child inherits this JVM's arguments (add-opens, -Xmx, -D) and
+    * classpath (`run / fork := true` puts the real application
+    * classpath in java.class.path). Every requested query missing from
+    * the lane files (a lane whose child died counts whole) is re-run
+    * in-process: numbers beat no numbers, and the summary says it
+    * happened. */
   private def runForkedLanes(): Unit = {
     import scala.jdk.CollectionConverters._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val repsEnv = sys.env.get("SPARK_GRAFT_REPS")
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val graphSet = graphLane
-    val laneReps = repsEnv.fold(LaneReps)(_.toInt)
-    val lanes = Seq(("graph", names.filter(graphSet)), ("main", names.filterNot(graphSet)))
+    val lanes = Seq(("graph", names.filter(graphLane)), ("main", names.filterNot(graphLane)))
       .filter(_._2.nonEmpty)
     val javaBin = new java.io.File(
       new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
@@ -109,17 +180,15 @@ object Bench {
       .getRuntimeMXBean.getInputArguments.asScala.toSeq
     val cp = System.getProperty("java.class.path")
     val tmpDir = java.nio.file.Files.createTempDirectory("benchlanes")
-    val laneRuns = lanes.map { case (lane, qs) =>
+    val laneFiles = lanes.map { case (lane, qs) =>
       val out = tmpDir.resolve(s"$lane.jsonl").toString
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
+      val pb = new ProcessBuilder((Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
       pb.environment().put("SPARK_GRAFT_LANE", lane)
       pb.environment().put("SPARK_GRAFT_ONLY", qs.mkString(","))
       pb.environment().put("SPARK_GRAFT_BENCH_OUT", out)
       pb.environment().put("SPARK_GRAFT_REPS", laneReps.toString)
       pb.redirectErrorStream(true)
-      System.err.println(
-        s"[bench] lane $lane: ${qs.size} queries, $laneReps reps, forking JVM")
+      System.err.println(s"[bench] lane $lane: ${qs.size} queries, $laneReps reps, forking JVM")
       val code = try {
         val p = pb.start()
         // drain to stderr so the parent's stdout carries ONLY the merged
@@ -132,56 +201,23 @@ object Bench {
       } catch { case e: Exception =>
         System.err.println(s"[bench] lane $lane fork failed: $e"); -1
       }
-      val produced = code == 0 && new java.io.File(out).isFile
-      if (!produced) {
-        System.err.println(
-          s"[bench] lane $lane child exited $code — re-running in-process")
-        runSuite(onlyOverride = Some(qs.toSet), benchOutOverride = Some(out),
-          quiet = true, repsOverride = Some(laneReps))
-      }
-      (lane, out, produced)
+      System.err.println(s"[bench] lane $lane child exited $code")
+      readLines(out)
     }
-    // merge the lanes' per-query lines (each lane file ends with its own
-    // summary line, dropped here; the merged summary is recomputed) and
-    // carry each lane's calibration line through verbatim
-    val calLines = laneRuns.flatMap { case (_, out, _) =>
-      if (!new java.io.File(out).isFile) Seq.empty
-      else scala.io.Source.fromFile(out, "UTF-8").getLines()
-        .filter(_.contains("\"metric\":\"calibration\"")).toList
-    }
-    val parsed0 = laneRuns.flatMap { case (_, out, _) => parseQueryLines(out) }
-    // Coverage check: a child that exits 0 after flushing a PARTIAL jsonl
-    // (killed mid-suite) would otherwise silently drop its missing
-    // queries from the merged summary — the universe must be the
-    // REQUESTED lane lists, not whatever the files happen to contain.
-    // Missing names are re-run in-process (numbers beat no numbers); any
-    // query that still fails records its -1 line there.
-    val requested = lanes.flatMap(_._2).toSet
-    val missing = requested -- parsed0.map(_._1).toSet
-    val recovered = if (missing.isEmpty) Seq.empty else {
-      System.err.println(s"[bench] ${missing.size} queries missing from lane " +
-        s"files (${missing.toSeq.sorted.take(5).mkString(",")}…) — re-running in-process")
+    val lost = missing(lanes.flatMap(_._2), laneFiles)
+    val rerun = if (lost.isEmpty) Seq.empty else {
+      System.err.println(s"[bench] ${lost.size} queries missing from lane files " +
+        s"(${lost.toSeq.sorted.take(5).mkString(",")}…) — re-running in-process")
       val out = tmpDir.resolve("recovered.jsonl").toString
-      runSuite(onlyOverride = Some(missing), benchOutOverride = Some(out),
-        quiet = true, repsOverride = Some(laneReps))
-      parseQueryLines(out)
+      runSuite(Some(lost), out, quiet = true, laneReps, "recovered")
+      Seq(readLines(out))
     }
-    val parsed = parsed0 ++ recovered
-    val ordered = parsed.sortBy { case (_, v, _) => (v < 0, v) }
-    calLines.foreach(println)
-    ordered.foreach { case (_, _, line) => println(line) }
-    val results = parsed.map { case (n, v, _) => n -> (v, v, v) }.toMap
     val lanesTag = lanes.map { case (l, qs) =>
-      s"""\"$l\":{"n":${qs.size},"reps":$laneReps}""" }.mkString("{", ",", "}")
-    val fellBack = laneRuns.exists(!_._3)
-    val summary = summaryLine(results, laneReps, sfDir,
-      Some(lanesTag +
-        (if (fellBack) ""","lane_fallback":true""" else "") +
-        (if (missing.nonEmpty) s""","lane_recovered":${missing.size}""" else "")))
-    println(summary)
-    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/full_latest.jsonl")
-    if (benchOut != "none")
-      writeLines(benchOut, calLines ++ ordered.map(_._3) :+ summary)
+      s"""\"$l\":{"n":${qs.size},"reps":$laneReps}""" }.mkString("{", ",", "}") +
+      (if (lost.nonEmpty) s""","lane_recovered":${lost.size}""" else "")
+    val merged = merge(laneFiles ++ rerun, laneReps, lanesTag)
+    merged.foreach(println)
+    writeLines(benchOut, merged)
     // the lane files are merged into benchOut — drop the temp directory
     // instead of accreting one per bench run in the system tmp
     try {
@@ -210,9 +246,6 @@ object Bench {
     * prints old vs new next to the totals. */
   private def calibrationLine(spark: SparkSession, lane: String): String = {
     import org.apache.spark.sql.functions.{col, expr, md5}
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def md5Burn(n: Int): Unit = {
       val md = java.security.MessageDigest.getInstance("MD5")
       var i = 0
@@ -224,14 +257,10 @@ object Bench {
       if (acc == 94) System.err.print("") // consume acc
     }
     def parBurn(n: Long): Unit =
-      spark.range(0L, n, 1L, 32)
-        .select(md5(col("id").cast("string")).as("h"))
-        .write.format("noop").mode("overwrite").save()
+      sink(spark.range(0L, n, 1L, 32).select(md5(col("id").cast("string")).as("h")))
     def shuffleBurn(n: Long): Unit =
-      spark.range(0L, n, 1L, 32)
-        .repartition(64, col("id"))
-        .agg(expr("bit_xor(xxhash64(id))"))
-        .write.format("noop").mode("overwrite").save()
+      sink(spark.range(0L, n, 1L, 32).repartition(64, col("id"))
+        .agg(expr("bit_xor(xxhash64(id))")))
     md5Burn(200000); parBurn(1000000L); shuffleBurn(1000000L) // warm JIT/codegen
     val t1 = time(md5Burn(8000000))
     val tp = time(parBurn(96000000L))
@@ -239,57 +268,34 @@ object Bench {
     s"""{"metric":"calibration","lane":"$lane","md5_1core_sec":${fmt(t1)},"md5_par_sec":${fmt(tp)},"shuffle_20m_sec":${fmt(ts)},"unit":"sec"}"""
   }
 
-  private def runSuite(onlyOverride: Option[Set[String]] = None,
-      benchOutOverride: Option[String] = None, quiet: Boolean = false,
-      repsOverride: Option[Int] = None): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** One lane's suite: calibrate, warm up, `reps` timed passes, then
+    * the per-query lines and summary, printed (unless `quiet`) and
+    * written to `out`. */
+  private def runSuite(only: Option[Set[String]], out: String, quiet: Boolean,
+      reps: Int, lane: String): Unit = {
     val spark = Session(Session.cores)
     // Calibrate FIRST, on a fresh JVM/session — before any query state
     // accretes (each lane child calibrates itself; see calibrationLine).
-    val calLine = calibrationLine(spark, sys.env.getOrElse("SPARK_GRAFT_LANE", "main"))
-    // Optional comma-separated query-name filter for profiling one query
-    // at a time while iterating (driver runs never set it → lane mode).
-    val only = onlyOverride.orElse(sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet))
+    val calLine = calibrationLine(spark, lane)
     val queries = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(q => f(q._1)))
-    // The timed consumer is the noop SINK, not count(): count() lets the
-    // optimizer prune aggregate values, projection expressions, and the
-    // final sort (a pure-map query like the x24 scrub "benches" as a row
-    // count of its input). The noop write materializes every output
-    // column of every row and keeps the ORDER BY in the plan — the
-    // honest cost of actually producing the result.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // Round-6 judge finding: back-to-back suite runs carry a POSITION
-    // tax — d5 read 3.15s in-suite vs 0.51s isolated on identical
-    // code/config, because accumulated JVM/executor state (dereferenced
-    // localCheckpoint blocks, shuffle files awaiting ContextCleaner,
-    // code-cache pressure) taxes whatever query happens to run late.
-    // Round 12 added the lane fork on top: the reset+shuffle discipline
-    // bounds WITHIN-lane contamination, the lane fork removes the
-    // CROSS-FAMILY kind the reset cannot reach (heap/JIT/code cache).
-    // Countermeasures within a lane:
-    //  1. between timed queries, drop cached relations and force a GC so
-    //     the ContextCleaner reclaims dead shuffle/block state NOW, on
-    //     untimed ground, instead of amortizing into a later query;
-    //  2. each rep runs the whole suite in a different seeded-shuffled
-    //     order, so any residual position effect lands on different
-    //     queries per rep and the per-query MEDIAN sheds it.
-    // Each query line reports its suite positions per rep, so a reader
-    // can still correlate a spiked max with where in the suite it ran.
-    // One timed run after the reset; a throw times as NaN.
+    // Round 12 added the lane fork on top of the reset: the reset +
+    // shuffle discipline bounds WITHIN-lane contamination, the lane fork
+    // removes the CROSS-FAMILY kind the reset cannot reach (heap/JIT/
+    // code cache). Within a lane, each rep runs the whole suite in a
+    // different seeded-shuffled order, so any residual position effect
+    // lands on different queries per rep and the per-query MEDIAN sheds
+    // it. Each query line reports its suite positions per rep, so a
+    // reader can still correlate a spiked max with where in the suite it
+    // ran. One timed unit after the reset; a throw times as NaN.
     def resetAndTime(name: String): Double = {
-      spark.catalog.clearCache()
-      System.gc() // triggers ContextCleaner on dereferenced shuffles/blocks
-      Thread.sleep(150) // let the async cleaner drain OFF the timed clock
-      val t0 = System.nanoTime()
-      try { run(queries(name)); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => Double.NaN }
+      reset(spark)
+      try timed(spark, sfDir, queries(name)) catch { case _: Throwable => Double.NaN }
     }
     // Warmup pass: JIT/codegen compilation and parquet footer reads dominate
     // a cold first query (~6s vs ~0.3s steady state); measure steady state.
     val names = queries.keys.toSeq.sorted
     names.foreach { n =>
-      try run(queries(n)) catch { case _: Throwable => () }
+      try sink(queries(n)(spark, sfDir)) catch { case _: Throwable => () }
     }
     // `reps` timed passes over the suite (median reported per query; each
     // line carries min/max so a reader can distinguish a plan regression
@@ -297,8 +303,6 @@ object Bench {
     // spiked). A failed iteration records NaN, and any failure poisons
     // the query's reported time to -1 — a plan that regresses into an
     // exception must read as FAILED, not as its wall-clock-to-throw.
-    val reps = repsOverride.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
     val timesByQuery = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val posByQuery = scala.collection.mutable.Map.empty[String, Vector[Int]]
     for (rep <- 1 to reps) {
@@ -348,19 +352,12 @@ object Bench {
     }
     val orderedNames = results.toSeq
       .sortBy { case (_, (med, _, _)) => (med < 0, med) }.map(_._1)
-    val summary = summaryLine(results, reps, sfDir, None)
-    if (!quiet) {
-      println(calLine)
-      orderedNames.foreach(k => println(queryLine(k)))
-      println(summary)
-    }
+    val lines = calLine +: orderedNames.map(queryLine) :+
+      summaryLine(results.map { case (k, (med, _, _)) => k -> med }, reps, None)
+    if (!quiet) lines.foreach(println)
     // Full artifact: every per-query line + the summary, written where the
     // repo can commit it (driver tail truncation loses all but ~10 lines).
-    // Disable with SPARK_GRAFT_BENCH_OUT=none (e.g. one-off profiling).
-    val benchOut = benchOutOverride.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/full_latest.jsonl"))
-    if (benchOut != "none")
-      writeLines(benchOut, calLine +: orderedNames.map(queryLine) :+ summary)
+    writeLines(out, lines)
     spark.stop()
   }
 }

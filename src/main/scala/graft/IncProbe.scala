@@ -1,18 +1,19 @@
 package graft
 
-import graft.streaming.{AggView, BitmapFeed, BlockDedupFeed, Cdc, CmsFeed, KmvFeed}
+import graft.streaming.{AggView, BitmapFeed, BlockDedupFeed, Cdc, CmsFeed, DsirFeed,
+  FrontendFeed, HoltFeed, KmvFeed, LmFeed, MinHashFeed, PqIndexFeed, TrailingFeed}
 import graft.Materialize.MaterializeOps
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Incremental-operator scaling probe (`runMain graft.IncProbe
-  * [maxFactor]`) — the round-8 companion to [[ScaleProbe]]. ScaleProbe
-  * measures batch throughput vs CORPUS size; this probe measures
-  * PER-INCREMENT cost vs ACCUMULATED HISTORY — the claim that makes
-  * incremental ingestion worth having ("only the increment pays", not
-  * "every batch re-pays for the corpus"). For each factor f ∈ {1, 4,
-  * maxF}: seed f history units into the operator's store, then time
+  * [factors] [sections]`) — the round-8 companion to [[ScaleProbe]].
+  * ScaleProbe measures batch throughput vs CORPUS size; this probe
+  * measures PER-INCREMENT cost vs ACCUMULATED HISTORY — the claim that
+  * makes incremental ingestion worth having ("only the increment pays",
+  * not "every batch re-pays for the corpus"). For each factor f (a
+  * comma-separated list, parsed as ScaleProbe parses it, default
+  * 1,4,10): seed f history units into the operator's store, then time
   * applying ONE FIXED-SIZE batch. A flat curve means increment cost is
   * bounded by the batch, not the history; the bucket-pruned stores
   * (BlockDedupFeed round 8, Cdc/AggView since round 6) are what make it
@@ -32,23 +33,10 @@ import org.apache.spark.sql.functions._
   * disjoint key space and increments never collide with history. */
 object IncProbe {
 
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def time[A](body: => A): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def emit(op: String, factor: Int, sec: Double, extra: String = ""): Unit =
+  private def emit(op: String, factor: Int, sec: Double, extra: String): Unit =
     println(s"""{"probe":"inc","op":"$op","factor":$factor,"sec":${Bench.fmt(sec)}$extra}""")
 
   def main(args: Array[String]): Unit = {
-    val maxFactor = args.headOption.map(_.toInt).getOrElse(10)
     // Optional 2nd arg: comma-separated section filter
     // (bdf,cdc,aggview,pqfeed,kmv,cms,bitmap,trailing,holt,lmfeed,dsirfeed,
     // minhash,ffeed,bpe,probek) for fast re-probe of one.
@@ -58,7 +46,25 @@ object IncProbe {
     val spark = Session(Session.cores)
     import spark.implicits._
     val base = "/root/testdata/sf0.1"
-    val factors = Seq(1, 4, maxFactor).distinct
+
+    /** One history curve. For each factor f: clear the section's
+      * directory, `seed` f history units into it, run one warm batch,
+      * time one batch, emit one line. `seed(dir, f)` returns what the
+      * batches read; `batch(state, dir, f, i)` runs batch i, 0 the warm
+      * one and 1 the timed one, each with its own fresh keys; `extra`
+      * reads the state after the timed batch for the line's own keys. */
+    def curve[S](name: String, op: String)(seed: (String, Int) => S)(
+        batch: (S, String, Int, Int) => Unit)(extra: S => String): Unit =
+      section(name) { ScaleProbe.factors(args).foreach { f =>
+        val dir = s"/tmp/graft-inc-$name-$f"
+        AggView.deleteDir(spark, dir)
+        val state = seed(dir, f)
+        batch(state, dir, f, 0)
+        emit(op, f, Bench.time(batch(state, dir, f, 1)), extra(state))
+      } }
+    val none = (_: Any) => ""
+    // The warm and timed batches' tags.
+    def tag(f: Int, i: Int) = s"${"wt" (i)}$f"
 
     // ---- BlockDedupFeed: span-dedup increment vs index history --------
     // History unit = the 5k-doc corpus, token-renamed per copy (disjoint
@@ -73,22 +79,14 @@ object IncProbe {
     def freshBatch(tag: String): DataFrame =
       spark.range(20).select(col("id").as("doc_id"),
         concat_ws(" ", (0 until 100).map(i => concat(lit(s"fb${tag}w${i}x"), col("id"))): _*).as("text"))
-    section("bdf") { factors.foreach { f =>
-      val idx = s"/tmp/graft-inc-bdf-$f"
-      deleteDir(spark, idx)
+    curve("bdf", "blockdedup_apply") { (dir, f) =>
       (0 until f).foreach { k =>
-        BlockDedupFeed.applyBatch(renamed(s"h$k"), idx, numBuckets = 1024)
-          .write.format("noop").mode("overwrite").save()
+        Bench.sink(BlockDedupFeed.applyBatch(renamed(s"h$k"), dir, numBuckets = 1024))
       }
-      BlockDedupFeed.compact(spark, idx)
-      BlockDedupFeed.applyBatch(freshBatch(s"w$f"), idx)
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        BlockDedupFeed.applyBatch(freshBatch(s"t$f"), idx)
-          .write.format("noop").mode("overwrite").save()
-      }
-      emit("blockdedup_apply", f, sec)
-    } }
+      BlockDedupFeed.compact(spark, dir)
+    } { (_, dir, f, i) =>
+      Bench.sink(BlockDedupFeed.applyBatch(freshBatch(tag(f, i)), dir))
+    }(none)
 
     // ---- Cdc: MERGE increment vs snapshot history ---------------------
     // History unit = the sf0.1 orders table, key-shifted per copy.
@@ -102,23 +100,25 @@ object IncProbe {
     // FIXED 256 buckets and measured 5.1/9.9/27.4s at 1×/4×/10× — the
     // linear curve is exactly the occupancy growing with history, the
     // defect the growth rule removes.)
-    section("cdc") { factors.foreach { f =>
-      val store = s"/tmp/graft-inc-cdc-$f"
-      deleteDir(spark, store)
+    // mod 1499 over the 150k-order base ≈ 100 keys. (Rounds 8–10 used
+    // mod 149 ≈ 1,000 keys — at 64·f buckets that batch touched MOST
+    // of the store at every factor (504/640 dirs at 10×), so the row
+    // measured bulk-rewrite throughput, not the trickle regime the
+    // bucket pruning + manifest exist for, and raw walls crept with
+    // the touched-bucket saturation curve rather than history.)
+    def images(seed: Int) = Tables.orders(spark, base)
+      .filter(pmod(col("o_orderkey") + seed, lit(1499L)) === 0) // ~100 keys
+      .withColumn("o_totalprice", col("o_totalprice") + lit(1.0))
+    curve("cdc", "cdc_merge") { (dir, f) =>
       (0 until f).foreach { k =>
         val copy = ScaleProbe.scaledOrders(spark, base, k + 1)
           .filter(col("o_orderkey") >= k * 100000000L)
-        Cdc.mergeIntoStore(copy, store, Seq("o_orderkey"), "o_orderdate", numBuckets = 64 * f)
+        Cdc.mergeIntoStore(copy, dir, Seq("o_orderkey"), "o_orderdate", numBuckets = 64 * f)
       }
-      // mod 1499 over the 150k-order base ≈ 100 keys. (Rounds 8–10 used
-      // mod 149 ≈ 1,000 keys — at 64·f buckets that batch touched MOST
-      // of the store at every factor (504/640 dirs at 10×), so the row
-      // measured bulk-rewrite throughput, not the trickle regime the
-      // bucket pruning + manifest exist for, and raw walls crept with
-      // the touched-bucket saturation curve rather than history.)
-      def images(seed: Int) = Tables.orders(spark, base)
-        .filter(pmod(col("o_orderkey") + seed, lit(1499L)) === 0) // ~100 keys
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1.0))
+      f
+    } { (_, dir, _, i) =>
+      Cdc.mergeIntoStore(images(i + 1), dir, Seq("o_orderkey"), "o_orderdate")
+    } { f =>
       // The fixed 100-key batch touches min(~100, buckets·(1−e^{−100/buckets}))
       // DISTINCT buckets — ≤64 at 1× history, ~97 at 10× (key-collision
       // saturation), so the RAW wall rises ~1.5× across factors even
@@ -128,12 +128,8 @@ object IncProbe {
       val touched = images(2)
         .select(pmod(xxhash64(col("o_orderkey")), lit((64L * f))).cast("int"))
         .distinct().count()
-      Cdc.mergeIntoStore(images(1), store, Seq("o_orderkey"), "o_orderdate") // warm
-      val sec = time {
-        Cdc.mergeIntoStore(images(2), store, Seq("o_orderkey"), "o_orderdate")
-      }
-      emit("cdc_merge", f, sec, s""","touched_buckets":$touched""")
-    } }
+      s""","touched_buckets":$touched"""
+    }
 
     // ---- AggView: incremental grouped view vs base history ------------
     // History unit = 15k keyed images over a 100-group domain. Timed
@@ -143,23 +139,15 @@ object IncProbe {
       spark.range(keyLo, keyLo + n).select(col("id").as("k"),
         concat(lit("g"), pmod(col("id"), lit(100L))).as("g"),
         (col("id") % 1000L).as("v"), lit(seq).as("seq"))
-    section("aggview") { factors.foreach { f =>
-      val store = s"/tmp/graft-inc-av-$f"
-      val view = s"/tmp/graft-inc-av-view-$f"
-      deleteDir(spark, store); deleteDir(spark, view)
-      deleteDir(spark, AggView.walDir(view))
+    curve("aggview", "aggview_merge") { (dir, f) =>
       (0 until f).foreach { k =>
-        AggView.mergeWithView(imgs(k * 1000000L, 15000, k + 1), store, view,
+        AggView.mergeWithView(imgs(k * 1000000L, 15000, k + 1), s"$dir/store", s"$dir/view",
           Seq("k"), "seq", Seq("g"), Seq("v"), numBuckets = 64)
       }
-      AggView.mergeWithView(imgs(900000000L, 200, 1000L), store, view,
-        Seq("k"), "seq", Seq("g"), Seq("v")) // warm
-      val sec = time {
-        AggView.mergeWithView(imgs(910000000L, 200, 1001L), store, view,
-          Seq("k"), "seq", Seq("g"), Seq("v"))
-      }
-      emit("aggview_merge", f, sec)
-    } }
+    } { (_, dir, _, i) =>
+      AggView.mergeWithView(imgs(900000000L + i * 10000000L, 200, 1000L + i),
+        s"$dir/store", s"$dir/view", Seq("k"), "seq", Seq("g"), Seq("v"))
+    }(none)
 
     // ---- PqIndexFeed: encode increment vs code-store history ----------
     // History unit = the 2k sf0.1 embeddings, vec_id-shifted per copy.
@@ -167,143 +155,80 @@ object IncProbe {
     // by construction (frozen-codebook broadcast join over the batch);
     // the only history touch is the replay anti-join against ≤100
     // touched buckets — the flattest possible incremental shape.
-    section("pqfeed") { factors.foreach { f =>
-      val store = s"/tmp/graft-inc-pq-$f"
-      deleteDir(spark, store)
-      graft.streaming.PqIndexFeed.init(
-        ScaleProbe.scaledEmbeddings(spark, base, 1), store)
+    def vectors(seed: Long) = spark.range(100).select(
+      (col("id") + 900000000L + seed * 1000L).as("vec_id"),
+      transform(sequence(lit(1), lit(graft.ext.Ivf.Dim)),
+        i => pmod(xxhash64(col("id") * lit(seed), i), lit(1000L)).cast("float") / 500.0f - 1.0f)
+        .as("embedding"))
+    curve("pqfeed", "pqfeed_apply") { (dir, f) =>
+      PqIndexFeed.init(ScaleProbe.scaledEmbeddings(spark, base, 1), dir)
       (1 until f).foreach { k =>
-        graft.streaming.PqIndexFeed.applyBatch(
-          ScaleProbe.scaledEmbeddings(spark, base, k + 1)
-            .filter(col("vec_id") >= k * 100000000L), store)
+        PqIndexFeed.applyBatch(ScaleProbe.scaledEmbeddings(spark, base, k + 1)
+          .filter(col("vec_id") >= k * 100000000L), dir)
       }
-      def fresh(seed: Long) = spark.range(100).select(
-        (col("id") + 900000000L + seed * 1000L).as("vec_id"),
-        transform(sequence(lit(1), lit(graft.ext.Ivf.Dim)),
-          i => pmod(xxhash64(col("id") * lit(seed), i), lit(1000L)).cast("float") / 500.0f - 1.0f)
-          .as("embedding"))
-      graft.streaming.PqIndexFeed.applyBatch(fresh(1), store)
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        graft.streaming.PqIndexFeed.applyBatch(fresh(2), store)
-          .write.format("noop").mode("overwrite").save()
-      }
-      emit("pqfeed_apply", f, sec)
-    } }
+    } { (_, dir, _, i) =>
+      Bench.sink(PqIndexFeed.applyBatch(vectors(i + 1), dir))
+    }(none)
 
-    // ---- KmvFeed: sketch merge increment vs event history -------------
-    // History unit = the sf0.1 events (10k rows), user-shifted per copy
-    // (each unit contributes 150 fresh users per type). Timed batch =
-    // 2,000 fresh-user events. The claim is the degenerate best case of
-    // the incremental family: the store after ANY history is ≤ 5 keys ×
-    // 32 longs, so the batch cost CANNOT grow with history — this row
-    // demonstrates the mergeable-sketch contract the KmvFeed scaladoc
-    // states, where BlockDedupFeed/Cdc must engineer bucket pruning to
-    // approximate it.
-    section("kmv") { factors.foreach { f =>
-      val dir = s"/tmp/graft-inc-kmv-$f"
-      deleteDir(spark, dir)
-      var store: DataFrame =
-        Seq.empty[(String, Array[Long])].toDF("event_type", "mins")
-      (0 until f).foreach { k =>
-        val unit = ScaleProbe.scaledEvents(spark, base, k + 1)
-          .filter(col("user_id") >= k * 100000000L) // copy k only
-        KmvFeed.applyBatch(store, unit)
-          .write.mode("overwrite").parquet(s"$dir/sketch.parquet")
-        store = spark.read.parquet(s"$dir/sketch.parquet")
+    // ---- Folded stores: one parquet store per section ------------------
+    // The kmv, cms, bitmap, trailing and holt stores are frames folded
+    // through their feed's applyBatch, one history unit at a time, and
+    // read back from parquet after each fold.
+    def fold(dir: String, empty: DataFrame, units: Seq[DataFrame],
+        apply: (DataFrame, DataFrame) => DataFrame): DataFrame =
+      units.foldLeft(empty) { (store, unit) =>
+        apply(store, unit).write.mode("overwrite").parquet(s"$dir/store.parquet")
+        spark.read.parquet(s"$dir/store.parquet")
       }
-      // Fresh events reuse the store's REAL event_type values, so the
-      // timed applyBatch exercises the sketch-MERGE path (new users
-      // folding into existing per-type sketches) — disjoint t0..t4 types
-      // would time fresh-key sketch creation plus store pass-through
-      // instead, a weaker claim than the merge-increment one.
-      val storeTypes = Tables.events(spark, base)
-        .select(col("event_type")).distinct().as[String].collect().sorted
-      def fresh(seed: Long) = spark.range(2000).select(
-        (col("id") * 7919L + seed * 1000000L + 900000000L).as("user_id"),
+    // History unit k = the sf0.1 events (10k rows), user-shifted to copy k
+    // (each unit contributes 150 fresh users per type).
+    def eventCopy(k: Int) = ScaleProbe.scaledEvents(spark, base, k + 1)
+      .filter(col("user_id") >= k * 100000000L) // copy k only
+    // Fresh batches reuse the store's REAL event_type values, so a timed
+    // applyBatch exercises the MERGE path (new users folding into
+    // existing per-type state) — disjoint t0..t4 types would time
+    // fresh-key creation plus store pass-through instead, a weaker claim
+    // than the merge-increment one.
+    lazy val storeTypes = Tables.events(spark, base)
+      .select(col("event_type")).distinct().as[String].collect().sorted
+    def freshEvents(seed: Long, userOff: Long, lead: Column*): DataFrame =
+      spark.range(2000).select(lead ++ Seq(
+        (col("id") * 7919L + seed * 1000000L + userOff).as("user_id"),
         element_at(
           array(storeTypes.map(lit): _*),
           (pmod(col("id"), lit(storeTypes.length.toLong)) + 1).cast("int")
-        ).as("event_type"))
-      KmvFeed.applyBatch(store, fresh(1))
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        KmvFeed.applyBatch(store, fresh(2))
-          .write.format("noop").mode("overwrite").save()
-      }
-      emit("kmvfeed_apply", f, sec)
-    } }
+        ).as("event_type")): _*)
 
-    // ---- CMS feed: grid merge vs accumulated history ------------------
-    // KmvFeed's sibling: the store after ANY history is ≤ 5 types × 48
-    // cell rows (counters, not keys), so like kmv this is the degenerate
-    // best case — the timed batch exercises the vector-ADD path into
-    // cells that every history unit has already touched.
-    section("cms") { factors.foreach { f =>
-      val dir = s"/tmp/graft-inc-cms-$f"
-      deleteDir(spark, dir)
-      var store: DataFrame =
-        Seq.empty[(String, Long, Long)].toDF("event_type", "idx", "c")
-      (0 until f).foreach { k =>
-        val unit = ScaleProbe.scaledEvents(spark, base, k + 1)
-          .filter(col("user_id") >= k * 100000000L) // copy k only
-        CmsFeed.applyBatch(store, unit)
-          .write.mode("overwrite").parquet(s"$dir/grid.parquet")
-        store = spark.read.parquet(s"$dir/grid.parquet")
-      }
-      val storeTypes = Tables.events(spark, base)
-        .select(col("event_type")).distinct().as[String].collect().sorted
-      def fresh(seed: Long) = spark.range(2000).select(
-        (col("id") * 7919L + seed * 1000000L + 900000000L).as("user_id"),
-        element_at(
-          array(storeTypes.map(lit): _*),
-          (pmod(col("id"), lit(storeTypes.length.toLong)) + 1).cast("int")
-        ).as("event_type"))
-      CmsFeed.applyBatch(store, fresh(1))
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        CmsFeed.applyBatch(store, fresh(2))
-          .write.format("noop").mode("overwrite").save()
-      }
-      emit("cmsfeed_apply", f, sec)
-    } }
-
-    // ---- BitmapFeed: exact word-table merge vs accumulated history ----
-    // The EXACT end of the kmv/cms trade: the store grows with distinct
-    // users / 64 (one long per occupied word), so unlike the two sketch
-    // rows the history axis DOES grow state — the claim under test is
-    // that the per-batch cost rides the TOUCHED words (batch-sized),
-    // not the store width: the merge is one (type, word) hash agg whose
-    // store side is a column-pruned scan, no shuffle of untouched words'
-    // bit population into the batch's partitions beyond the agg itself.
-    section("bitmap") { factors.foreach { f =>
-      val dir = s"/tmp/graft-inc-bitmap-$f"
-      deleteDir(spark, dir)
-      var store: DataFrame =
-        Seq.empty[(String, Long, Long)].toDF("event_type", "word_idx", "word")
-      (0 until f).foreach { k =>
-        val unit = ScaleProbe.scaledEvents(spark, base, k + 1)
-          .filter(col("user_id") >= k * 100000000L) // copy k only
-        BitmapFeed.applyBatch(store, unit)
-          .write.mode("overwrite").parquet(s"$dir/words.parquet")
-        store = spark.read.parquet(s"$dir/words.parquet")
-      }
-      val storeTypes = Tables.events(spark, base)
-        .select(col("event_type")).distinct().as[String].collect().sorted
-      def fresh(seed: Long) = spark.range(2000).select(
-        (col("id") * 7919L + seed * 1000000L + 900000000L).as("user_id"),
-        element_at(
-          array(storeTypes.map(lit): _*),
-          (pmod(col("id"), lit(storeTypes.length.toLong)) + 1).cast("int")
-        ).as("event_type"))
-      BitmapFeed.applyBatch(store, fresh(1))
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        BitmapFeed.applyBatch(store, fresh(2))
-          .write.format("noop").mode("overwrite").save()
-      }
-      emit("bitmapfeed_apply", f, sec)
-    } }
+    // ---- KmvFeed / CMS feed / BitmapFeed: merge vs event history -------
+    // Timed batch = 2,000 fresh-user events.
+    //  - kmv: the degenerate best case of the incremental family: the
+    //    store after ANY history is ≤ 5 keys × 32 longs, so the batch cost
+    //    CANNOT grow with history — the mergeable-sketch contract the
+    //    KmvFeed scaladoc states, where BlockDedupFeed/Cdc must engineer
+    //    bucket pruning to approximate it.
+    //  - cms: the store is ≤ 5 types × 48 cell rows (counters, not keys),
+    //    so like kmv the degenerate best case — the timed batch exercises
+    //    the vector-ADD path into cells every history unit has touched.
+    //  - bitmap: the EXACT end of the kmv/cms trade: the store grows with
+    //    distinct users / 64 (one long per occupied word), so the history
+    //    axis DOES grow state — the claim under test is that the
+    //    per-batch cost rides the TOUCHED words (batch-sized), not the
+    //    store width: the merge is one (type, word) hash agg whose store
+    //    side is a column-pruned scan.
+    Seq[(String, String, DataFrame, (DataFrame, DataFrame) => DataFrame)](
+      ("kmv", "kmvfeed_apply",
+        Seq.empty[(String, Array[Long])].toDF("event_type", "mins"), KmvFeed.applyBatch),
+      ("cms", "cmsfeed_apply",
+        Seq.empty[(String, Long, Long)].toDF("event_type", "idx", "c"), CmsFeed.applyBatch),
+      ("bitmap", "bitmapfeed_apply",
+        Seq.empty[(String, Long, Long)].toDF("event_type", "word_idx", "word"), BitmapFeed.applyBatch)
+    ).foreach { case (name, op, empty, apply) =>
+      curve(name, op) { (dir, f) =>
+        fold(dir, empty, (0 until f).map(eventCopy), apply)
+      } { (store, _, _, i) =>
+        Bench.sink(apply(store, freshEvents(i + 1, 900000000L)))
+      }(none)
+    }
 
     // ---- TrailingFeed: rolling-WAU increment vs stream AGE ------------
     // History unit = the full sf0.1 event log time-shifted 8 weeks
@@ -312,42 +237,19 @@ object IncProbe {
     // holds only the trailing WindowWeeks weeks no matter how long the
     // stream has run, so a fresh batch's merge cost must be FLAT in f —
     // the property an unbounded BitmapFeed store cannot offer.
-    section("trailing") { factors.foreach { f =>
-      import graft.streaming.TrailingFeed
-      val dir = s"/tmp/graft-inc-trailing-$f"
-      deleteDir(spark, dir)
-      val epochUs = 8L * 604800L * 1000000L
-      var store = TrailingFeed.emptyStore(spark)
-      (0 until f).foreach { k =>
-        val unit = Tables.events(spark, base)
-          .withColumn("ts",
-            timestamp_micros(unix_micros(col("ts")) + lit(k * epochUs)))
-        TrailingFeed.applyBatch(store, unit)
-          .write.mode("overwrite").parquet(s"$dir/weeks.parquet")
-        store = spark.read.parquet(s"$dir/weeks.parquet")
-      }
-      val storeTypes = Tables.events(spark, base)
-        .select(col("event_type")).distinct().as[String].collect().sorted
-      val hwUs = store.agg(max(col("wk"))).as[java.sql.Date].head().getTime * 1000L
-      // fresh events land inside the retained window (high-water week),
-      // reusing the store's real event types so the merge path — not
-      // fresh-key creation — is what the timer sees
-      def fresh(seed: Long) = spark.range(2000).select(
-        timestamp_micros(lit(hwUs) + col("id") * 1000000L).as("ts"),
-        (col("id") * 7919L + seed * 1000000L).as("user_id"),
-        element_at(
-          array(storeTypes.map(lit): _*),
-          (pmod(col("id"), lit(storeTypes.length.toLong)) + 1).cast("int")
-        ).as("event_type"))
-      TrailingFeed.applyBatch(store, fresh(1))
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        TrailingFeed.applyBatch(store, fresh(2))
-          .write.format("noop").mode("overwrite").save()
-      }
-      val weeksHeld = store.select(col("wk")).distinct().count()
-      emit("trailingfeed_apply", f, sec, s""","weeks_held":$weeksHeld""")
-    } }
+    def shiftedEvents(k: Int, byUs: Long) = Tables.events(spark, base)
+      .withColumn("ts", timestamp_micros(unix_micros(col("ts")) + lit(k * byUs)))
+    curve("trailing", "trailingfeed_apply") { (dir, f) =>
+      val store = fold(dir, TrailingFeed.emptyStore(spark),
+        (0 until f).map(shiftedEvents(_, 8L * 604800L * 1000000L)), TrailingFeed.applyBatch)
+      (store, store.agg(max(col("wk"))).as[java.sql.Date].head().getTime * 1000L)
+    } { case ((store, hwUs), _, _, i) =>
+      // fresh events land inside the retained window (high-water week)
+      Bench.sink(TrailingFeed.applyBatch(store, freshEvents(i + 1, 0L,
+        timestamp_micros(lit(hwUs) + col("id") * 1000000L).as("ts"))))
+    } { case (store, _) =>
+      s""","weeks_held":${store.select(col("wk")).distinct().count()}"""
+    }
 
     // ---- HoltFeed: smoother state vs accumulated history --------------
     // The analytic best case alongside kmv/cms: ALL history collapses
@@ -355,31 +257,16 @@ object IncProbe {
     // fresh batch (the next 30 complete days, reusing the store's real
     // event types so the advance path is what the timer sees) must cost
     // the same after 10 folded months as after one.
-    section("holt") { factors.foreach { f =>
-      import graft.streaming.HoltFeed
-      val dir = s"/tmp/graft-inc-holt-$f"
-      deleteDir(spark, dir)
-      val monthUs = 31L * 86400L * 1000000L
-      def shifted(k: Int) = Tables.events(spark, base)
-        .withColumn("ts",
-          timestamp_micros(unix_micros(col("ts")) + lit(k * monthUs)))
-      var store: DataFrame =
-        Seq.empty[(String, java.sql.Date, Long, Long, Long, Long)]
-          .toDF("event_type", "last_day", "l", "b", "n_days", "n_ignored")
-      (0 until f).foreach { k =>
-        HoltFeed.applyBatch(store, shifted(k))
-          .write.mode("overwrite").parquet(s"$dir/state.parquet")
-        store = spark.read.parquet(s"$dir/state.parquet")
-      }
-      HoltFeed.applyBatch(store, shifted(f))
-        .write.format("noop").mode("overwrite").save() // warm
-      val sec = time {
-        HoltFeed.applyBatch(store, shifted(f))
-          .write.format("noop").mode("overwrite").save()
-      }
-      val daysHeld = store.agg(sum(col("n_days"))).as[Long].head()
-      emit("holtfeed_apply", f, sec, s""","days_held":$daysHeld""")
-    } }
+    val monthUs = 31L * 86400L * 1000000L
+    curve("holt", "holtfeed_apply") { (dir, f) =>
+      fold(dir, Seq.empty[(String, java.sql.Date, Long, Long, Long, Long)]
+          .toDF("event_type", "last_day", "l", "b", "n_days", "n_ignored"),
+        (0 until f).map(shiftedEvents(_, monthUs)), HoltFeed.applyBatch)
+    } { (store, _, f, _) =>
+      Bench.sink(HoltFeed.applyBatch(store, shiftedEvents(f, monthUs)))
+    } { store =>
+      s""","days_held":${store.agg(sum(col("n_days"))).as[Long].head()}"""
+    }
 
     // ---- LmFeed: LM count ingest vs accumulated count history ---------
     // History unit = the 5k-doc corpus, token-renamed per copy (disjoint
@@ -391,21 +278,15 @@ object IncProbe {
     // bucket manifest snapshot, O(touched-buckets) listings) — so the
     // curve must be flat while the store's key space grows 10×.
     // Compacted after seeding (the LSM posture, as bdf).
-    section("lmfeed") { factors.foreach { f =>
-      import graft.streaming.LmFeed
-      val dir = s"/tmp/graft-inc-lm-$f"
-      deleteDir(spark, dir)
+    curve("lmfeed", "lmfeed_ingest") { (dir, f) =>
       (0 until f).foreach { k =>
         LmFeed.ingest(spark, dir, renamed(s"h$k"), k, numBuckets = 64)
       }
       LmFeed.compact(spark, dir)
-      LmFeed.ingest(spark, dir, freshBatch(s"w$f"), f.toLong) // warm
-      val sec = time {
-        LmFeed.ingest(spark, dir, freshBatch(s"t$f"), f.toLong + 1)
-      }
-      val vocab = LmFeed.uniCounts(spark, dir).count()
-      emit("lmfeed_ingest", f, sec, s""","vocab":$vocab""")
-    } }
+      dir
+    } { (_, dir, f, i) =>
+      LmFeed.ingest(spark, dir, freshBatch(tag(f, i)), f.toLong + i)
+    } { dir => s""","vocab":${LmFeed.uniCounts(spark, dir).count()}""" }
 
     // ---- DsirFeed: importance-selection state vs corpus history -------
     // History unit = the 5k-doc corpus, token-renamed (disjoint feature
@@ -417,27 +298,19 @@ object IncProbe {
     // (The SELECTED view is corpus-sized on read by DSIR's semantics —
     // a new batch re-ranks everything — which is exactly the batch
     // operator's cost; the feed makes the STATE incremental.)
-    section("dsirfeed") { factors.foreach { f =>
-      import graft.streaming.DsirFeed
-      val dir = s"/tmp/graft-inc-dsir-$f"
-      deleteDir(spark, dir)
-      val langs = docs.select(col("doc_id"), col("lang"))
+    val langs = docs.select(col("doc_id"), col("lang"))
+    curve("dsirfeed", "dsirfeed_ingest") { (dir, f) =>
       def hist(k: Int): DataFrame = renamed(s"h$k").join(langs, "doc_id")
         .select((col("doc_id") + k.toLong * 1000000000L).as("doc_id"),
           col("text"), col("lang"))
-      (0 until f).foreach(k => DsirFeed.ingest(spark, dir, hist(k), k,
-        numBuckets = 64))
+      (0 until f).foreach(k => DsirFeed.ingest(spark, dir, hist(k), k, numBuckets = 64))
       DsirFeed.compact(spark, dir)
-      def fresh(tag: String, off: Long): DataFrame = freshBatch(tag)
-        .select((col("doc_id") + off).as("doc_id"), col("text"),
-          lit("en").as("lang"))
-      DsirFeed.ingest(spark, dir, fresh(s"w$f", 900000000000L), f.toLong) // warm
-      val sec = time {
-        DsirFeed.ingest(spark, dir, fresh(s"t$f", 910000000000L), f.toLong + 1)
-      }
-      val nb = DsirFeed.bucketCounts(spark, dir).count()
-      emit("dsirfeed_ingest", f, sec, s""","feature_buckets":$nb""")
-    } }
+      dir
+    } { (_, dir, f, i) =>
+      DsirFeed.ingest(spark, dir, freshBatch(tag(f, i))
+        .select((col("doc_id") + 900000000000L + i * 10000000000L).as("doc_id"),
+          col("text"), lit("en").as("lang")), f.toLong + i)
+    } { dir => s""","feature_buckets":${DsirFeed.bucketCounts(spark, dir).count()}""" }
 
     // ---- MinHashFeed: near-dup ingest vs band/shingle-index history ---
     // History unit = the 5k-doc corpus, token-renamed AND doc_id-shifted
@@ -449,30 +322,23 @@ object IncProbe {
     // its bands' touched buckets, and verifies only implicated docs'
     // shingle sets — so the curve follows the touched slice, not
     // history.
-    section("minhash") { factors.foreach { f =>
-      import graft.streaming.MinHashFeed
-      val dir = s"/tmp/graft-inc-mh-$f"
-      deleteDir(spark, dir)
-      def shifted(df: DataFrame, k: Int): DataFrame =
-        df.select((col("doc_id") + k.toLong * 1000000000L).as("doc_id"), col("text"))
+    def idShifted(df: DataFrame, k: Int): DataFrame =
+      df.select((col("doc_id") + k.toLong * 1000000000L).as("doc_id"), col("text"))
+    curve("minhash", "minhash_ingest") { (dir, f) =>
       (0 until f).foreach { k =>
-        MinHashFeed.ingest(spark, dir, shifted(renamed(s"h$k"), k), k,
-          numBuckets = 1024)
+        MinHashFeed.ingest(spark, dir, idShifted(renamed(s"h$k"), k), k, numBuckets = 1024)
       }
       MinHashFeed.compact(spark, dir)
-      def mixedBatch(tag: String, k: Int): DataFrame =
-        freshBatch(tag)
-          .select((col("doc_id") + k.toLong * 1000000000L + 500000000L).as("doc_id"),
-            col("text"))
-          .unionByName(shifted(renamed("h0"), k).filter(col("doc_id") % 500 === 0)
-            .select((col("doc_id") + 250000000L).as("doc_id"), col("text")))
-      MinHashFeed.ingest(spark, dir, mixedBatch(s"w$f", 40), f.toLong) // warm
-      val sec = time {
-        MinHashFeed.ingest(spark, dir, mixedBatch(s"t$f", 41), f.toLong + 1)
-      }
-      val nPairs = MinHashFeed.pairs(spark, dir).count()
-      emit("minhash_ingest", f, sec, s""","pairs_held":$nPairs""")
-    } }
+      dir
+    } { (_, dir, f, i) =>
+      val k = 40 + i
+      val mixed = freshBatch(tag(f, i))
+        .select((col("doc_id") + k.toLong * 1000000000L + 500000000L).as("doc_id"),
+          col("text"))
+        .unionByName(idShifted(renamed("h0"), k).filter(col("doc_id") % 500 === 0)
+          .select((col("doc_id") + 250000000L).as("doc_id"), col("text")))
+      MinHashFeed.ingest(spark, dir, mixed, f.toLong + i)
+    } { dir => s""","pairs_held":${MinHashFeed.pairs(spark, dir).count()}""" }
 
     // ---- FrontendFeed: composed front-end ingest vs crawl history -----
     // The deployment shape: the benchmark suite (holdout) is seeded ONCE
@@ -488,38 +354,26 @@ object IncProbe {
     // composed semantics — a new batch can move every doc's DSIR rank —
     // exactly the batch operator's own cost; the feed makes the STATE
     // incremental, the DsirFeed contract.)
-    section("ffeed") { factors.foreach { f =>
-      import graft.streaming.FrontendFeed
-      val dir = s"/tmp/graft-inc-ffeed-$f"
-      deleteDir(spark, dir)
-      val trainPred = !substring(md5(col("doc_id").cast("string")), 1, 1)
-        .isin("0", "1")
-      val meta = docs.select(col("doc_id"), col("lang"))
+    val trainPred = !substring(md5(col("doc_id").cast("string")), 1, 1).isin("0", "1")
+    curve("ffeed", "frontendfeed_ingest") { (dir, f) =>
       // batch 0: the fixed benchmark suite (the corpus' holdout slice)
       FrontendFeed.ingest(spark, dir,
         Tables.documents(spark, base).filter(!trainPred)
           .select(col("doc_id"), col("source"), col("lang"), col("text")),
         0, numBuckets = 64)
       // batches 1..f: train-only crawl units, renamed + id-shifted
-      def unit(k: Int): DataFrame = renamed(s"h$k").join(meta, "doc_id")
+      def unit(k: Int): DataFrame = renamed(s"h$k").join(langs, "doc_id")
         .filter(trainPred)
         .select((col("doc_id") + k.toLong * 1000000000L).as("doc_id"),
           lit(s"crawl$k").as("source"), col("lang"), col("text"))
-      (1 to f).foreach(k => FrontendFeed.ingest(spark, dir, unit(k), k,
-        numBuckets = 64))
+      (1 to f).foreach(k => FrontendFeed.ingest(spark, dir, unit(k), k, numBuckets = 64))
       FrontendFeed.compact(spark, dir)
-      def fresh(tag: String, off: Long): DataFrame = freshBatch(tag)
-        .select((col("doc_id") + off).as("doc_id"),
+    } { (_, dir, f, i) =>
+      FrontendFeed.ingest(spark, dir, freshBatch(tag(f, i))
+        .select((col("doc_id") + 900000000000L + i * 10000000000L).as("doc_id"),
           lit("drop").as("source"), lit("en").as("lang"), col("text"))
-        .filter(trainPred)
-      FrontendFeed.ingest(spark, dir, fresh(s"w$f", 900000000000L),
-        f.toLong + 1) // warm
-      val sec = time {
-        FrontendFeed.ingest(spark, dir, fresh(s"t$f", 910000000000L),
-          f.toLong + 2)
-      }
-      emit("frontendfeed_ingest", f, sec)
-    } }
+        .filter(trainPred), f.toLong + 1 + i)
+    }(none)
 
     // ---- BPE depth: merge rounds at fixed corpus ----------------------
     // The 10× renamed corpus (≈ 10× vocabulary) gives the pair inventory
@@ -529,9 +383,9 @@ object IncProbe {
       val corpus10 = ScaleProbe.corpus(spark, base, 10).materialized
       Seq(8, 64, 256).foreach { m =>
         val (words, tops) = graft.ext.Bpe.train(corpus10, m) // includes warm JIT from prior sizes
-        val sec = time {
+        val sec = Bench.time {
           val (w2, t2) = graft.ext.Bpe.train(corpus10, m)
-          w2.write.format("noop").mode("overwrite").save()
+          Bench.sink(w2)
           assert(t2.size == m)
         }
         assert(tops.size == m)
@@ -560,21 +414,18 @@ object IncProbe {
         val cents = graft.ext.Ivf.refinedCentroids(vq, graft.ext.Ivf.LloydIters, k, bits)
           .materialized
         def probeOnce(): Unit =
-          graft.ext.Ivf.topNCells(vq, cents, graft.ext.SemDedup.NProbe, bits)
-            .write.format("noop").mode("overwrite").save()
+          Bench.sink(graft.ext.Ivf.topNCells(vq, cents, graft.ext.SemDedup.NProbe, bits))
         probeOnce() // warm
-        val sec = time(probeOnce())
-        emit("probe_select", k, sec)
+        emit("probe_select", k, Bench.time(probeOnce()), "")
       }
       // The two-level hierarchy at the same large K — this timing
       // INCLUDES its own quantizer training (supers + per-super Lloyd),
       // which the flat numbers above exclude: the hierarchy's whole
       // point is that training + selection together are O(N·√K).
       def hierOnce(): Unit =
-        graft.ext.Ivf.hierTopNCells(vq, bigK, graft.ext.SemDedup.NProbe)
-          .write.format("noop").mode("overwrite").save()
+        Bench.sink(graft.ext.Ivf.hierTopNCells(vq, bigK, graft.ext.SemDedup.NProbe))
       hierOnce() // warm
-      emit("probe_select_hier", bigK, time(hierOnce()))
+      emit("probe_select_hier", bigK, Bench.time(hierOnce()), "")
     }
 
     spark.stop()

@@ -89,60 +89,55 @@ object ScaleProbe {
       keyCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(k * Stride)))
     }.reduce(_ unionByName _)
 
+  /** The key-shifted tables and the columns each copy shifts. */
+  private val ShiftedKeys = Seq(
+    "events" -> Seq("event_id", "user_id"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    // l_orderkey shifts by the SAME stride as o_orderkey so each copy's
+    // orders⋈lineitem multiplicity is exactly the base join's; l_partkey
+    // shifts too (round 10) so each copy's part co-occurrence graph
+    // (x59/x60) is an isomorphic DISJOINT replica — unshifted parts would
+    // instead DENSIFY one shared 20k-node graph as the factor grows,
+    // measuring graph-density growth rather than engine throughput. No
+    // probed query joins lineitem to the part table, so the shift is
+    // invisible to the rest of the board. l_suppkey shifts too (round 11,
+    // same stride as s_suppkey) so x94's per-supplier interval timelines
+    // are disjoint replicas rather than f×-densified merges of one shared
+    // supplier space — and each copy's lineitem→supplier FK stays intact.
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    // Dim tables for the FK-audit probe (round 11 — x76 previously sat
+    // out because the probe wrote no dims): every FK column and its
+    // parent PK shift by the SAME stride, so each copy's star schema is
+    // referentially intact in its own key space — x76's orphan counts
+    // stay 0 at every factor and the wall tracks the child-side scans.
+    // nation/region are 25/5-row broadcast dims; replicating them per
+    // copy keeps the joins broadcastable at any factor.
+    "customer" -> Seq("c_custkey", "c_nationkey"),
+    "supplier" -> Seq("s_suppkey", "s_nationkey"),
+    "nation" -> Seq("n_nationkey", "n_regionkey"),
+    "region" -> Seq("r_regionkey"),
+    // Parts for the FD-audit probe (x96): p_partkey shifts, attribute
+    // columns stay — each copy re-keys the same rows, so p_partkey→p_brand
+    // remains key-determined per copy and the attribute-pair violation
+    // structure replicates the base table's exactly.
+    "part" -> Seq("p_partkey"))
+
+  private def shiftedTable(spark: SparkSession, baseDir: String, table: String,
+      factor: Int): DataFrame =
+    shifted(Tables.table(spark, baseDir, table), ShiftedKeys.toMap.apply(table), factor)
+
   def scaledEvents(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.events(spark, baseDir), Seq("event_id", "user_id"), factor)
+    shiftedTable(spark, baseDir, "events", factor)
 
   def scaledOrders(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.orders(spark, baseDir), Seq("o_orderkey", "o_custkey"), factor)
+    shiftedTable(spark, baseDir, "orders", factor)
 
-  /** l_orderkey shifts by the SAME stride as o_orderkey so each copy's
-    * orders⋈lineitem multiplicity is exactly the base join's; l_partkey
-    * shifts too (round 10) so each copy's part co-occurrence graph
-    * (x59/x60) is an isomorphic DISJOINT replica — unshifted parts would
-    * instead DENSIFY one shared 20k-node graph as the factor grows,
-    * measuring graph-density growth rather than engine throughput. No
-    * probed query joins lineitem to the part table, so the shift is
-    * invisible to the rest of the board. l_suppkey shifts too (round 11,
-    * same stride as s_suppkey) so x94's per-supplier interval timelines
-    * are disjoint replicas rather than f×-densified merges of one shared
-    * supplier space — and each copy's lineitem→supplier FK stays intact. */
-  def scaledLineitem(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.lineitem(spark, baseDir),
-      Seq("l_orderkey", "l_partkey", "l_suppkey"), factor)
-
-  /** Dim tables for the FK-audit probe (round 11 — x76 previously sat
-    * out because the probe wrote no dims): every FK column and its
-    * parent PK shift by the SAME stride, so each copy's star schema is
-    * referentially intact in its own key space — x76's orphan counts
-    * stay 0 at every factor and the wall tracks the child-side scans.
-    * nation/region are 25/5-row broadcast dims; replicating them per
-    * copy keeps the joins broadcastable at any factor. */
-  def scaledCustomer(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.customer(spark, baseDir), Seq("c_custkey", "c_nationkey"), factor)
-
-  def scaledSupplier(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.supplier(spark, baseDir), Seq("s_suppkey", "s_nationkey"), factor)
-
-  def scaledNation(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.nation(spark, baseDir), Seq("n_nationkey", "n_regionkey"), factor)
-
-  def scaledRegion(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.region(spark, baseDir), Seq("r_regionkey"), factor)
-
-  /** Parts for the FD-audit probe (x96): p_partkey shifts, attribute
-    * columns stay — each copy re-keys the same rows, so p_partkey→p_brand
-    * remains key-determined per copy and the attribute-pair violation
-    * structure replicates the base table's exactly. */
-  def scaledPart(spark: SparkSession, baseDir: String, factor: Int): DataFrame =
-    shifted(Tables.part(spark, baseDir), Seq("p_partkey"), factor)
+  /** The factors to probe, from the first argument: a comma-separated
+    * list ("1,4,10,20"; "1" is 1× alone), default 1,4,10. */
+  private[graft] def factors(args: Array[String]): Seq[Int] =
+    args.headOption.map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 4, 10)).distinct
 
   def main(args: Array[String]): Unit = {
-    // 1st arg: the comma-separated factors to probe ("1,4,10,20"; "1"
-    // is 1× alone)
-    val factors = args.headOption
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(1, 4, 10))
-      .distinct
     // Optional 2nd arg: comma-separated query filter (fast re-probe of a
     // new entry without re-timing the whole surface; the driver-facing
     // SCALING.md is still regenerated from full runs).
@@ -873,55 +868,22 @@ object ScaleProbe {
         graft.ext.Bloom.pipeline(d, m)
       }))
     val base = "/root/testdata/sf0.1"
-    factors.foreach { f =>
+    factors(args).foreach { f =>
       val dir = s"/tmp/graft-scale-$f"
-      corpus(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-      scaledEmbeddings(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/embeddings.parquet")
-      scaledEvents(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/events.parquet")
-      scaledOrders(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/orders.parquet")
-      scaledLineitem(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/lineitem.parquet")
-      scaledCustomer(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/customer.parquet")
-      scaledSupplier(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/supplier.parquet")
-      scaledNation(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/nation.parquet")
-      scaledRegion(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/region.parquet")
-      scaledPart(spark, base, f).write.mode("overwrite")
-        .parquet(s"$dir/part.parquet")
+      (Seq("documents" -> corpus(spark, base, f),
+          "embeddings" -> scaledEmbeddings(spark, base, f)) ++
+        ShiftedKeys.map { case (t, _) => t -> shiftedTable(spark, base, t, f) })
+        .foreach { case (t, df) => df.write.mode("overwrite").parquet(s"$dir/$t.parquet") }
       (queries ++ probeOnly.keys.toSeq.sorted)
         .filter(q => only.forall(_.contains(q))).foreach { q =>
         val fn = probeOnly.getOrElse(q, SparkEntry.queries(q))
-        // Result-backing localCheckpoint blocks (the one generation a
-        // checkpointing query legitimately returns) outlive each
-        // invocation until the ContextCleaner notices; at big factors
-        // 4 invocations/measurement × N queries of accumulated blocks
-        // evict/spill INTO the timed run — and OOM'ed the first 20×
-        // graph session outright. Sweep them between invocations so
-        // every timed run starts from an empty block manager and pays
-        // exactly its own materializations, nothing inherited.
-        def sweep(): Unit = {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          spark.catalog.clearCache()
-          System.gc()
-        }
-        def run(): Long = {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          fn(spark, dir).count()
-        }
-        run() // warm
-        sweep()
-        val t0 = System.nanoTime()
-        val rows = run()
-        val sec = (System.nanoTime() - t0) / 1e9
-        sweep()
+        // The timed unit is Bench's (construction plus one noop write),
+        // between Bench's resets; the row count runs outside the timer.
+        Bench.sink(fn(spark, dir)) // warm
+        Bench.reset(spark)
+        val sec = Bench.timed(spark, dir, fn)
+        val rows = fn(spark, dir).count()
+        Bench.reset(spark)
         println(s"""{"probe":"scale","factor":$f,"query":"$q","sec":${Bench.fmt(sec)},"rows":$rows}""")
       }
     }

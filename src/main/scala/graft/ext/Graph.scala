@@ -758,7 +758,14 @@ object Graph {
     * rounds applied — including the final no-op round that PROVES the
     * fixpoint). */
   def kcoreFixpoint(s: SparkSession, dir: String, k: Int = CoreK,
-      maxRounds: Int = 1000): (DataFrame, Int) = {
+      maxRounds: Int = 1000): (DataFrame, Int) =
+    kcorePeel(s, dir, k, maxRounds)((_, core) => core)
+
+  /** [[kcoreFixpoint]]'s peel, handing `finish` the materialized edge
+    * table and the materialized core before the edge table is released,
+    * so a caller reads the core's induced edges without rebuilding it. */
+  private def kcorePeel[A](s: SparkSession, dir: String, k: Int, maxRounds: Int)(
+      finish: (DataFrame, DataFrame) => A): (A, Int) = {
     // The peel is MONOTONE (k_r ⊆ alive_{r-1} — a node outside the
     // alive set has no induced edges and can never re-enter), so an
     // unchanged alive COUNT proves an unchanged alive SET proves the
@@ -772,7 +779,7 @@ object Graph {
     }
     // materialize the final alive set so callers hold (and can release)
     // a self-contained N-row block, then drop the loop's generations
-    val out = survivors(deg, k).materialized
+    val out = finish(e, survivors(deg, k).materialized)
     Materialize.release(deg, e)
     (out, rounds)
   }
@@ -912,7 +919,8 @@ object Graph {
     * Scale shape: x73's node-centric rounds (checkpointed edge table,
     * lazily induced through the alive set; one degree shuffle per
     * round) for as many rounds as the fixpoint needs, plus one final
-    * restriction pass for the edge count — output is ONE row. */
+    * restriction pass of the still-materialized edge table for the edge
+    * count — output is ONE row. */
   val kcoreConverged = Q.withOracle(
     "x73b_kcore_converged",
     s"x73b: $CoreK-core peeled to the fixpoint (cap $KcoreMaxRounds) with rounds certificate",
@@ -936,10 +944,11 @@ object Graph {
          |  rc.rounds AS rounds_to_fixpoint
          |FROM rc""".stripMargin
     }) { (s, dir) =>
-    val (core, rounds) = kcoreFixpoint(s, dir, CoreK, KcoreMaxRounds)
-    val nNodes = core.count()
-    val nEdges = induced(coEdges(s, dir), Some(core)).count()
-    Materialize.release(core)
+    val ((nNodes, nEdges), rounds) = kcorePeel(s, dir, CoreK, KcoreMaxRounds) { (e, core) =>
+      val counts = (core.count(), induced(e, Some(core)).count())
+      Materialize.release(core)
+      counts
+    }
     s.createDataFrame(Seq((CoreK.toLong, nNodes, nEdges, rounds.toLong)))
       .toDF("core_k", "n_core_nodes", "n_core_edges", "rounds_to_fixpoint")
   }

@@ -258,7 +258,8 @@ object AggView {
       name: String, v: Long): Unit =
     MetaFile.write(spark, new Path(dir, name), v.toString)
 
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
+  /** Delete `dir` and everything under it, if it exists. */
+  private[graft] def deleteDir(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }

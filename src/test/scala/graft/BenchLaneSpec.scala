@@ -46,4 +46,46 @@ class BenchLaneSpec extends AnyFunSuite {
     try assert(Bench.fmt(1.5) === "1.500")
     finally java.util.Locale.setDefault(saved)
   }
+
+  // The lane-file merge is pure: these lines are shaped as a lane child
+  // writes them, and no SparkSession runs.
+  private def qLine(name: String, v: Double): String =
+    s"""{"metric":"query","name":"$name","value":${Bench.fmt(v)},"min":${Bench.fmt(v)},"max":${Bench.fmt(v)},"reps":3,"pos":[0,1,2],"unit":"sec"}"""
+  private def calLine(lane: String): String =
+    s"""{"metric":"calibration","lane":"$lane","md5_1core_sec":1.000,"md5_par_sec":2.000,"shuffle_20m_sec":3.000,"unit":"sec"}"""
+  private val laneSummary = """{"metric":"total","value":3.000,"unit":"sec","n":2}"""
+  private val tag = """{"graph":{"n":2,"reps":3},"main":{"n":2,"reps":3}}"""
+
+  test("lane merge: a lane file cut short mid-suite leaves the rest of its lane missing") {
+    val graph = Seq(calLine("graph"), qLine("a", 2.0), qLine("b", 1.0), laneSummary)
+    val main = Seq(calLine("main"), qLine("c", 3.0)) // killed before d and its summary
+    assert(Bench.missing(Seq("a", "b", "c", "d"), Seq(graph, main)) === Set("d"))
+    val rerun = Seq(calLine("recovered"), qLine("d", 0.5), laneSummary)
+    val out = Bench.merge(Seq(graph, main, rerun), 3, tag)
+    assert(out.take(3) === Seq(calLine("graph"), calLine("main"), calLine("recovered")))
+    assert(out.slice(3, 7) === Seq(qLine("d", 0.5), qLine("b", 1.0), qLine("a", 2.0), qLine("c", 3.0)))
+    assert(out.size === 8)
+    val summary = out.last
+    assert(summary.startsWith("""{"metric":"total","value":6.500,"unit":"sec","n":4,"failures":0,"failed":[]"""))
+    assert(summary.endsWith(s""","lanes":$tag}"""))
+  }
+
+  test("lane merge: an absent lane file (a dead child) counts its whole lane as missing") {
+    val graph = Seq(calLine("graph"), qLine("a", 2.0), qLine("b", 1.0), laneSummary)
+    assert(Bench.missing(Seq("a", "b", "c", "d"), Seq(graph, Seq.empty)) === Set("c", "d"))
+    val out = Bench.merge(Seq(graph, Seq.empty), 3, tag)
+    assert(out === Seq(calLine("graph"), qLine("b", 1.0), qLine("a", 2.0), out.last))
+    assert(out.last.contains(""""n":2,"failures":0"""))
+  }
+
+  test("lane merge: a -1 failed query is counted in failures and named in failed") {
+    val graph = Seq(calLine("graph"), qLine("a", -1.0), qLine("b", 1.0), laneSummary)
+    val main = Seq(calLine("main"), qLine("c", 3.0), qLine("d", -1.0), laneSummary)
+    assert(Bench.missing(Seq("a", "b", "c", "d"), Seq(graph, main)).isEmpty)
+    val out = Bench.merge(Seq(graph, main), 3, tag)
+    // failures sort after every timing, and stay out of the total
+    assert(out.slice(2, 6) === Seq(qLine("b", 1.0), qLine("c", 3.0), qLine("a", -1.0), qLine("d", -1.0)))
+    assert(out.last.startsWith(
+      """{"metric":"total","value":4.000,"unit":"sec","n":4,"failures":2,"failed":["a","d"]"""))
+  }
 }
